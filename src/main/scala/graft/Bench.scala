@@ -295,7 +295,7 @@ object Bench {
     val layout = "z10 32x32 bs256 minZoom5 recsPerFile48"
     val marker = Paths.get(RasterDir, "_META_OK")
     if (Files.exists(marker) && Files.readString(marker).trim == layout) return
-    graft.raquet.RaquetIO.deleteRecursively(Paths.get(RasterDir))
+    graft.raquet.RaquetIO.deleteTree(RasterDir)
     val (df, meta) = FixtureGen.dataset(spark, z = 10, x0 = 512, y0 = 512,
       nx = 32, ny = 32, bs = 256, minZoom = 5)
     // multi-file layout (raquet.md:160-175), ~48 tiles/file: the synthetic
@@ -1045,20 +1045,8 @@ object Bench {
     // (both enter here).
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // decoded-bytes raster defaults (openCostInBytes / AQE
-    // minPartitionSize): one library-level definition, see
-    // [[SessionDefaults]] for the full rationale and measurements.
-    val spark = SessionDefaults.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the library's standard integration path — brings the
-      // QuadbinRangeRewrite pushdown rule into every bench plan
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SessionDefaults.cpus.toString
+    val spark = SessionDefaults.session("graft-bench")
     spinMs(); spinMs() // JIT-warm the calibration loop before any window
     val envAtStart = cpuEnvJson()
     val jvmsAtStart = contendingJvms()
@@ -1278,11 +1266,8 @@ object Bench {
     // cores, so an 8-thread record vs a 32-thread record differs 3-4x on
     // bL_* with NO regression — self-describing records stop that
     // misreading (the round-8/9 phantom-regression lesson)
-    // cpus may be non-numeric (local[*] is legal): keep the JSON valid
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else jstr(cpus)
     def record(extra: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"bl_fresh_jvm":$blFresh,"env_start":$envAtStart,"env_end":${cpuEnvJson()},"queries":$qs$errField$contField$perQField$probeField$extra,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"bl_fresh_jvm":$blFresh,"env_start":$envAtStart,"env_end":${cpuEnvJson()},"queries":$qs$errField$contField$perQField$probeField$extra,"sf":"$sfDir"}"""
     // COMPACT record for the final stdout line: the driver captures only a
     // 2,000-char stdout tail, and r11's probe-rich record grew to 4,874
     // chars — the tail started mid-probe and the "queries" section was cut
@@ -1321,7 +1306,7 @@ object Bench {
       }
       val dirtyC = if (dirty.isEmpty) ""
         else dirty.mkString(""","dirty_windows":{""", ",", "}")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpusJson,"bl_fresh_jvm":$blFresh$errC$contC$dirtyC,"queries":$qsC,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"bl_fresh_jvm":$blFresh$errC$contC$dirtyC,"queries":$qsC,"sf":"$sfDir"}"""
     }
     // per-sf mirror: totals are only comparable within one scale factor, so
     // each sf keeps its own baseline file (BENCH_LOCAL.json stays as the
@@ -1362,7 +1347,7 @@ object Bench {
           s"""{"error":${jstr(s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300))}}"""
         }
       Files.writeString(Paths.get("BENCH_LADDER.json"),
-        s"""{"cpus":$cpusJson,"sf":"$sfDir","scale_ladder":$ladderJson}""" + "\n")
+        s"""{"cpus":$cpus,"sf":"$sfDir","scale_ladder":$ladderJson}""" + "\n")
       spark.stop()
       // full merged record to the files and an earlier stdout line, then
       // the compact line LAST for the tail-parser

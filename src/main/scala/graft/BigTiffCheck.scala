@@ -4,8 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.raquet.{GeoTiff, PixelCodec, RaquetIO}
 
 /** Scale check for the de-drivered S6 ingest: streams a >2 GB uncompressed
@@ -20,8 +18,7 @@ import graft.raquet.{GeoTiff, PixelCodec, RaquetIO}
   * driver (~17 GB here) and broadcast them — guaranteed OOM at 2 GB. The
   * windowed ingest holds only per-run decode windows (≤ 64 MB each), so
   * this completes. A pixel probe verifies the warped output against the
-  * synthetic closed form. Not part of the driver contract; diagnostic main
-  * like PlanAudit.
+  * synthetic closed form. Not part of the driver contract.
   */
 object BigTiffCheck {
 
@@ -111,12 +108,7 @@ object BigTiffCheck {
     println(f"wrote ${Files.size(Paths.get(tif)) / 1e9}%.2f GB; heap max " +
       f"${Runtime.getRuntime.maxMemory / 1e9}%.2f GB")
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("graft-bigtiff-check")
     try {
       val out = s"$dir/big.parquet"
       val t0 = System.nanoTime()

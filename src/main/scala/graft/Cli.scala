@@ -72,17 +72,8 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println(Usage); sys.exit(2) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(s"graft-${args(0)}")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER: deployment override of the local[cpus] master
+    val spark = SessionDefaults.session(s"graft-${args(0)}", sys.env.get("SPARK_MASTER"))
     try run(spark, args.toSeq)
     catch {
       case e: CliError => System.err.println(s"error: ${e.getMessage}"); sys.exit(2)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.raquet.{GeoTiff, Hdf4, Hdf4Writer, PixelCodec, RaquetIO}
 
 /** Scale check for the HDF4/HDF-EOS ingest: writes a 16384×16384 int16
@@ -17,8 +15,7 @@ import graft.raquet.{GeoTiff, Hdf4, Hdf4Writer, PixelCodec, RaquetIO}
   * 256-px tile window intersects (≤ 4 × 2 MB decoded per window), and the
   * fixture writer itself encodes chunk-at-a-time (never the cube). A pixel
   * probe verifies warped output against the synthetic closed form — the
-  * BigTiffCheck pattern. Not part of the driver contract; diagnostic main
-  * like PlanAudit. */
+  * BigTiffCheck pattern. Not part of the driver contract. */
 object Hdf4Check {
 
   private def v(i: Int, j: Int): Int = (i * 3 + j * 7) % 4001
@@ -41,12 +38,7 @@ object Hdf4Check {
       f"(${2L * n * n / 1e9}%.2f GB of samples); heap max " +
       f"${Runtime.getRuntime.maxMemory / 1e9}%.2f GB")
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("graft-hdf4-check")
     try {
       val out = s"$dir/big.parquet"
       val t0 = System.nanoTime()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` output for named bench queries to
   * plans/<tag>/<name>_<suffix>.txt — the optimization round's plan
   * evidence (before/after files the judge checks claims against).
@@ -20,15 +18,7 @@ object PlanDump {
     val tag = args(0); val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionDefaults.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session("graft-plandump")
     Bench.ensureRaster(spark)
     val withLarge = names.exists(_.startsWith("bL_")) || names.contains("all")
     if (withLarge) Bench.ensureLargeRaster(spark)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiling harness: run one bench query with a
   * stage-metrics listener so time attributes to operators (guide §1.1
@@ -19,15 +18,7 @@ object Profile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionDefaults.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session("graft-profile")
     Bench.ensureRaster(spark)
     val all = Bench.rasterQueries ++ Bench.dataQueries ++
       (if (name.startsWith("bL_")) { Bench.ensureLargeRaster(spark); Bench.largeQueries }

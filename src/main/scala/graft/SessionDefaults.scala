@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library-level session defaults for gzip-blob raster workloads — ONE
-  * definition used by every graft entrypoint (Bench, Profile, PlanDump,
-  * PlanAudit) and documented in the README for users who embed the
-  * engine in their own session.
+import graft.functions.GraftExtensions
+
+/** Library-level session defaults for gzip-blob raster workloads, and the
+  * one session factory every graft entrypoint (Verify, Bench, Profile,
+  * PlanDump, Sql, Cli, the check mains, the fixture writers) and the spec
+  * suite build their session with — so correctness is gated under the
+  * config that is benchmarked and documented in the README.
   *
-  * Why these exist (guide §6 input-split sizing, measured in r13):
-  * gzip raster blobs understate the work a scan task does by their
+  * Why the raster defaults exist (guide §6 input-split sizing, measured in
+  * r13): gzip raster blobs understate the work a scan task does by their
   * decode fan-out (8× on the float32 19 GB bench set, ~100× on the
   * synthetic uint8 tiles), so every BYTE-based Spark sizing decision
   * misreads them:
@@ -27,12 +30,10 @@ import org.apache.spark.sql.SparkSession
   *     table loops into per-task overhead).
   *
   * Both size work per TASK, not tasks per core, so they are valid at
-  * any core count / cluster size; `SPARK_GRAFT_OPEN_COST_MB` overrides
-  * the open cost for corpora with a different decode fan-out. */
+  * any core count / cluster size. */
 object SessionDefaults {
 
-  def openCostInBytes: String =
-    sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_MB", "64") + "m"
+  val openCostInBytes: String = "64m"
 
   val minPartitionSize: String = "256k"
 
@@ -41,4 +42,27 @@ object SessionDefaults {
     .config("spark.sql.files.openCostInBytes", openCostInBytes)
     .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       minPartitionSize)
+
+  /** Core count of a local session: `SPARK_GRAFT_CPUS`, else every core. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The graft session: `master` (default `local[cpus]`), one shuffle
+    * partition per core, UTC, UI off, the [[GraftExtensions]] (SQL
+    * functions, pushdown rule, raquet metadata-row exclusion), the
+    * [[tuned]] raster defaults and WARN logging. `withExtensions` rather
+    * than the static `spark.sql.extensions` conf, so the extensions also
+    * reach a session built on an already-running context. */
+  def session(appName: String, master: Option[String] = None): SparkSession = {
+    val s = tuned(SparkSession.builder()
+      .master(master.getOrElse(s"local[$cpus]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions()))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -1,28 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.functions.GraftFunctions
-
 /** Minimal SQL entry point: runs each argument as a SQL statement against a
   * local session with all graft functions registered and the testdata tables
-  * (from GRAFT_SF_DIR, default sf0.001) available as temp views.
+  * (from SPARK_GRAFT_SF_DIR, default sf0.001) available as temp views.
   *
   * {{{ sbt 'runMain graft.Sql "SELECT quadbin_from_lonlat(-3.7, 40.4, 10)"' }}}
   */
 object Sql {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sql")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val spark = SessionDefaults.session("graft-sql")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       try Tables.load(spark, sfDir, t).createOrReplaceTempView(t)

@@ -2,11 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+
+import graft.raquet.{BandKernel, BandPairKernel, RaquetMetadata}
 
 /** Session-extension injection point: makes the whole graft function family
   * available in any session configured with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — the standard
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (or
+  * `builder.withExtensions(new GraftExtensions())`, which is what
+  * [[graft.SessionDefaults.session]] does) — the standard
   * library-integration path (no per-session register() call needed).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -28,14 +32,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   import org.apache.spark.sql.graft._
 
+  // raster functions bind their kernel from foldable (metadata JSON, band)
+  // string args — parsed once at resolution, never per row
   private def litStr(e: Expression, what: String): String = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(s, _) if s != null => s.toString
-    case other => throw new IllegalArgumentException(s"$what must be a literal: $other")
+    case Literal(s, _) if s != null => s.toString
+    case other => throw new IllegalArgumentException(
+      s"$what must be a literal, got $other")
   }
-  private def kernelOf(m: Expression, b: Expression) =
-    graft.raquet.BandKernel(
-      graft.raquet.RaquetMetadata.parse(litStr(m, "metadata")), litStr(b, "band"))
+  private def litInt(e: Expression, what: String): Int = litStr(e, what).toInt
+  private def litDouble(e: Expression, what: String): Double =
+    litStr(e, what).toDouble
+  // numeric lists as CSV string literals ("64,128,192") — foldable,
+  // parsed once at resolution like the metadata JSON
+  private def litDoubles(e: Expression, what: String): Array[Double] =
+    litStr(e, what).split(",").map(_.trim.toDouble)
+  private def kernelOf(m: Expression, b: Expression): BandKernel =
+    BandKernel(RaquetMetadata.parse(litStr(m, "metadata")), litStr(b, "band name"))
+  private def pairOf(m: Expression, a: Expression, b: Expression) =
+    BandPairKernel(kernelOf(m, a), kernelOf(m, b))
 
+  /** The SQL function table: every name `spark.sql` can call, and the only
+    * list of them — injected by [[GraftExtensions]] and registered by
+    * [[GraftFunctions.register]]. */
   val injected: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "quadbin_from_tile" -> { case Seq(x, y, z) => QuadbinFromTile(x, y, z) },
     "quadbin_zoom" -> { case Seq(c) => QuadbinZoom(c) },
@@ -51,12 +69,39 @@ object GraftExtensions {
       RqRasterValue(b, blk, lon, lat, kernelOf(m, n)) },
     "rq_clip_stats" -> { case Seq(b, blk, m, n, w) =>
       RqClipStats(b, blk, kernelOf(m, n), litStr(w, "wkt")) },
+    "rq_normalized_difference" -> { case Seq(a, b, m, na, nb) =>
+      RqNormalizedDifference(a, b, pairOf(m, na, nb)) },
+    "rq_clip" -> { case Seq(b, blk, m, n, w) =>
+      RqClip(b, blk, kernelOf(m, n), litStr(w, "wkt")) },
+    "rq_normalized_difference_stats" -> { case Seq(a, b, m, na, nb) =>
+      RqNdStats(a, b, pairOf(m, na, nb)) },
     "rq_stats_merge" -> { case Seq(s) => RqStatsMerge(s) },
     "rq_inflate" -> { case Seq(b) => RqInflate(b) },
+    "rq_reclassify" -> { case Seq(b, m, n, br, cl) =>
+      RqReclassify(b, kernelOf(m, n),
+        litDoubles(br, "breaks"), litDoubles(cl, "classes")) },
+    "rq_composite" -> { case Seq(a, b, m, n) => RqComposite(a, b, kernelOf(m, n)) },
+    "rq_contour" -> { case Seq(b, m, n, lv) =>
+      RqContour(b, kernelOf(m, n), litDouble(lv, "level")) },
+    "rq_histogram" -> { case Seq(b, m, n, lo, hi, k) =>
+      RqHistogram(b, kernelOf(m, n), litDouble(lo, "min"),
+        litDouble(hi, "max"), litInt(k, "buckets")) },
+    "rq_rasterize" -> { case Seq(blk, zs, m, n) => RqRasterize(blk, zs, kernelOf(m, n)) },
+    "rq_band_math" -> { case Seq(a, b, m, na, nb, op) =>
+      RqBandMath(a, b, pairOf(m, na, nb), litStr(op, "op")) },
+    "rq_band_math_stats" -> { case Seq(a, b, m, na, nb, op) =>
+      RqBandMathStats(a, b, pairOf(m, na, nb), litStr(op, "op")) },
+    "rq_clip_histogram" -> { case Seq(b, blk, w, m, n, lo, hi, k) =>
+      RqClipHistDyn(b, blk, w, kernelOf(m, n), litDouble(lo, "min"),
+        litDouble(hi, "max"), litInt(k, "buckets")) },
+    "rq_temporal_composite" -> { case Seq(b, m, n, op) =>
+      RqTemporalComposite(b, kernelOf(m, n), litStr(op, "op"))
+        .toAggregateExpression() },
     "st_quadbin_intersects" -> { case Seq(c, w) =>
       QuadbinIntersects(c, litStr(w, "wkt")) },
     "st_polyfill" -> { case Seq(w, z, m) =>
       RqPolyfill(litStr(w, "wkt"), z, litStr(m, "mode")) },
+    "st_contains" -> { case Seq(w, x, y) => StContains(w, x, y) },
     "cf_to_timestamp" -> { case Seq(v, u, c) =>
       CfToTimestamp(v, litStr(u, "units"), litStr(c, "calendar")) },
     "mm_image_stats" -> { case Seq(b) => MmImageStats(b) },
@@ -73,10 +118,19 @@ object GraftExtensions {
     "st_as_wkb" -> { case Seq(w) => StAsWkb(w) },
     "st_geom_from_geojson" -> { case Seq(s) => StGeomFromGeojson(s) },
     "st_as_geojson" -> { case Seq(w) => StAsGeojson(w) },
-    "st_simplify" -> { case Seq(w, t) => StSimplify(w, litStr(t, "tolerance").toDouble) },
+    "st_simplify" -> { case Seq(w, t) => StSimplify(w, litDouble(t, "tolerance")) },
     "st_npoints" -> { case Seq(w) => StNPoints(w) },
+    "topk_sketch" -> { case Seq(i, cap, k) =>
+      TopKSketch(i, litInt(cap, "capacity"), litInt(k, "k")).toAggregateExpression() },
+    "rq_bpe_tokens" -> { case Seq(t, spec) => BpeTokens(t, litStr(spec, "merges")) },
+    "rq_wordpiece_tokens" -> { case Seq(t, spec) =>
+      WordPieceTokens(t, litStr(spec, "vocab")) },
     "mm_u8_sum" -> { case Seq(b) => MmU8Sum(b) },
     "mm_u8_pack" -> { case Seq(a) => MmU8Pack(a) },
+    "mm_exif_orientation" -> { case Seq(b) => MmExifOrientation(b) },
+    "mm_orient" -> { case Seq(b, o, w, h, c) =>
+      MmOrient(b, o, litInt(w, "width"), litInt(h, "height"),
+        litInt(c, "channels")) },
     "mm_webp_anim" -> { case Seq(f, w, h, c, d) =>
       MmWebpAnimEncode(f, litInt(w, "width"), litInt(h, "height"),
         litInt(c, "channels"), litInt(d, "duration_ms")) },
@@ -103,7 +157,4 @@ object GraftExtensions {
       BloomAgg(h, litInt(bits, "numBits"), litInt(k, "numHashes"))
         .toAggregateExpression() },
     "bloom_might_contain" -> { case Seq(f, h) => BloomMightContain(f, h) })
-
-  private def litInt(e: Expression, what: String): Int =
-    litStr(e, what).toInt
 }

@@ -1,17 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft._
 
 import graft.raquet.{BandKernel, BandPairKernel, RaquetMetadata}
 
-/** Scala Column API + SQL registration for the graft function family.
+/** Scala Column API for the graft function family; the SQL names come
+  * from the one table in [[GraftExtensions]].
   *
   * Usage:
   * {{{
-  *   GraftFunctions.register(spark)          // once per session, for spark.sql
-  *   df.select(GraftFunctions.quadbin_zoom($"block"))   // DSL, no registration needed
+  *   val spark = graft.SessionDefaults.session("app") // SQL functions injected
+  *   spark.sql("SELECT quadbin_zoom(block) FROM t")
+  *   df.select(GraftFunctions.quadbin_zoom($"block")) // DSL, any session
+  *   GraftFunctions.register(spark) // SQL names on a session built elsewhere
   * }}}
   */
 object GraftFunctions {
@@ -367,141 +370,11 @@ object GraftFunctions {
       channel: Int): Column =
     col(MmWavFingerprint(ex(bin), frameLen, hop, channel))
 
-  /** Register all functions for use from `spark.sql`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def r(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    r("quadbin_from_tile") { case Seq(x, y, z) => QuadbinFromTile(x, y, z) }
-    r("quadbin_zoom") { case Seq(c) => QuadbinZoom(c) }
-    r("quadbin_tile_x") { case Seq(c) => QuadbinTileX(c) }
-    r("quadbin_tile_y") { case Seq(c) => QuadbinTileY(c) }
-    r("quadbin_ancestor") { case Seq(c, p) => QuadbinAncestor(c, p) }
-    r("quadbin_from_lonlat") { case Seq(lon, lat, z) => QuadbinFromLonLat(lon, lat, z) }
-    r("quadbin_bounds") { case Seq(c) => QuadbinBounds(c) }
-    r("quadbin_is_valid") { case Seq(c) => QuadbinIsValid(c) }
-    // raster functions bind their kernel from foldable (metadata JSON, band)
-    // string args — parsed once at resolution, never per row
-    def litStr(e: Expression, what: String): String = e match {
-      case Literal(s, _) if s != null => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$what must be a string literal, got $other")
+  /** Register all functions for use from `spark.sql`. Idempotent. Only
+    * needed on a session built without [[GraftExtensions]]. */
+  def register(spark: SparkSession): Unit =
+    GraftExtensions.injected.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    def kernelOf(metaJson: Expression, band: Expression): BandKernel =
-      BandKernel(RaquetMetadata.parse(litStr(metaJson, "metadata")),
-        litStr(band, "band name"))
-    r("rq_decode") { case Seq(b, m, n) => RqDecode(b, kernelOf(m, n)) }
-    r("rq_summary_stats") { case Seq(b, m, n) => RqSummaryStats(b, kernelOf(m, n)) }
-    r("rq_raster_value") { case Seq(b, blk, lon, lat, m, n) =>
-      RqRasterValue(b, blk, lon, lat, kernelOf(m, n)) }
-    r("rq_clip_stats") { case Seq(b, blk, m, n, w) =>
-      RqClipStats(b, blk, kernelOf(m, n), litStr(w, "wkt")) }
-    r("rq_normalized_difference") { case Seq(a, b, m, na, nb) =>
-      RqNormalizedDifference(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb))) }
-    r("rq_clip") { case Seq(b, blk, m, n, w) =>
-      RqClip(b, blk, kernelOf(m, n), litStr(w, "wkt")) }
-    r("rq_normalized_difference_stats") { case Seq(a, b, m, na, nb) =>
-      RqNdStats(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb))) }
-    r("st_quadbin_intersects") { case Seq(c, w) =>
-      QuadbinIntersects(c, litStr(w, "wkt")) }
-    r("st_polyfill") { case Seq(w, z, m) =>
-      RqPolyfill(litStr(w, "wkt"), z, litStr(m, "mode")) }
-    r("rq_stats_merge") { case Seq(s) => RqStatsMerge(s) }
-    r("cf_to_timestamp") { case Seq(v, u, c) =>
-      CfToTimestamp(v, litStr(u, "units"), litStr(c, "calendar")) }
-    r("rq_inflate") { case Seq(b) => RqInflate(b) }
-    r("mm_image_stats") { case Seq(b) => MmImageStats(b) }
-    def litInt(e: Expression, what: String): Int = e match {
-      case Literal(v, _) if v != null => v.toString.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    r("mm_webp_encode") { case Seq(b, w, h, c) =>
-      MmWebpEncode(b, litInt(w, "width"), litInt(h, "height"), litInt(c, "channels")) }
-    r("mm_webp_pixels") { case Seq(b, c) =>
-      MmWebpPixels(b, litInt(c, "channels")) }
-    r("mm_webp_lossy") { case Seq(b, w, h, c, q) =>
-      MmWebpLossy(b, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels"), litInt(q, "quality")) }
-    r("st_area") { case Seq(w) => StArea(w) }
-    r("st_perimeter") { case Seq(w) => StPerimeter(w) }
-    r("st_centroid") { case Seq(w) => StCentroid(w) }
-    r("st_geom_from_wkb") { case Seq(b) => StGeomFromWkb(b) }
-    r("st_as_wkb") { case Seq(w) => StAsWkb(w) }
-    r("st_geom_from_geojson") { case Seq(s) => StGeomFromGeojson(s) }
-    r("st_as_geojson") { case Seq(w) => StAsGeojson(w) }
-    r("st_simplify") { case Seq(w, t) => StSimplify(w, litDouble(t, "tolerance")) }
-    r("st_npoints") { case Seq(w) => StNPoints(w) }
-    r("topk_sketch") { case Seq(i, cap, k) =>
-      TopKSketch(i, litInt(cap, "capacity"), litInt(k, "k")).toAggregateExpression() }
-    r("bloom_agg") { case Seq(h, bits, k) =>
-      BloomAgg(h, litInt(bits, "numBits"), litInt(k, "numHashes"))
-        .toAggregateExpression() }
-    r("bloom_might_contain") { case Seq(f, h) => BloomMightContain(f, h) }
-    r("rq_bpe_tokens") { case Seq(t, spec) => BpeTokens(t, litStr(spec, "merges")) }
-    r("rq_wordpiece_tokens") { case Seq(t, spec) =>
-      WordPieceTokens(t, litStr(spec, "vocab")) }
-    r("rq_temporal_composite") { case Seq(b, m, n, op) =>
-      RqTemporalComposite(b, kernelOf(m, n), litStr(op, "op"))
-        .toAggregateExpression() }
-    r("mm_u8_sum") { case Seq(b) => MmU8Sum(b) }
-    r("mm_u8_pack") { case Seq(a) => MmU8Pack(a) }
-    r("mm_exif_orientation") { case Seq(b) => MmExifOrientation(b) }
-    r("mm_orient") { case Seq(b, o, w, h, c) =>
-      MmOrient(b, o, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels")) }
-    r("mm_webp_anim") { case Seq(f, w, h, c, d) =>
-      MmWebpAnimEncode(f, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels"), litInt(d, "duration_ms")) }
-    r("mm_webp_anim_info") { case Seq(b) => MmWebpAnimInfo(b) }
-    r("mm_webp_frame") { case Seq(b, i, c) =>
-      MmWebpFramePixels(b, i, litInt(c, "channels")) }
-    r("mm_wav_encode") { case Seq(s, rate, ch, bits) =>
-      MmWavEncode(s, litInt(rate, "sample_rate"), litInt(ch, "channels"),
-        litInt(bits, "bits")) }
-    r("mm_wav_info") { case Seq(b) => MmWavInfo(b) }
-    r("mm_wav_stats") { case Seq(b, ch) => MmWavStats(b, litInt(ch, "channel")) }
-    r("mm_wav_resample") { case Seq(b, rate) =>
-      MmWavResample(b, litInt(rate, "target_rate")) }
-    r("mm_wav_frames") { case Seq(b, fl, hop, ch) =>
-      MmWavFrames(b, litInt(fl, "frame_len"), litInt(hop, "hop"),
-        litInt(ch, "channel")) }
-    r("mm_wav_trim") { case Seq(b, t) => MmWavTrim(b, litInt(t, "threshold")) }
-    r("mm_wav_fingerprint") { case Seq(b, fl, hop, ch) =>
-      MmWavFingerprint(b, litInt(fl, "frame_len"), litInt(hop, "hop"),
-        litInt(ch, "channel")) }
-    r("mm_dhash") { case Seq(b, w, h) =>
-      MmDhash(b, litInt(w, "width"), litInt(h, "height")) }
-    def litDouble(e: Expression, what: String): Double = e match {
-      case Literal(v, _) if v != null => v.toString.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be a numeric literal, got $other")
-    }
-    // numeric lists as CSV string literals ("64,128,192") — foldable,
-    // parsed once at resolution like the metadata JSON
-    def litDoubles(e: Expression, what: String): Array[Double] =
-      litStr(e, what).split(",").map(_.trim.toDouble)
-    r("rq_reclassify") { case Seq(b, m, n, br, cl) =>
-      RqReclassify(b, kernelOf(m, n),
-        litDoubles(br, "breaks"), litDoubles(cl, "classes")) }
-    r("rq_composite") { case Seq(a, b, m, n) =>
-      RqComposite(a, b, kernelOf(m, n)) }
-    r("rq_contour") { case Seq(b, m, n, lv) =>
-      RqContour(b, kernelOf(m, n), litDouble(lv, "level")) }
-    r("rq_histogram") { case Seq(b, m, n, lo, hi, k) =>
-      RqHistogram(b, kernelOf(m, n), litDouble(lo, "min"),
-        litDouble(hi, "max"), litInt(k, "buckets")) }
-    r("rq_rasterize") { case Seq(blk, zs, m, n) =>
-      RqRasterize(blk, zs, kernelOf(m, n)) }
-    r("st_contains") { case Seq(w, x, y) => StContains(w, x, y) }
-    r("rq_band_math") { case Seq(a, b, m, na, nb, op) =>
-      RqBandMath(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb)),
-        litStr(op, "op")) }
-    r("rq_band_math_stats") { case Seq(a, b, m, na, nb, op) =>
-      RqBandMathStats(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb)),
-        litStr(op, "op")) }
-    r("rq_clip_histogram") { case Seq(b, blk, w, m, n, lo, hi, k) =>
-      RqClipHistDyn(b, blk, w, kernelOf(m, n), litDouble(lo, "min"),
-        litDouble(hi, "max"), litInt(k, "buckets")) }
-  }
 }

@@ -1337,7 +1337,7 @@ object RaquetQueries {
     * of a theta join. Probe rows are unioned with the timestep rows and one
     * per-block window carries the latest timestep at-or-before each row
     * forward, so the only shuffle is the hash partition on block — no
-    * BroadcastNestedLoopJoin anywhere (PlanAudit-checked). Rows crossing the
+    * BroadcastNestedLoopJoin anywhere (checked in its PlanDump plan). Rows crossing the
     * shuffle = timesteps + probes, which is the shape that survives 100×;
     * q39's theta join is the small-probe-set interactive path. Ordering
     * (t asc, is_probe asc) puts a timestep before a probe at equal t, which

@@ -341,12 +341,7 @@ object FixtureGen {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "src/test/resources/raquet"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionDefaults.session("graft-fixturegen")
     writeGradient16(spark, s"$dir/gradient16.parquet")
     writeGradient16Bip(spark, s"$dir/gradient16_bip.parquet")
     writeGradient16Time(spark, s"$dir/gradient16_time.parquet")

@@ -1441,6 +1441,6 @@ object Hdf4 {
         (dir, m)
       }
       BandStack.stack(spark, parts, outFile, rowGroupBytes)
-    } finally RaquetIO.deleteRecursively(java.nio.file.Paths.get(work))
+    } finally RaquetIO.deleteTree(work)
   }
 }

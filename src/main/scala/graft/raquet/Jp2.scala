@@ -296,7 +296,7 @@ object Jp2 {
         (dir, m)
       }
       BandStack.stack(spark, parts, outFile)
-    } finally RaquetIO.deleteRecursively(java.nio.file.Paths.get(work))
+    } finally RaquetIO.deleteTree(work)
   }
 
   // ---------------------------------------------------------------- write

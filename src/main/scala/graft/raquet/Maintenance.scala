@@ -225,7 +225,7 @@ object Maintenance {
         k += 1
       }
     }
-    RaquetIO.deleteRecursivelyPublic(java.nio.file.Paths.get(tmp))
+    RaquetIO.deleteTree(tmp)
     RaquetIO.writeMetadataFile(spark, schema, meta, dir, s"metadata-$stamp")
     before.foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     CompactReport(before.length, k + 1, rows)
@@ -310,7 +310,7 @@ object Maintenance {
         k += 1
       }
     }
-    RaquetIO.deleteRecursivelyPublic(java.nio.file.Paths.get(tmp))
+    RaquetIO.deleteTree(tmp)
     def local(uri: String): java.nio.file.Path =
       java.nio.file.Paths.get(java.net.URI.create(
         if (uri.startsWith("file:")) uri else "file://" + uri).getPath)

@@ -32,24 +32,8 @@ object ParquetFooter {
   /** Stamp one parquet file in place: add `raquet:version` (idempotent) and
     * declare `sortCols` (ascending, nulls-last) on every row group. Sort
     * columns missing from the schema are skipped. */
-  def stamp(file: Path, sortCols: Seq[String] = Seq("block")): Unit = {
-    val raf = new RandomAccessFile(file.toFile, "rw")
-    try {
-      val len = raf.length()
-      require(len > 12, s"$file: too short for a parquet file ($len bytes)")
-      val tail = new Array[Byte](8)
-      raf.seek(len - 8)
-      raf.readFully(tail)
-      require(tail.slice(4, 8).sameElements(Magic), s"$file: missing PAR1 magic")
-      val footerLen = (tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
-        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)
-      val footerStart = len - 8 - footerLen
-      require(footerStart >= 4, s"$file: footer length $footerLen out of range")
-      val fb = new Array[Byte](footerLen)
-      raf.seek(footerStart)
-      raf.readFully(fb)
-      val md = Util.readFileMetaData(new ByteArrayInputStream(fb))
-
+  def stamp(file: Path, sortCols: Seq[String] = Seq("block")): Unit =
+    rewrite(file) { md =>
       val hasKey = md.getKey_value_metadata != null &&
         md.getKey_value_metadata.asScala.exists(_.getKey == VersionKey)
       if (!hasKey) {
@@ -57,34 +41,14 @@ object ParquetFooter {
         kv.setValue(Version)
         md.addToKey_value_metadata(kv)
       }
-
-      // leaf order in a flat raquet schema = field order minus the root
-      val leafNames = md.getSchema.asScala.drop(1)
-        .filter(e => !e.isSetNum_children || e.getNum_children == 0)
-        .map(_.getName)
+      val leaves = leafNames(md)
       val scs = sortCols.flatMap { c =>
-        val i = leafNames.indexOf(c)
+        val i = leaves.indexOf(c)
         if (i < 0) None else Some(new SortingColumn(i, false, false))
       }
       if (scs.nonEmpty)
         md.getRow_groups.asScala.foreach(_.setSorting_columns(scs.asJava))
-
-      val bos = new ByteArrayOutputStream(footerLen + 256)
-      Util.writeFileMetaData(md, bos)
-      val nb = bos.toByteArray
-      raf.seek(footerStart)
-      raf.write(nb)
-      raf.write(Array[Byte](
-        (nb.length & 0xFF).toByte, ((nb.length >> 8) & 0xFF).toByte,
-        ((nb.length >> 16) & 0xFF).toByte, ((nb.length >> 24) & 0xFF).toByte))
-      raf.write(Magic)
-      raf.setLength(footerStart + nb.length + 8)
-    } finally raf.close()
-    // the rewrite invalidates Hadoop's local-FS checksum sidecar; without
-    // it reads skip verification, with a stale one they throw
-    Files.deleteIfExists(
-      file.resolveSibling("." + file.getFileName.toString + ".crc"))
-  }
+    }
 
   /** Stamp every `.parquet` under `dir` (or `dir` itself if it is a file). */
   def stampAll(dir: String, sortCols: Seq[String] = Seq("block")): Unit = {
@@ -98,47 +62,16 @@ object ParquetFooter {
   }
 
   /** Read one footer key-value entry (e.g. GeoParquet's `geo` JSON). */
-  def keyValue(file: Path, key: String): Option[String] = {
-    val raf = new RandomAccessFile(file.toFile, "r")
-    try {
-      val len = raf.length()
-      require(len > 12, s"$file: too short for a parquet file ($len bytes)")
-      val tail = new Array[Byte](8)
-      raf.seek(len - 8)
-      raf.readFully(tail)
-      require(tail.slice(4, 8).sameElements(Magic), s"$file: missing PAR1 magic")
-      val footerLen = (tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
-        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)
-      val footerStart = len - 8 - footerLen
-      require(footerStart >= 4, s"$file: footer length $footerLen out of range")
-      val fb = new Array[Byte](footerLen)
-      raf.seek(footerStart)
-      raf.readFully(fb)
-      val md = Util.readFileMetaData(new ByteArrayInputStream(fb))
+  def keyValue(file: Path, key: String): Option[String] =
+    withFooter(file, "r") { (_, md, _) =>
       Option(md.getKey_value_metadata).toSeq.flatMap(_.asScala)
         .find(_.getKey == key).flatMap(kv => Option(kv.getValue))
-    } finally raf.close()
-  }
+    }
 
   /** Add (or replace) one footer key-value entry in place — the same
     * O(footer) rewrite as [[stamp]]; used by the GeoParquet sink. */
-  def stampKeyValue(file: Path, key: String, value: String): Unit = {
-    val raf = new RandomAccessFile(file.toFile, "rw")
-    try {
-      val len = raf.length()
-      require(len > 12, s"$file: too short for a parquet file ($len bytes)")
-      val tail = new Array[Byte](8)
-      raf.seek(len - 8)
-      raf.readFully(tail)
-      require(tail.slice(4, 8).sameElements(Magic), s"$file: missing PAR1 magic")
-      val footerLen = (tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
-        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)
-      val footerStart = len - 8 - footerLen
-      require(footerStart >= 4, s"$file: footer length $footerLen out of range")
-      val fb = new Array[Byte](footerLen)
-      raf.seek(footerStart)
-      raf.readFully(fb)
-      val md = Util.readFileMetaData(new ByteArrayInputStream(fb))
+  def stampKeyValue(file: Path, key: String, value: String): Unit =
+    rewrite(file) { md =>
       Option(md.getKey_value_metadata).foreach { kvs =>
         val it = kvs.iterator()
         while (it.hasNext) if (it.next().getKey == key) it.remove()
@@ -146,7 +79,63 @@ object ParquetFooter {
       val kv = new KeyValue(key)
       kv.setValue(value)
       md.addToKey_value_metadata(kv)
-      val bos = new ByteArrayOutputStream(footerLen + value.length + 256)
+    }
+
+  /** Read back the footer contract of one file: (raquet:version value or
+    * null, number of row groups, number of row groups declaring an
+    * ascending sort on `sortCol` first). */
+  def inspect(file: Path, sortCol: String = "block"): (Option[String], Int, Int) =
+    withFooter(file, "r") { (_, md, _) =>
+      val version = Option(md.getKey_value_metadata)
+        .flatMap(_.asScala.find(_.getKey == VersionKey)).map(_.getValue)
+      val want = leafNames(md).indexOf(sortCol)
+      val rgs = md.getRow_groups.asScala
+      val sorted = rgs.count { rg =>
+        rg.isSetSorting_columns && rg.getSorting_columns.asScala.headOption.exists(
+          sc => sc.getColumn_idx == want && !sc.isDescending && !sc.isNulls_first)
+      }
+      (version, rgs.size, sorted)
+    }
+
+  // leaf order in a flat raquet schema = field order minus the root
+  private def leafNames(md: FileMetaData): Seq[String] =
+    md.getSchema.asScala.drop(1).toSeq
+      .filter(e => !e.isSetNum_children || e.getNum_children == 0)
+      .map(_.getName)
+
+  /** Open `file` in `mode`, parse its thrift footer and hand `f` the open
+    * file, the footer and the footer's start offset. The length field is
+    * read unsigned and checked against the file before it sizes the read,
+    * so a file with a lying length fails by name instead of allocating up
+    * to 2 GiB or seeking before the start. */
+  private def withFooter[A](file: Path, mode: String)(
+      f: (RandomAccessFile, FileMetaData, Long) => A): A = {
+    val raf = new RandomAccessFile(file.toFile, mode)
+    try {
+      val len = raf.length()
+      require(len > 12, s"$file: too short for a parquet file ($len bytes)")
+      val tail = new Array[Byte](8)
+      raf.seek(len - 8)
+      raf.readFully(tail)
+      require(tail.slice(4, 8).sameElements(Magic), s"$file: missing PAR1 magic")
+      val footerLen = ((tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
+        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)) & 0xFFFFFFFFL
+      val footerStart = len - 8 - footerLen
+      require(footerStart >= 4 && footerLen <= Int.MaxValue,
+        s"$file: footer length $footerLen out of range")
+      val fb = new Array[Byte](footerLen.toInt)
+      raf.seek(footerStart)
+      raf.readFully(fb)
+      f(raf, Util.readFileMetaData(new ByteArrayInputStream(fb)), footerStart)
+    } finally raf.close()
+  }
+
+  /** Apply `edit` to the footer of `file` and write the new footer over the
+    * old one in place. */
+  private def rewrite(file: Path)(edit: FileMetaData => Unit): Unit = {
+    withFooter(file, "rw") { (raf, md, footerStart) =>
+      edit(md)
+      val bos = new ByteArrayOutputStream()
       Util.writeFileMetaData(md, bos)
       val nb = bos.toByteArray
       raf.seek(footerStart)
@@ -156,40 +145,10 @@ object ParquetFooter {
         ((nb.length >> 16) & 0xFF).toByte, ((nb.length >> 24) & 0xFF).toByte))
       raf.write(Magic)
       raf.setLength(footerStart + nb.length + 8)
-    } finally raf.close()
+    }
+    // the rewrite invalidates Hadoop's local-FS checksum sidecar; without
+    // it reads skip verification, with a stale one they throw
     Files.deleteIfExists(
       file.resolveSibling("." + file.getFileName.toString + ".crc"))
-  }
-
-  /** Read back the footer contract of one file: (raquet:version value or
-    * null, number of row groups, number of row groups declaring an
-    * ascending sort on `sortCol` first). */
-  def inspect(file: Path, sortCol: String = "block"): (Option[String], Int, Int) = {
-    val raf = new RandomAccessFile(file.toFile, "r")
-    try {
-      val len = raf.length()
-      val tail = new Array[Byte](8)
-      raf.seek(len - 8)
-      raf.readFully(tail)
-      require(tail.slice(4, 8).sameElements(Magic), s"$file: missing PAR1 magic")
-      val footerLen = (tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
-        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)
-      val fb = new Array[Byte](footerLen)
-      raf.seek(len - 8 - footerLen)
-      raf.readFully(fb)
-      val md = Util.readFileMetaData(new ByteArrayInputStream(fb))
-      val version = Option(md.getKey_value_metadata)
-        .flatMap(_.asScala.find(_.getKey == VersionKey)).map(_.getValue)
-      val leafNames = md.getSchema.asScala.drop(1)
-        .filter(e => !e.isSetNum_children || e.getNum_children == 0)
-        .map(_.getName)
-      val want = leafNames.indexOf(sortCol)
-      val rgs = md.getRow_groups.asScala
-      val sorted = rgs.count { rg =>
-        rg.isSetSorting_columns && rg.getSorting_columns.asScala.headOption.exists(
-          sc => sc.getColumn_idx == want && !sc.isDescending && !sc.isNulls_first)
-      }
-      (version, rgs.size, sorted)
-    } finally raf.close()
   }
 }

@@ -317,7 +317,7 @@ object RaquetIO {
     if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
     if (rowGroupBytes > 0) w = w.option("parquet.block.size", rowGroupBytes)
     w.parquet(dir)
-    metadataDf(data, meta).write.mode("append").parquet(dir)
+    metadataDf(data.sparkSession, data.schema, meta).write.mode("append").parquet(dir)
     // spec footer contract (raquet.md:685-695): raquet:version KV +
     // SortingColumn per row group — Spark's writer exposes neither, so the
     // footers are stamped in place (O(footer) per file)
@@ -334,7 +334,8 @@ object RaquetIO {
     val sorted = data.repartition(1).sortWithinPartitions(sortNames.map(col): _*)
     // union preserves partition order; coalesce(1) concatenates them in
     // order, so the metadata row lands after the sorted data rows
-    val withMeta = sorted.unionByName(metadataDf(data, meta)).coalesce(1)
+    val withMeta = sorted
+      .unionByName(metadataDf(data.sparkSession, data.schema, meta)).coalesce(1)
     val tmp = file + ".tmpdir"
     var w = withMeta.write.mode("overwrite").option("compression", pageCodec(meta))
     if (rowGroupBytes > 0) w = w.option("parquet.block.size", rowGroupBytes)
@@ -343,43 +344,15 @@ object RaquetIO {
       .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
     Files.createDirectories(Paths.get(file).toAbsolutePath.getParent)
     Files.move(part, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(Paths.get(tmp))
+    deleteTree(tmp)
     ParquetFooter.stamp(Paths.get(file), sortNames)
   }
 
-  private def metadataDf(data: DataFrame, meta: RaquetMetadata): DataFrame = {
-    val spark = data.sparkSession
-    val json = RaquetMetadata.toJson(meta)
-    val values = data.schema.fields.map { f =>
-      f.name match {
-        case "block" => 0L
-        case "metadata" => json
-        case _ => null
-      }
-    }
-    spark.createDataFrame(
-      java.util.Arrays.asList(Row(values.toIndexedSeq: _*)), data.schema)
-  }
-
-  private[graft] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRecursively(_))
-    Files.deleteIfExists(p)
-  }
-
-  private[raquet] def deleteRecursivelyPublic(p: Path): Unit = deleteRecursively(p)
-
-  /** Best-effort recursive delete of a local path (temp trees). */
-  def deleteTree(path: String): Unit = {
-    val p = Paths.get(path)
-    if (Files.exists(p)) deleteRecursively(p)
-  }
-
-  /** Write a standalone one-row metadata file into `dir` (the upsert
-    * refresh path): same schema as the data rows, block = 0. */
-  private[raquet] def writeMetadataFile(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, meta: RaquetMetadata,
-      dir: String, name: String): Unit = {
+  /** The one-row `block = 0` metadata row in `schema`: every column but
+    * `block` and `metadata` is null. */
+  private def metadataDf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      meta: RaquetMetadata): DataFrame = {
     val json = RaquetMetadata.toJson(meta)
     val values = schema.fields.map { f =>
       f.name match {
@@ -388,15 +361,35 @@ object RaquetIO {
         case _ => null
       }
     }
-    val df = spark.createDataFrame(
+    spark.createDataFrame(
       java.util.Arrays.asList(Row(values.toIndexedSeq: _*)), schema)
+  }
+
+  /** Recursive delete of a local path (temp trees); a missing path is a
+    * no-op. */
+  def deleteTree(path: String): Unit = {
+    def rm(p: Path): Unit = {
+      if (Files.isDirectory(p)) {
+        val children = Files.list(p)
+        try children.forEach(rm(_)) finally children.close()
+      }
+      Files.deleteIfExists(p)
+    }
+    rm(Paths.get(path))
+  }
+
+  /** Write a standalone one-row metadata file into `dir` (the upsert
+    * refresh path): same schema as the data rows, block = 0. */
+  private[raquet] def writeMetadataFile(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, meta: RaquetMetadata,
+      dir: String, name: String): Unit = {
     val tmp = s"$dir/.meta-tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    metadataDf(spark, schema, meta).coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = Files.list(Paths.get(tmp))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
     Files.move(part, Paths.get(dir, s"$name.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(Paths.get(tmp))
+    deleteTree(tmp)
   }
 }

@@ -106,10 +106,7 @@ object GenJpegTiffFixture {
 
     // golden: independent whole-stream decode (splice + ImageIO), assembled
     // into (gx, gy, band, v) rows
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").appName("gen-jpeg-golden")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.SessionDefaults.session("gen-jpeg-golden")
     try {
       val rows = new scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Int)]()
       for (tr <- 0 until down; tc <- 0 until across) {

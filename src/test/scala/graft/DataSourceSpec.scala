@@ -16,16 +16,7 @@ class DataSourceSpec extends AnyFunSuite {
     SparkSpec.session // ensure the context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // spark.sql.extensions is a STATIC conf (read at context creation);
-      // on the shared test context the programmatic form is the equivalent
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    SessionDefaults.session("graft-datasource-test")
   }
 
   test("format(raquet) resolves via DataSourceRegister and excludes the metadata row") {

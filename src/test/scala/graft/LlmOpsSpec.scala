@@ -119,7 +119,36 @@ class LlmOpsSpec extends SparkSpec {
   test("GraftExtensions injects the function family without error") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.functions.GraftExtensions().apply(ext)
-    assert(graft.functions.GraftExtensions.injected.size >= 18)
+    val names = graft.functions.GraftExtensions.injected.map(_._1)
+    assert(names.size >= 63 && names.distinct.size == names.size)
+    // a fresh session carrying only the extensions (no register() call)
+    // resolves every SQL name, and the SQL forms equal the Column DSL
+    val s = spark.newSession()
+    names.foreach(n => assert(s.catalog.functionExists(n), s"$n not injected"))
+    import graft.functions.GraftFunctions._
+    val ds = graft.raquet.RaquetIO.read(s, "src/test/resources/raquet/gradient16.parquet")
+    ds.data.createOrReplaceTempView("rq_ext_only")
+    val mj = graft.raquet.RaquetMetadata.toJson(ds.meta)
+    val wkt = graft.operators.RaquetQueries.FastRegionWkt
+    val viaSql = s.sql(
+      s"""SELECT block,
+            rq_clip(band_2, block, '$mj', 'band_2', '$wkt') AS c,
+            rq_band_math(band_2, band_1, '$mj', 'band_2', 'band_1', 'sub') AS m,
+            rq_normalized_difference(band_2, band_1, '$mj', 'band_2', 'band_1') AS d
+          FROM rq_ext_only""")
+    val viaDsl = ds.data.select(col("block"),
+      rq_clip(col("band_2"), col("block"), ds.meta, "band_2", wkt).as("c"),
+      rq_band_math(col("band_2"), col("band_1"), ds.meta, "band_2", "band_1", "sub").as("m"),
+      rq_normalized_difference(col("band_2"), col("band_1"), ds.meta,
+        "band_2", "band_1").as("d"))
+    // string form: NaN pixels compare equal, byte arrays compare by content
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }.toString).sorted.toSeq
+    val got = rows(viaSql)
+    assert(got.size == 85 && got == rows(viaDsl))
   }
 
   test("cosine is padding-invariant: extra components beyond dim affect neither numerator nor denominator") {

@@ -53,4 +53,23 @@ class ParquetFooterSpec extends SparkSpec {
     }
     assert(n >= 3) // split data files + metadata file
   }
+
+  test("a lying footer length fails by name before it sizes a read") {
+    val src = java.nio.file.Files.readAllBytes(Paths.get(fixture))
+    // one length past the file's start, one with the top bit set (negative
+    // as a signed int)
+    Seq(src.length.toLong + 100L, 0xFFFFFFF0L).foreach { lie =>
+      val f = java.nio.file.Files.createTempFile("footer", ".parquet")
+      val bytes = src.clone()
+      val at = bytes.length - 8
+      (0 until 4).foreach(i => bytes(at + i) = ((lie >> (8 * i)) & 0xFF).toByte)
+      java.nio.file.Files.write(f, bytes)
+      val calls: Seq[() => Any] = Seq(() => ParquetFooter.inspect(f),
+        () => ParquetFooter.keyValue(f, "geo"), () => ParquetFooter.stamp(f))
+      calls.foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"footer length $lie out of range"), e.getMessage)
+      }
+    }
+  }
 }

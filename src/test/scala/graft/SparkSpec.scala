@@ -11,18 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the library's standard session config — format("raquet") fails fast
-      // without it (metadata-row exclusion lives in an analyzer rule)
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the library's standard session config — format("raquet") fails fast
+  // without it (metadata-row exclusion lives in an analyzer rule)
+  lazy val session: SparkSession = SessionDefaults.session("graft-test")
 }
