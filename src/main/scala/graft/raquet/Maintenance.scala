@@ -90,18 +90,8 @@ object Maintenance {
     }
     // spec footer contract (raquet.md:685-695): every file carries the
     // raquet:version KV and declares the Morton sort per row group
-    val fp = java.nio.file.Paths.get(path)
-    val files =
-      if (java.nio.file.Files.isRegularFile(fp)) Seq(fp)
-      else {
-        val it = java.nio.file.Files.list(fp).iterator()
-        val b = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getFileName.toString.endsWith(".parquet")) b += f
-        }
-        b.toSeq
-      }
+    val files = RaquetIO.dataFiles(spark.sessionState.newHadoopConf(), path)
+      .map(f => java.nio.file.Paths.get(f.getPath.toUri))
     val stamps = files.map(f => ParquetFooter.inspect(f))
     check("footer_version",
       stamps.nonEmpty && stamps.forall(_._1.contains(ParquetFooter.Version)),
@@ -153,21 +143,12 @@ object Maintenance {
     val counts = native.groupBy("part").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // per-partition metadata rows (driver-built: one per partition)
-    val schema = native.schema
     val metaRows = counts.toSeq.map { case (part, cnt) =>
-      val json = RaquetMetadata.toJson(
-        ds.meta.copy(minZoom = ds.meta.maxZoom, numBlocks = cnt))
-      Row.fromSeq(schema.fields.map { f =>
-        f.name match {
-          case "block" => 0L
-          case "metadata" => json
-          case "part" => part
-          case _ => null
-        }
-      }.toIndexedSeq)
+      RaquetIO.metadataRow(native.schema,
+        ds.meta.copy(minZoom = ds.meta.maxZoom, numBlocks = cnt), "part" -> part)
     }
     val metaDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(metaRows, 1), schema)
+      spark.sparkContext.parallelize(metaRows, 1), native.schema)
     // sort leads with the partition column: FileFormatWriter requires rows
     // ordered by partition cols and would otherwise insert its own
     // (non-stable) sort on `part` alone, destroying the Morton order
@@ -176,14 +157,9 @@ object Maintenance {
       .sortWithinPartitions("part", "block")
       .write.mode("overwrite").option("compression", RaquetIO.pageCodec(ds.meta))
       .partitionBy("part").parquet(outDir)
-    val subdirs = java.nio.file.Files.list(java.nio.file.Paths.get(outDir))
-      .iterator()
-    while (subdirs.hasNext) {
-      val d = subdirs.next()
-      if (java.nio.file.Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith("part="))
-        ParquetFooter.stampAll(d.toString)
-    }
+    new java.io.File(outDir).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("part="))
+      .foreach(d => ParquetFooter.stampAll(d.toString))
   }
 
   final case class UpsertReport(filesTotal: Int, filesRewritten: Int,
@@ -200,10 +176,9 @@ object Maintenance {
     * superset, never a hole. */
   def compact(spark: SparkSession, dir: String,
       maxRecordsPerFile: Long = 0): CompactReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
+    val RaquetIO.RaquetDataset(data, meta) = RaquetIO.read(spark, dir)
     val before = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet"))
-    val data = spark.read.parquet(dir).filter(col("block") =!= 0L)
     val schema = data.schema
     val rows = data.count()
     val tmp = dir + "/.compact-tmp"
@@ -214,18 +189,7 @@ object Maintenance {
     if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
     w.parquet(tmp)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    var k = 0
-    val it = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        val dst = java.nio.file.Paths.get(dir, s"part-compact-$stamp-$k.parquet")
-        java.nio.file.Files.move(p, dst)
-        ParquetFooter.stamp(dst)
-        k += 1
-      }
-    }
-    RaquetIO.deleteTree(tmp)
+    val k = adoptParts(tmp, dir, s"part-compact-$stamp")
     RaquetIO.writeMetadataFile(spark, schema, meta, dir, s"metadata-$stamp")
     before.foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     CompactReport(before.length, k + 1, rows)
@@ -245,8 +209,7 @@ object Maintenance {
     * null-filled to the dataset schema, matching what the writer emits for
     * data rows. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame): UpsertReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
-    val all = spark.read.parquet(dir)
+    val (all, meta) = RaquetIO.open(spark, dir)
     val schema = all.schema
     val keyCols =
       if (schema.fieldNames.contains("time_cf")) Seq("block", "time_cf")
@@ -265,16 +228,11 @@ object Maintenance {
       .groupBy(input_file_name().as("f"))
       .agg(min("block").as("lo"), max("block").as("hi"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val metaFiles = all.filter(col("block") === 0L)
-      .select(input_file_name().as("f")).distinct().collect().map(_.getString(0))
+    val metaFiles = RaquetIO.metadataFiles(spark, dir)
 
     // touched files: updated keys joined against the (bounded) range table
-    val rangeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(ranges.toIndexedSeq.map(t => Row(t._1, t._2, t._3)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lo", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("hi", org.apache.spark.sql.types.LongType))))
+    import spark.implicits._
+    val rangeDf = ranges.toSeq.toDF("f", "lo", "hi")
     val touched = up.select(col("block")).distinct()
       .join(broadcast(rangeDf), col("block") >= col("lo") && col("block") <= col("hi"))
       .select("f").distinct().collect().map(_.getString(0)).toSet
@@ -299,18 +257,7 @@ object Maintenance {
     merged.orderBy(keyCols.map(col): _*).write.mode("overwrite")
       .option("compression", RaquetIO.pageCodec(meta)).parquet(tmp)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val moved = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).iterator()
-    var k = 0
-    while (moved.hasNext) {
-      val p = moved.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        val dst = java.nio.file.Paths.get(dir, s"part-upsert-$stamp-$k.parquet")
-        java.nio.file.Files.move(p, dst)
-        ParquetFooter.stamp(dst)
-        k += 1
-      }
-    }
-    RaquetIO.deleteTree(tmp)
+    adoptParts(tmp, dir, s"part-upsert-$stamp")
     def local(uri: String): java.nio.file.Path =
       java.nio.file.Paths.get(java.net.URI.create(
         if (uri.startsWith("file:")) uri else "file://" + uri).getPath)
@@ -318,11 +265,27 @@ object Maintenance {
 
     // refresh the metadata row (num_blocks grows by inserted native tiles)
     val meta2 = meta.copy(numBlocks = meta.numBlocks + nativeInserted)
-    metaFiles.foreach(f => java.nio.file.Files.deleteIfExists(local(f)))
+    metaFiles.foreach(java.nio.file.Files.deleteIfExists)
     RaquetIO.writeMetadataFile(spark, schema, meta2, dir, s"metadata-$stamp")
     up.unpersist()
     UpsertReport(ranges.length + metaFiles.length, dataFilesTouched.length,
       replaced, inserted)
+  }
+
+  /** Move the part files Spark wrote into `tmp` to `dir` as
+    * `{prefix}-{k}.parquet`, stamp their footers and delete `tmp`; returns
+    * how many moved. */
+  private def adoptParts(tmp: String, dir: String, prefix: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    parts.zipWithIndex.foreach { case (p, k) =>
+      val dst = java.nio.file.Paths.get(dir, s"$prefix-$k.parquet")
+      java.nio.file.Files.move(p, dst)
+      ParquetFooter.stamp(dst)
+    }
+    RaquetIO.deleteTree(tmp)
+    parts.size
   }
 
   /** M9 + overview refresh: [[upsert]] native-zoom tiles, then rebuild
@@ -344,9 +307,8 @@ object Maintenance {
     * [[Pyramid.buildLevel]] does not group by. */
   def upsertWithPyramid(spark: SparkSession, dir: String,
       updates: DataFrame): UpsertReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
-    require(!updates.columns.contains("time_cf") &&
-      !spark.read.parquet(dir).columns.contains("time_cf"),
+    val (all, meta) = RaquetIO.open(spark, dir)
+    require(!updates.columns.contains("time_cf") && !all.columns.contains("time_cf"),
       s"$dir: pyramid refresh over time-series datasets is unsupported")
     val badZoom = updates
       .filter(quadbin_zoom(col("block")) =!= meta.maxZoom).count()

@@ -2,8 +2,24 @@ package graft.raquet
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.geo.Wkt
 import graft.quadbin.{Polyfill, Quadbin}
@@ -15,9 +31,17 @@ import graft.quadbin.{Polyfill, Quadbin}
   * Scale design: spatial filters become Morton-range BETWEEN predicates on
   * the sorted `block` column, which Spark pushes into the parquet scan —
   * row-group min/max pruning then skips the untouched 99% exactly as the
-  * reference's DuckDB extension does (`docs/performance.md:143-179`). The
-  * metadata row is one driver-side lookup, parsed once and carried into
-  * expressions as plan-time config — never re-parsed per row.
+  * reference's DuckDB extension does (`docs/performance.md:143-179`).
+  *
+  * Opening a table is one driver-side pass over its parquet footers
+  * ([[open]]) that runs no Spark job: the data files are listed with
+  * Spark's rules, the first footer gives the schema exactly as Spark's
+  * inference would, and the `block = 0` metadata row is read from the first
+  * file (in path order) whose `block` statistics admit 0 — only the `block`
+  * and `metadata` columns of those row groups, behind an `eq(block, 0)`
+  * record filter. The table DataFrame is then built with that schema, so
+  * Spark infers nothing either. The metadata is parsed once and carried
+  * into expressions as plan-time config — never re-parsed per row.
   */
 object RaquetIO {
 
@@ -51,32 +75,134 @@ object RaquetIO {
     }
   }
 
-  /** S2: fetch + parse the `block = 0` metadata row. Partitioned datasets
-    * have one per file; they describe the same dataset, so LIMIT 1 is the
-    * spec's own dedupe idiom (`format-specs/raquet.md:160-175`). */
-  def readMetadata(spark: SparkSession, path: String): RaquetMetadata = {
-    val rows = spark.read.parquet(path)
-      .filter(col("block") === 0L).select("metadata").limit(1).collect()
-    require(rows.nonEmpty, s"no metadata row (block=0) in $path")
-    RaquetMetadata.parse(rows(0).getString(0))
+  /** S2: the parsed `block = 0` metadata row, from the footers alone (no
+    * Spark job). Partitioned datasets have one row per partition, each
+    * describing its own partition (`format-specs/raquet.md:160-175`); the
+    * row of the first file in path order is returned, whatever the
+    * session's scan settings. */
+  def readMetadata(spark: SparkSession, path: String): RaquetMetadata =
+    footerPass(spark, path)._2
+
+  /** The table at `path` opened from its footers: the DataFrame of every
+    * row (metadata rows included), built with the footer schema so Spark
+    * runs no inference job, and the parsed metadata. */
+  private[raquet] def open(spark: SparkSession, path: String): (DataFrame, RaquetMetadata) = {
+    val (schema, meta) = footerPass(spark, path)
+    (spark.read.schema(schema).parquet(path), meta)
+  }
+
+  /** The footer pass: (data schema, metadata) of the table at `path`. Each
+    * data file is opened at most once, in path order, until one holds the
+    * metadata row; the first one's footer gives the schema. */
+  private def footerPass(spark: SparkSession, path: String): (StructType, RaquetMetadata) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val options = HadoopReadOptions.builder(conf).withRecordFilter(MetadataRowFilter).build()
+    var schema: StructType = null
+    var json: Option[String] = None
+    val files = dataFiles(conf, path).iterator
+    while (json.isEmpty && files.hasNext) {
+      val file = files.next()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
+      try {
+        if (schema == null) schema = sparkSchema(spark, file, reader)
+        json = metadataRow(reader)
+      } finally reader.close()
+    }
+    require(json.nonEmpty, s"no metadata row (block=0) in $path")
+    (schema, RaquetMetadata.parse(json.get))
+  }
+
+  private val MetadataRowFilter =
+    FilterCompat.get(FilterApi.eq(FilterApi.longColumn("block"), java.lang.Long.valueOf(0L)))
+
+  /** The data files of the table at `path` in path order, by Spark's listing
+    * rules: the path may be a glob; a file path is a single-file table; in a
+    * directory, hidden names (`.x`, `_x` unless a `_k=v` partition) are
+    * skipped, subdirectories (the `k=v` partitions) are recursed into and
+    * empty files are dropped. Goes through the Hadoop `FileSystem`, so
+    * remote paths list as Spark does. */
+  private[raquet] def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) ||
+      n.endsWith("._COPYING_")
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s).filter(_.getLen > 0)
+      else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    val tops = Option(fs.globStatus(root)).toSeq.flatten
+    if (tops.isEmpty) throw new java.io.FileNotFoundException(s"path does not exist: $path")
+    tops.flatMap(t => if (t.isDirectory) walk(t) else Seq(t)).sortBy(_.getPath.toString)
+  }
+
+  /** The data schema Spark's inference derives from this footer: its
+    * row-metadata entry or the converted parquet schema, built with the
+    * converter settings schema inference uses. */
+  private def sparkSchema(spark: SparkSession, file: FileStatus,
+      reader: ParquetFileReader): StructType = {
+    val c = spark.sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = c.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+        nanosAsLong = c.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
+  /** `metadata` of the first `block = 0` row in the row groups the reader's
+    * `eq(block, 0)` filter keeps (those whose `block` statistics admit 0;
+    * missing statistics admit it), reading only `block` and `metadata`. */
+  private def metadataRow(reader: ParquetFileReader): Option[String] = {
+    val fileSchema = reader.getFileMetaData.getSchema
+    val projection = new MessageType(fileSchema.getName,
+      Seq("block", "metadata").map(n => fileSchema.getType(fileSchema.getFieldIndex(n))).asJava)
+    reader.setRequestedSchema(projection)
+    val io = new ColumnIOFactory().getColumnIO(projection, fileSchema)
+    var found: Option[String] = None
+    var pages = reader.readNextFilteredRowGroup()
+    while (found.isEmpty && pages != null) {
+      val records = io.getRecordReader(pages, new GroupRecordConverter(projection),
+        MetadataRowFilter)
+      var i = 0L
+      while (found.isEmpty && i < pages.getRowCount) {
+        // the record filter yields null for rows it rejects
+        found = Option(records.read()).map(_.getString("metadata", 0))
+        i += 1
+      }
+      pages = reader.readNextFilteredRowGroup()
+    }
+    found
+  }
+
+  /** Files of the table at `path` that hold a `block = 0` row, from their
+    * footers: a row group whose `block` minimum is 0 holds one (blocks are
+    * never negative). */
+  private[raquet] def metadataFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path).filter { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      try reader.getRowGroups.asScala.exists(_.getColumns.asScala.exists { c =>
+        c.getPath.toDotString == "block" && (c.getStatistics match {
+          case s: LongStatistics => s.hasNonNullValue && s.getMin == 0L
+          case _ => false
+        })
+      }) finally reader.close()
+    }.map(f => Paths.get(f.getPath.toUri))
   }
 
   /** S1+S3: full scan, metadata row(s) excluded (`docs/engines.md:118-121`). */
   def read(spark: SparkSession, path: String): RaquetDataset = {
-    val meta = readMetadata(spark, path)
-    val data = spark.read.parquet(path).filter(col("block") =!= 0L)
-    RaquetDataset(data, meta)
+    val (all, meta) = open(spark, path)
+    RaquetDataset(all.filter(col("block") =!= 0L), meta)
   }
 
   /** S4: point query — only the tile covering (lon, lat) at `zoom` (default
     * max_zoom). Sorted `block` + pushed equality = a handful of pages read. */
   def readAt(spark: SparkSession, path: String, lon: Double, lat: Double,
       zoom: Int = -1): RaquetDataset = {
-    val meta = readMetadata(spark, path)
+    val (all, meta) = open(spark, path)
     val z = if (zoom < 0) meta.maxZoom else meta.clampZoom(zoom)
-    val cell = Quadbin.fromLonLat(lon, lat, z)
-    val data = spark.read.parquet(path).filter(col("block") === cell)
-    RaquetDataset(data, meta)
+    RaquetDataset(all.filter(col("block") === Quadbin.fromLonLat(lon, lat, z)), meta)
   }
 
   /** OR-of-BETWEEN predicate over compacted Morton ranges. Ranges at zoom z
@@ -109,19 +235,13 @@ object RaquetIO {
     */
   def readRegion(spark: SparkSession, path: String, wkt: String,
       zoom: String = "max", mode: String = Polyfill.Intersects): RaquetDataset = {
-    val meta = readMetadata(spark, path)
+    val (all, meta) = open(spark, path)
     val geom = Wkt.parse(wkt)
     val z = resolveZoom(geom, meta, zoom)
-    val ranges = Polyfill.ranges(geom, z)
-    var df = spark.read.parquet(path)
-    df = df.filter(cappedExactRangeFilter(ranges))
+    var df = all.filter(cappedExactRangeFilter(Polyfill.ranges(geom, z)))
     if (mode != Polyfill.Intersects) {
-      val cells = Polyfill.cells(geom, z, mode)
-      val cellDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(cells.toIndexedSeq.map(Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cell",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+      import spark.implicits._
+      val cellDf = Polyfill.cells(geom, z, mode).toSeq.toDF("cell")
       df = df.join(broadcast(cellDf), col("block") === col("cell"), "left_semi")
     }
     RaquetDataset(df, meta)
@@ -174,13 +294,10 @@ object RaquetIO {
   def regionStatsTiles(spark: SparkSession, path: String, wkt: String,
       band: String, zoom: String = "max"): DataFrame = {
     import graft.functions.GraftFunctions._
-    val meta = readMetadata(spark, path)
+    val (base, meta) = open(spark, path)
     val geom = Wkt.parse(wkt)
     val z = resolveZoom(geom, meta, zoom)
-    val base = spark.read.parquet(path)
-    val statCols = Seq("count", "min", "max", "sum", "mean", "stddev")
-      .map(s => s"${band}_$s")
-    val hasStats = statCols.forall(base.columns.contains)
+    val hasStats = statCols(band).forall(base.columns.contains)
     val (interior, boundary) =
       if (hasStats) Polyfill.splitCover(geom, z)
       else (Array.empty[(Long, Long)], Polyfill.cells(geom, z))
@@ -193,21 +310,24 @@ object RaquetIO {
       base.filter(cappedExactRangeFilter(Polyfill.merge(boundary.map(c => (c, c))))))
     if (interior.isEmpty) boundaryDf
     else {
-      val c = col(statCols.head)
-      val interiorDf = base.filter(cappedExactRangeFilter(interior))
-        .select(col("block"),
-          when(c > 0L, struct(
-            c.as("count"),
-            col(s"${band}_min").as("min"),
-            col(s"${band}_max").as("max"),
-            col(s"${band}_sum").as("sum"),
-            ((col(s"${band}_stddev") * col(s"${band}_stddev") +
-              col(s"${band}_mean") * col(s"${band}_mean")) * c.cast("double"))
-              .as("sum_sq"),
-            col(s"${band}_mean").as("mean"),
-            col(s"${band}_stddev").as("stddev"))).as("s"))
-      interiorDf.unionByName(boundaryDf)
+      base.filter(cappedExactRangeFilter(interior))
+        .select(col("block"), columnStats(band).as("s"))
+        .unionByName(boundaryDf)
     }
+  }
+
+  private def statCols(band: String): Seq[String] =
+    Seq("count", "min", "max", "sum", "mean", "stddev").map(s => s"${band}_$s")
+
+  /** A tile's clip-stats struct from its `{band}_{stat}` columns (null when
+    * the tile has no valid pixel); `sum_sq` is rebuilt from mean/stddev. */
+  private def columnStats(band: String): Column = {
+    def c(stat: String) = col(s"${band}_$stat")
+    when(c("count") > 0L, struct(c("count").as("count"), c("min").as("min"),
+      c("max").as("max"), c("sum").as("sum"),
+      ((c("stddev") * c("stddev") + c("mean") * c("mean")) * c("count").cast("double"))
+        .as("sum_sq"),
+      c("mean").as("mean"), c("stddev").as("stddev")))
   }
 
   /** Many-zone generalization of [[regionStatsTiles]]: per-(zone, tile)
@@ -224,12 +344,9 @@ object RaquetIO {
   def zonalStatsFastTiles(spark: SparkSession, path: String,
       zones: Seq[(Long, String)], band: String): DataFrame = {
     import graft.functions.GraftFunctions._
-    val meta = readMetadata(spark, path)
+    val (base, meta) = open(spark, path)
     val z = meta.maxZoom
-    val base = spark.read.parquet(path)
-    val statCols = Seq("count", "min", "max", "sum", "mean", "stddev")
-      .map(s => s"${band}_$s")
-    require(statCols.forall(base.columns.contains),
+    require(statCols(band).forall(base.columns.contains),
       s"zonalStatsFastTiles needs the $band stats columns")
     val step = 1L << (52 - 2 * z)
     val cellRows = zones.flatMap { case (id, wkt) =>
@@ -246,22 +363,11 @@ object RaquetIO {
     import spark.implicits._
     val cells = broadcast(cellRows.toDF("zone_id", "cell", "interior", "zwkt"))
     val ds = RaquetDataset(base, meta)
-    val c = col(statCols.head)
     base
       .filter(col("block") =!= 0L && cappedExactRangeFilter(pruneRanges))
       .join(cells, col("block") === col("cell"))
       .select(col("zone_id"),
-        when(col("interior"),
-          when(c > 0L, struct(
-            c.as("count"),
-            col(s"${band}_min").as("min"),
-            col(s"${band}_max").as("max"),
-            col(s"${band}_sum").as("sum"),
-            ((col(s"${band}_stddev") * col(s"${band}_stddev") +
-              col(s"${band}_mean") * col(s"${band}_mean")) * c.cast("double"))
-              .as("sum_sq"),
-            col(s"${band}_mean").as("mean"),
-            col(s"${band}_stddev").as("stddev"))))
+        when(col("interior"), columnStats(band))
         .otherwise(rq_clip_stats_col(ds.band(band), col("block"), col("zwkt"),
           meta, band)).as("s"))
       .select(col("zone_id"), col("s"))
@@ -336,34 +442,34 @@ object RaquetIO {
     // order, so the metadata row lands after the sorted data rows
     val withMeta = sorted
       .unionByName(metadataDf(data.sparkSession, data.schema, meta)).coalesce(1)
-    val tmp = file + ".tmpdir"
-    var w = withMeta.write.mode("overwrite").option("compression", pageCodec(meta))
-    if (rowGroupBytes > 0) w = w.option("parquet.block.size", rowGroupBytes)
-    w.parquet(tmp)
+    writeOneFile(withMeta, file, file + ".tmpdir", Map("compression" -> pageCodec(meta)) ++
+      (if (rowGroupBytes > 0) Map("parquet.block.size" -> rowGroupBytes.toString) else Nil))
+    ParquetFooter.stamp(Paths.get(file), sortNames)
+  }
+
+  /** Write `df` as the one parquet file `file`, through the scratch
+    * directory `tmp`. */
+  private def writeOneFile(df: DataFrame, file: String, tmp: String,
+      options: Map[String, String]): Unit = {
+    df.coalesce(1).write.mode("overwrite").options(options).parquet(tmp)
     val part = Files.list(Paths.get(tmp)).filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
     Files.createDirectories(Paths.get(file).toAbsolutePath.getParent)
     Files.move(part, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
     deleteTree(tmp)
-    ParquetFooter.stamp(Paths.get(file), sortNames)
   }
 
-  /** The one-row `block = 0` metadata row in `schema`: every column but
-    * `block` and `metadata` is null. */
-  private def metadataDf(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      meta: RaquetMetadata): DataFrame = {
-    val json = RaquetMetadata.toJson(meta)
-    val values = schema.fields.map { f =>
-      f.name match {
-        case "block" => 0L
-        case "metadata" => json
-        case _ => null
-      }
-    }
-    spark.createDataFrame(
-      java.util.Arrays.asList(Row(values.toIndexedSeq: _*)), schema)
+  /** A `block = 0` metadata row in `schema`: `block`, `metadata` and the
+    * `extra` columns are set, every other column is null. */
+  private[raquet] def metadataRow(schema: StructType, meta: RaquetMetadata,
+      extra: (String, Any)*): Row = {
+    val values = Map[String, Any]("block" -> 0L, "metadata" -> RaquetMetadata.toJson(meta)) ++ extra
+    Row.fromSeq(schema.fieldNames.toSeq.map(values.getOrElse(_, null)))
   }
+
+  private def metadataDf(spark: SparkSession, schema: StructType,
+      meta: RaquetMetadata): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(metadataRow(schema, meta)), schema)
 
   /** Recursive delete of a local path (temp trees); a missing path is a
     * no-op. */
@@ -380,16 +486,8 @@ object RaquetIO {
 
   /** Write a standalone one-row metadata file into `dir` (the upsert
     * refresh path): same schema as the data rows, block = 0. */
-  private[raquet] def writeMetadataFile(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, meta: RaquetMetadata,
-      dir: String, name: String): Unit = {
-    val tmp = s"$dir/.meta-tmp"
-    metadataDf(spark, schema, meta).coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
-    Files.move(part, Paths.get(dir, s"$name.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    deleteTree(tmp)
-  }
+  private[raquet] def writeMetadataFile(spark: SparkSession, schema: StructType,
+      meta: RaquetMetadata, dir: String, name: String): Unit =
+    writeOneFile(metadataDf(spark, schema, meta), s"$dir/$name.parquet", s"$dir/.meta-tmp",
+      Map.empty)
 }

@@ -4,7 +4,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -404,6 +404,14 @@ object RqBridge {
     graft.raquet.PixelCodec.encode(out, "float64", gzip = true,
       java.util.zip.Deflater.BEST_SPEED)
   }
+
+  /** The per-tile halo strips focal operators take:
+    * ARRAY<STRUCT<dx INT, dy INT, vals ARRAY<DOUBLE>>>. */
+  val haloType: DataType = ArrayType(StructType(Seq(
+    StructField("dx", IntegerType),
+    StructField("dy", IntegerType),
+    StructField("vals", ArrayType(DoubleType, containsNull = true)))),
+    containsNull = true)
 
   val terrainSchema: StructType = StructType(Seq(
     StructField("slope", BinaryType),
@@ -1153,12 +1161,7 @@ case class RqFocalContour(band: Expression, halos: Expression,
     extends BinaryExpression with ImplicitCastInputTypes {
   override def left: Expression = band
   override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, RqBridge.haloType)
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def nullable: Boolean = true
@@ -1415,12 +1418,7 @@ case class RqRegionSegments(block: Expression, band: Expression,
   override def first: Expression = block
   override def second: Expression = band
   override def third: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType, RqBridge.haloType)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("x", LongType, nullable = false),
     StructField("y", LongType, nullable = false),
@@ -2044,48 +2042,58 @@ case class RqClipStatsDyn(band: Expression, block: Expression,
       t: Expression): Expression = copy(band = f, block = s, wkt = t)
 }
 
+/** The shared shape of the focal operators over (band blob, halo strips):
+  * a NULL band gives NULL, a NULL halo list means an empty halo, and the
+  * value is `RqBridge.<bridge>(kernel, band, halos, args...)` on both the
+  * interpreted and the generated path. */
+trait HaloFocal extends BinaryExpression with ImplicitCastInputTypes {
+  def band: Expression
+  def halos: Expression
+  def kernel: BandKernel
+  protected def bridge: String
+  /** Plan-time trailing arguments of the bridge call. */
+  protected def args: Seq[Any] = Nil
+  protected def compute(raw: Array[Byte], h: ArrayData): Any
+  override def left: Expression = band
+  override def right: Expression = halos
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, RqBridge.haloType)
+  override def nullable: Boolean = true
+  override def eval(input: InternalRow): Any = {
+    val raw = band.eval(input)
+    if (raw == null) null
+    else compute(raw.asInstanceOf[Array[Byte]], halos.eval(input).asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
+    val b = band.genCode(ctx)
+    val hl = halos.genCode(ctx)
+    val extra = args.map(a => s", $a").mkString
+    ev.copy(code =
+      code"""
+        ${b.code}
+        ${hl.code}
+        boolean ${ev.isNull} = true;
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+        if (!${b.isNull}) {
+          ${ev.isNull} = false;
+          ${ev.value} = ${RqBridge.B}.$bridge($k, ${b.value},
+            ${hl.isNull} ? null : ${hl.value}$extra);
+        }
+      """)
+  }
+}
+
 /** rq_focal_mean(band, halos) → float64 band BLOB of 3×3 neighborhood
   * means (physical values, nodata-aware, NaN = no valid window), given the
   * tile's blob and the halo strips collected from its 8 neighbors (see
   * [[graft.operators.Focal]] for the exchange shape and [[RqBridge.focalOf]]
   * for halo-label semantics). A NULL halo list (isolated tile / raster
   * corner) means an empty halo, NOT a null result. */
-case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_mean"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.focalOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.focalOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
+  protected def bridge: String = "focalOf"
+  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.focalOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2093,42 +2101,11 @@ case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel)
 /** rq_fill_nodata(band, halos) → float64 band blob with nodata pixels
   * IDW-filled from their valid 3×3 neighbors (see [[RqBridge.fillOf]]).
   * Same halo contract as [[RqFocalMean]]. */
-case class RqFillNodata(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+case class RqFillNodata(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_fill_nodata"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.fillOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.fillOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
+  protected def bridge: String = "fillOf"
+  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.fillOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2155,41 +2132,12 @@ case class RqChamferSeed(band: Expression, kernel: BandKernel, target: Double)
   * (see [[RqBridge.chamferRelaxOf]]). Same halo contract as
   * [[RqFocalMean]]. */
 case class RqChamferRelax(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+    extends HaloFocal {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_chamfer_relax"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.chamferRelaxOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.chamferRelaxOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
+  protected def bridge: String = "chamferRelaxOf"
+  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+    RqBridge.chamferRelaxOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2198,42 +2146,13 @@ case class RqChamferRelax(band: Expression, halos: Expression, kernel: BandKerne
   * degrees (see [[RqBridge.slopeOf]]); NaN where the 3×3 window has any
   * missing or nodata cell. Same halo contract as [[RqFocalMean]]. */
 case class RqFocalSlope(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, zt: Boolean = false)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+    kernel: BandKernel, cell: Double, zt: Boolean = false) extends HaloFocal {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_slope"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.slopeOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, zt)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.slopeOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $zt);
-        }
-      """)
-  }
+  protected def bridge: String = "slopeOf"
+  override protected def args: Seq[Any] = Seq(cell, zt)
+  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+    RqBridge.slopeOf(kernel, raw, h, cell, zt)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2242,42 +2161,13 @@ case class RqFocalSlope(band: Expression, halos: Expression,
   * hillshade as a float64 blob ([[RqBridge.hillshadeMdOf]]). Same halo
   * contract as [[RqFocalMean]]. */
 case class RqFocalHillshadeMd(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, altitudeDeg: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+    kernel: BandKernel, cell: Double, altitudeDeg: Double) extends HaloFocal {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_hillshade_md"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.hillshadeMdOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, altitudeDeg)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.hillshadeMdOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $altitudeDeg);
-        }
-      """)
-  }
+  protected def bridge: String = "hillshadeMdOf"
+  override protected def args: Seq[Any] = Seq(cell, altitudeDeg)
+  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+    RqBridge.hillshadeMdOf(kernel, raw, h, cell, altitudeDeg)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2286,42 +2176,13 @@ case class RqFocalHillshadeMd(band: Expression, halos: Expression,
   * band blobs from one window pass (see [[RqBridge.terrainOf]]). Same halo
   * contract as [[RqFocalMean]]. */
 case class RqFocalTerrain(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, azimuthDeg: Double, altitudeDeg: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+    kernel: BandKernel, cell: Double, azimuthDeg: Double, altitudeDeg: Double) extends HaloFocal {
   override def dataType: DataType = RqBridge.terrainSchema
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_terrain"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.terrainOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, azimuthDeg, altitudeDeg)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.terrainOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $azimuthDeg, $altitudeDeg);
-        }
-      """)
-  }
+  protected def bridge: String = "terrainOf"
+  override protected def args: Seq[Any] = Seq(cell, azimuthDeg, altitudeDeg)
+  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+    RqBridge.terrainOf(kernel, raw, h, cell, azimuthDeg, altitudeDeg)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2362,42 +2223,11 @@ case class RqColorRelief(child: Expression, kernel: BandKernel,
 /** rq_focal_tpi(band, halos) → struct of TPI / TRI / roughness float64
   * band blobs from one window pass (see [[RqBridge.tpiOf]]). Same halo
   * contract as [[RqFocalMean]]. */
-case class RqFocalTpi(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
+case class RqFocalTpi(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = RqBridge.tpiSchema
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_tpi"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.tpiOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.tpiOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
+  protected def bridge: String = "tpiOf"
+  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.tpiOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
 import graft.quadbin.Quadbin
-import graft.raquet.{BandKernel, Downsample, FixtureGen, PixelCodec, RaquetIO}
+import graft.raquet.{BandKernel, Downsample, FixtureGen, Maintenance, PixelCodec, RaquetIO,
+  RaquetMetadata}
 
 /** Reader/writer + raster expression tests over the committed gradient16
   * fixture (see [[graft.raquet.FixtureGen]] for the closed-form pixel
@@ -596,5 +597,128 @@ class RaquetIOSpec extends SparkSpec {
     }
     assert(!graft.quadbin.Polyfill.inRanges(ranges.head._1 - 1,
       ranges.map(_._1), ranges.map(_._2)))
+  }
+
+  /** The metadata read the footer pass replaced (a LIMIT 1 query over the
+    * `block = 0` rows), kept here as the reference form. */
+  private def limitQueryMetadata(path: String): RaquetMetadata = {
+    val rows = spark.read.parquet(path)
+      .filter(col("block") === 0L).select("metadata").limit(1).collect()
+    require(rows.nonEmpty, s"no metadata row (block=0) in $path")
+    RaquetMetadata.parse(rows(0).getString(0))
+  }
+
+  private def tmpDir(): String = java.nio.file.Files.createTempDirectory("rq").toString
+
+  test("footer open equals the LIMIT query and Spark's inferred schema on every layout") {
+    val src = RaquetIO.read(spark, fixture)
+    val written = tmpDir() + "/written"
+    RaquetIO.write(src.data, src.meta, written, maxRecordsPerFile = 16)
+    val split = tmpDir() + "/split"
+    Maintenance.splitZoom(spark, fixture, split)
+    val upserted = tmpDir() + "/upserted"
+    RaquetIO.write(src.data, src.meta, upserted, maxRecordsPerFile = 16)
+    val cSrc = Quadbin.tileToCell(39, 31, 6)
+    val d0 = RaquetIO.read(spark, upserted).data
+    Maintenance.upsert(spark, upserted, d0.filter(col("block") === cSrc)
+      .withColumn("block", lit(Quadbin.tileToCell(41, 26, 6))))
+    val parted = tmpDir() + "/parted"
+    Maintenance.partition(spark, fixture, parted, partZoom = 4)
+    // files whose own schema declares `block` required: the open schema is
+    // all-nullable, as Spark's inferred one is
+    val required = tmpDir() + "/required"
+    val raw = spark.read.parquet(fixture)
+    spark.createDataFrame(raw.rdd, org.apache.spark.sql.types.StructType(raw.schema.map(f =>
+      if (f.name == "block") f.copy(nullable = false) else f))).write.parquet(required)
+    val layouts = Seq(fixture, written, s"$written/part-*", upserted, parted, required) ++
+      (3 to 6).map(z => s"$split/z=$z")
+    layouts.foreach { path =>
+      assert(RaquetMetadata.toJson(RaquetIO.readMetadata(spark, path)) ==
+        RaquetMetadata.toJson(limitQueryMetadata(path)), path)
+      assert(RaquetIO.read(spark, path).data.schema == spark.read.parquet(path).schema, path)
+    }
+    assert(RaquetIO.readMetadata(spark, upserted).numBlocks == src.meta.numBlocks + 1)
+    assert(RaquetIO.read(spark, parted).data.columns.last == "part")
+    // a table without a block = 0 row fails by name, as the LIMIT query did
+    val bare = tmpDir() + "/bare"
+    src.data.write.parquet(bare)
+    val e = intercept[IllegalArgumentException](RaquetIO.readMetadata(spark, bare))
+    assert(e.getMessage.contains(s"no metadata row (block=0) in $bare"))
+    val eRef = intercept[IllegalArgumentException](limitQueryMetadata(bare))
+    assert(eRef.getMessage == e.getMessage)
+  }
+
+  /** Jobs Spark starts while `body` runs. Listener events arrive in order,
+    * so a marker job after `body` flushes every earlier one to the count. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "jobsDuring marker"))
+          flushed.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      sc.setJobDescription("jobsDuring marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("opening a table runs no Spark job; the point query runs exactly one") {
+    val dir = tmpDir() + "/guard"
+    val src = RaquetIO.read(spark, fixture)
+    RaquetIO.write(src.data, src.meta, dir, maxRecordsPerFile = 16)
+    val b = Quadbin.cellBounds(Quadbin.tileToCell(35, 27, 6))
+    val (lon, lat) = ((b(0) + b(2)) / 2, (b(1) + b(3)) / 2)
+    val wkt = s"POLYGON((${b(0)} ${b(1)}, ${b(2)} ${b(1)}, ${b(2)} ${b(3)}, " +
+      s"${b(0)} ${b(3)}, ${b(0)} ${b(1)}))"
+    Seq(fixture, dir).foreach { path =>
+      val (meta, metaJobs) = jobsDuring(RaquetIO.readMetadata(spark, path))
+      assert(metaJobs == 0, s"readMetadata($path)")
+      assert(jobsDuring(RaquetIO.read(spark, path))._2 == 0, s"read($path)")
+      assert(jobsDuring(RaquetIO.readRegion(spark, path, wkt))._2 == 0, s"readRegion($path)")
+      assert(jobsDuring(RaquetIO.regionStatsTiles(spark, path, wkt, "band_1"))._2 == 0,
+        s"regionStatsTiles($path)")
+      val (point, pointJobs) = jobsDuring(RaquetIO.readAt(spark, path, lon, lat))
+      assert(pointJobs == 0, s"readAt($path)")
+      val q = point.data.select(
+        rq_raster_value(col("band_1"), col("block"), lit(lon), lit(lat), meta, "band_1"))
+      val (rows, collectJobs) = jobsDuring(q.collect())
+      assert(rows.length == 1 && collectJobs == 1, s"point collect($path): $collectJobs jobs")
+    }
+  }
+
+  test("the metadata row comes from the first file in path order, whatever the scan settings") {
+    // an uneven partitioned table: one metadata row per part= directory,
+    // each with its own num_blocks
+    val src = RaquetIO.read(spark, fixture)
+    val dropped = for (x <- 32L to 33L; y <- 24L to 25L) yield Quadbin.tileToCell(x, y, 6)
+    val uneven = tmpDir() + "/uneven"
+    RaquetIO.write(src.data.filter(!col("block").isin(dropped: _*)), src.meta, uneven)
+    val parted = tmpDir() + "/parted"
+    Maintenance.partition(spark, uneven, parted, partZoom = 4)
+    val counts = new java.io.File(parted).listFiles().map(_.getName)
+      .filter(_.startsWith("part=")).sorted.map { d =>
+        spark.read.parquet(s"$parted/$d").filter(col("block") =!= 0L).count()
+      }
+    assert(counts.distinct.length > 1, counts.mkString(","))
+    val conf = spark.conf
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> conf.get(k))
+    try {
+      Seq(Seq("0", "1g"), Seq("64m", "1k")).foreach { values =>
+        keys.zip(values).foreach { case (k, v) => conf.set(k, v) }
+        assert(RaquetIO.readMetadata(spark, parted).numBlocks == counts.head, values)
+        assert(RaquetIO.read(spark, parted).meta.numBlocks == counts.head, values)
+      }
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }
 }
