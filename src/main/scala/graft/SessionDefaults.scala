@@ -49,10 +49,11 @@ object SessionDefaults {
 
   /** The graft session: `master` (default `local[cpus]`), one shuffle
     * partition per core, UTC, UI off, the [[GraftExtensions]] (SQL
-    * functions, pushdown rule, raquet metadata-row exclusion), the
-    * [[tuned]] raster defaults and WARN logging. `withExtensions` rather
-    * than the static `spark.sql.extensions` conf, so the extensions also
-    * reach a session built on an already-running context. */
+    * functions, pushdown rule, shape-stable codegen rule, raquet
+    * metadata-row exclusion), the [[tuned]] raster defaults and WARN
+    * logging. `withExtensions` rather than the static
+    * `spark.sql.extensions` conf, so the extensions also reach a session
+    * built on an already-running context. */
   def session(appName: String, master: Option[String] = None): SparkSession = {
     val s = tuned(SparkSession.builder()
       .master(master.getOrElse(s"local[$cpus]"))

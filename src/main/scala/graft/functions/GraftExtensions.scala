@@ -23,6 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // spatial predicate → Morton-range pushdown rewrite
     ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.QuadbinRangeRewrite)
+    // per-query constants out of generated code, right before whole-stage
+    // codegen (see ShapeStableCodegen.scala)
+    ext.injectColumnar(_ => org.apache.spark.sql.graft.ShapeStableCodegen.columnarRule)
     // format("raquet") metadata-row exclusion (see RaquetDataSource.scala)
     ext.injectPostHocResolutionRule(_ =>
       org.apache.spark.sql.graft.RaquetMetadataExclusion)

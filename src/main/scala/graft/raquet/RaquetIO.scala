@@ -19,6 +19,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{BlockRanges, Bridge}
 import org.apache.spark.sql.types.StructType
 
 import graft.geo.Wkt
@@ -207,17 +208,10 @@ object RaquetIO {
 
   /** OR-of-BETWEEN predicate over compacted Morton ranges. Ranges at zoom z
     * only cover zoom-z ids (zoom bits sit above the Morton bits), so no
-    * residual zoom filter is needed. Reduced as a balanced tree — a
-    * left-nested OR over thousands of legs overflows the stack at plan
-    * conversion time. */
-  def blockRangeFilter(ranges: Array[(Long, Long)]): Column = {
-    if (ranges.isEmpty) return lit(false)
-    var cols = ranges.map { case (lo, hi) => col("block").between(lo, hi) }.toIndexedSeq
-    while (cols.length > 1)
-      cols = cols.grouped(2)
-        .map(g => if (g.length == 2) g(0) || g(1) else g(0)).toIndexedSeq
-    cols.head
-  }
+    * residual zoom filter is needed. A balanced tree
+    * ([[org.apache.spark.sql.graft.BlockRanges]]). */
+  def blockRangeFilter(ranges: Array[(Long, Long)]): Column =
+    Bridge.column(BlockRanges(Bridge.expression(col("block")), ranges.toSeq))
 
   /** Parquet source filters stop translating past ~64 OR legs, so larger
     * regions keep a merged-span superset for pushdown (same budget as
@@ -255,16 +249,16 @@ object RaquetIO {
     case s => meta.clampZoom(s.toInt)
   }
 
-  /** Exact block filter over `ranges`, pushdown-capped: past [[MaxRangeLegs]]
-    * legs the parquet source stops translating filters, so a merged-span
-    * SUPERSET goes to the scan (row-group pruning) and the exact balanced-OR
-    * stays as the post-scan residual. Never widens the row set. */
-  /** Pushdown-friendly capped OR of merged spans (parquet row-group
-    * pruning) AND an exact residual. Past the leg cap the residual is
-    * `quadbin_in_ranges` — a binary search over the plan-time span arrays —
-    * because an OR chain of hundreds of BETWEEN legs exceeds janino's
-    * method-size limit and silently drops the stage out of whole-stage
-    * codegen (measured ~10x on the 15 GB bench's 60,390-tile region). */
+  /** Exact block filter over `ranges`, pushdown-capped. Up to [[MaxRangeLegs]]
+    * ranges it is [[blockRangeFilter]]. Past the cap the parquet source stops
+    * translating filters, so a merged-span SUPERSET (at most the cap's legs)
+    * goes to the scan for row-group pruning, AND-ed with the exact
+    * `quadbin_in_ranges` (a binary search over the plan-time span arrays). An
+    * OR chain of hundreds of BETWEEN legs would exceed janino's method-size
+    * limit and drop the stage out of whole-stage codegen (measured ~10x on
+    * the 15 GB bench's 60,390-tile region). Never widens the row set. After
+    * planning, `ShapeStableCodegen` turns the post-scan copy of either form
+    * into one `quadbin_in_ranges`; the scan keeps the legs. */
   private def cappedExactRangeFilter(ranges: Array[(Long, Long)]): Column = {
     if (ranges.length <= MaxRangeLegs) blockRangeFilter(ranges)
     else {

@@ -58,8 +58,7 @@ object QuadbinRangeRewrite extends Rule[LogicalPlan] {
 
   private def zoomRange(attr: Attribute, z: Int): Expression = {
     val lo = zoomLo(z)
-    val hi = lo | ((1L << 52) - 1)
-    And(GreaterThanOrEqual(attr, Literal(lo)), LessThanOrEqual(attr, Literal(hi)))
+    BlockRanges(attr, Seq((lo, lo | ((1L << 52) - 1))))
   }
 
   private def hasZoomRange(conjuncts: Seq[Expression], attr: Attribute, z: Int): Boolean =
@@ -82,8 +81,6 @@ object QuadbinRangeRewrite extends Rule[LogicalPlan] {
     // count bounded by merging adjacent spans (still a sound superset)
     while (spans.length > MaxTotalRanges)
       spans = spans.grouped(2).map(g => (g.head._1, g.last._2)).toIndexedSeq
-    spans.map { case (lo, hi) =>
-      And(GreaterThanOrEqual(attr, Literal(lo)), LessThanOrEqual(attr, Literal(hi)))
-    }.reduceLeft[Expression](Or)
+    BlockRanges(attr, spans)
   }
 }
