@@ -32,9 +32,9 @@ import graft.raquet.{BandKernel, RaquetMetadata}
   * ([[org.apache.spark.sql.graft.RqViewshedDisk]], the guide-§8 "decide
   * on a lightweight proxy" shape). The pre-r14 formulation materialized
   * every sample as a row into a shuffled equi-join (27M rows / 577 MB
-  * shuffle at the bench's R=150) — it survives below as
-  * [[viewshedReference]], the spec's equivalence oracle. Many observers
-  * = more disk rows, the same three-stage plan. */
+  * shuffle at the bench's R=150) — it survives in the test sources as
+  * `ViewshedSpec`'s equivalence oracle. Many observers = more disk rows,
+  * the same three-stage plan. */
 object Viewshed {
 
   /** Per-observer viewshed over the single-zoom raster `data`.
@@ -79,7 +79,7 @@ object Viewshed {
 
   /** Decoded (gx, gy, e) for every pixel of every tile any observer disk
     * touches; nodata → NULL e. */
-  private def diskPixels(data: DataFrame, kernel: BandKernel, band: String,
+  private[graft] def diskPixels(data: DataFrame, kernel: BandKernel, band: String,
       observers: DataFrame, z: Int, radius: Int): DataFrame = {
     val bw = kernel.width; val bh = kernel.height
     val nod = kernel.nodata
@@ -98,61 +98,5 @@ object Viewshed {
         (quadbin_tile_y(col("block")) * bh + expr(s"pos div $bw")).as("gy"),
         when(isnan(col("col")) || col("col") === lit(nod), lit(null))
           .otherwise(col("col")).as("e"))
-  }
-
-  /** The pre-r14 relational formulation — kept ONLY as ViewshedSpec's
-    * equivalence oracle for the kernel path above (every sample
-    * coordinate and blocking verdict is the same IEEE arithmetic; the
-    * spec pins row-set equality on rasters with nodata holes, off-raster
-    * observers and grazing sightlines). Do not call from query paths:
-    * it shuffles the O(R³) sample table the kernel path avoids. */
-  private[graft] def viewshedReference(data: DataFrame, kernel: BandKernel,
-      band: String, observers: DataFrame, z: Int, radius: Int): DataFrame = {
-    val pix = diskPixels(data, kernel, band, observers, z, radius).persist()
-
-    // observer eye elevation: ground + oh (NULL ground → NULL verdicts)
-    val obsGround = pix.join(broadcast(observers
-        .select(col("ox").as("gx"), col("oy").as("gy"))),
-        Seq("gx", "gy"), "left_semi")
-    val obsH = observers.join(broadcast(obsGround),
-        observers("ox") === obsGround("gx") &&
-          observers("oy") === obsGround("gy"), "left")
-      .select(observers("oid"), col("ox"), col("oy"),
-        (col("e") + col("oh")).as("ho"))
-
-    // every target offset in the Chebyshev ring, with its ground elevation
-    val pixT = pix.select(col("gx").as("tx"), col("gy").as("ty"),
-      col("e").as("et"))
-    val tgt = obsH
-      .withColumn("dx", explode(sequence(lit(-radius), lit(radius))))
-      .withColumn("dy", explode(sequence(lit(-radius), lit(radius))))
-      .filter(!(col("dx") === 0 && col("dy") === 0))
-      .withColumn("n", greatest(abs(col("dx")), abs(col("dy"))))
-      .withColumn("tx", col("ox") + col("dx"))
-      .withColumn("ty", col("oy") + col("dy"))
-      .join(pixT.hint("shuffle_hash"), Seq("tx", "ty"), "left")
-
-    // intermediate sightline samples: nearest lattice point at parameter
-    // k/n; the blocking test cross-multiplies the two angles' rise/run so
-    // every verdict is integer-exact (nodata samples never block)
-    val pixS = pix.select(col("gx").as("sx"), col("gy").as("sy"),
-      col("e").as("es"))
-    val blockedBy = tgt.filter(col("n") >= 2)
-      .withColumn("k", explode(sequence(lit(1), col("n") - 1)))
-      .withColumn("sx", col("ox") + floor(
-        col("k") * col("dx") / col("n") + lit(0.5)))
-      .withColumn("sy", col("oy") + floor(
-        col("k") * col("dy") / col("n") + lit(0.5)))
-      .join(pixS.hint("shuffle_hash"), Seq("sx", "sy"))
-      .withColumn("blk", col("es").isNotNull && col("et").isNotNull &&
-        col("ho").isNotNull &&
-        (col("es") - col("ho")) * col("n") > (col("et") - col("ho")) * col("k"))
-      .groupBy("oid", "tx", "ty")
-      .agg(max(when(col("blk"), 1).otherwise(0)).as("b"))
-
-    tgt.join(blockedBy, Seq("oid", "tx", "ty"), "left")
-      .select(col("oid"), col("tx").as("gx"), col("ty").as("gy"),
-        when(col("et").isNull || col("ho").isNull, lit(null))
-          .otherwise(coalesce(col("b"), lit(0)) === 0).as("visible"))
   }
 }

@@ -213,11 +213,6 @@ object RaquetIO {
   def blockRangeFilter(ranges: Array[(Long, Long)]): Column =
     Bridge.column(BlockRanges(Bridge.expression(col("block")), ranges.toSeq))
 
-  /** Parquet source filters stop translating past ~64 OR legs, so larger
-    * regions keep a merged-span superset for pushdown (same budget as
-    * [[org.apache.spark.sql.graft.QuadbinRangeRewrite]]). */
-  private val MaxRangeLegs = 64
-
   /** S5: spatial-filter scan. `zoom` accepts an Int, "auto", "min", "max"
     * (spec `raquet.md:293-316`); `mode` is intersects/center/contains
     * (`docs/performance.md:118-126`).
@@ -249,9 +244,10 @@ object RaquetIO {
     case s => meta.clampZoom(s.toInt)
   }
 
-  /** Exact block filter over `ranges`, pushdown-capped. Up to [[MaxRangeLegs]]
-    * ranges it is [[blockRangeFilter]]. Past the cap the parquet source stops
-    * translating filters, so a merged-span SUPERSET (at most the cap's legs)
+  /** Exact block filter over `ranges`, pushdown-capped. Up to
+    * `BlockRanges.MaxLegs` ranges it is [[blockRangeFilter]]. Past the cap the
+    * parquet source stops translating filters, so a merged-span SUPERSET
+    * (`BlockRanges.capped`, at most the cap's legs)
     * goes to the scan for row-group pruning, AND-ed with the exact
     * `quadbin_in_ranges` (a binary search over the plan-time span arrays). An
     * OR chain of hundreds of BETWEEN legs would exceed janino's method-size
@@ -259,16 +255,10 @@ object RaquetIO {
     * the 15 GB bench's 60,390-tile region). Never widens the row set. After
     * planning, `ShapeStableCodegen` turns the post-scan copy of either form
     * into one `quadbin_in_ranges`; the scan keeps the legs. */
-  private def cappedExactRangeFilter(ranges: Array[(Long, Long)]): Column = {
-    if (ranges.length <= MaxRangeLegs) blockRangeFilter(ranges)
-    else {
-      var spans = ranges.toIndexedSeq
-      while (spans.length > MaxRangeLegs)
-        spans = spans.grouped(2).map(g => (g.head._1, g.last._2)).toIndexedSeq
-      blockRangeFilter(spans.toArray) &&
-        graft.functions.GraftFunctions.quadbin_in_ranges(col("block"), ranges)
-    }
-  }
+  private def cappedExactRangeFilter(ranges: Array[(Long, Long)]): Column =
+    if (ranges.length <= BlockRanges.MaxLegs) blockRangeFilter(ranges)
+    else blockRangeFilter(BlockRanges.capped(ranges.toSeq).toArray) &&
+      graft.functions.GraftFunctions.quadbin_in_ranges(col("block"), ranges)
 
   /** A6 stats-column fast path: per-tile stats structs for a zonal-stats
     * query, WITHOUT decoding interior tiles. The polyfill splits the cover

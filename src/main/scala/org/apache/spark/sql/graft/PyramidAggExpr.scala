@@ -165,37 +165,14 @@ object RqParentTile {
   */
 case class RqConvParent(contribs: Expression, kernel: BandKernel,
     resampling: String)
-    extends UnaryExpression {
+    extends UnaryTileKernel {
   override def child: Expression = contribs
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType)
   override def dataType: DataType = RqParentTile.schema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_conv_parent"
-  override def eval(input: InternalRow): Any = {
-    val arr = contribs.eval(input)
-    if (arr == null) null
-    else RqConvParent.assemble(kernel, resampling,
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val c = contribs.genCode(ctx)
-    val row = ctx.freshName("convRow")
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${c.isNull}) {
-          InternalRow $row = org.apache.spark.sql.graft.RqConvParent.assemble(
-            $k, "$resampling", ${c.value});
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(arr: Any): Any = RqConvParent.assemble(kernel, resampling,
+    arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(contribs = c)
 }

@@ -24,7 +24,6 @@ object QuadbinRangeRewrite extends Rule[LogicalPlan] {
 
   private val CapZoom = 10
   private val MaxRangesPerZoom = 4
-  private val MaxTotalRanges = 64
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
@@ -73,14 +72,12 @@ object QuadbinRangeRewrite extends Rule[LogicalPlan] {
     * ids of that zoom and the union covers every possible block. */
   private def rangePredicate(attr: Attribute, wkt: String): Expression = {
     val geom = Wkt.parse(wkt)
-    var spans = (0 to 26).flatMap { z =>
+    val spans = (0 to 26).flatMap { z =>
       val rs = Polyfill.cappedRanges(geom, z, CapZoom)
       if (rs.length > MaxRangesPerZoom) Array((rs.head._1, rs.last._2)) else rs
     }
     // deep disjunctions stop translating to source filters — keep the leg
     // count bounded by merging adjacent spans (still a sound superset)
-    while (spans.length > MaxTotalRanges)
-      spans = spans.grouped(2).map(g => (g.head._1, g.last._2)).toIndexedSeq
-    BlockRanges(attr, spans)
+    BlockRanges(attr, BlockRanges.capped(spans))
   }
 }

@@ -4,8 +4,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -14,12 +13,17 @@ import graft.raquet.{BandKernel, BandPairKernel}
 
 /** Catalyst expressions for the raster function surface (SURVEY.md §2.8
   * F10-F14, §2.4 A1): decode, per-tile summary stats, point value, clip
-  * stats, normalized difference. The resolved [[BandKernel]] (dtype, nodata,
-  * tile size, scale/offset from the dataset's metadata) is a constructor
-  * parameter — bound once at plan time, carried into generated code via
-  * `addReferenceObj`, so the per-row work is a single static-shaped call into
-  * primitive-array loops. Reference semantics: `docs/engines.md:44-61`,
-  * `raquet/raster2raquet.py:525-574`, `format-specs/raquet.md:306-345`.
+  * stats, normalized difference, focal, region and temporal kernels. The
+  * resolved [[BandKernel]] (dtype, nodata, tile size, scale/offset from the
+  * dataset's metadata) and every other plan-time constant are constructor
+  * parameters, bound once at plan time. Each tile kernel states its value
+  * once, as `compute` over its children's values, on the
+  * [[TileKernelExpression]] template: `eval` calls it, and the template's
+  * one `doGenCode` calls it on the expression object bound by reference, so
+  * no constant is written into generated Java. `RqBridge` holds the kernels'
+  * shared row/array conversions and the halo-window kernels. Reference
+  * semantics: `docs/engines.md:44-61`, `raquet/raster2raquet.py:525-574`,
+  * `format-specs/raquet.md:306-345`.
   */
 object RqBridge {
   val statsSchema: StructType = StructType(Seq(
@@ -39,18 +43,6 @@ object RqBridge {
     val stddev = math.sqrt(math.max(0.0, s(4) / n - mean * mean))
     InternalRow(s(0).toLong, s(1), s(2), s(3), s(4), mean, stddev)
   }
-
-  def statsOf(k: BandKernel, raw: Array[Byte]): InternalRow = statsRow(k.stats(raw))
-
-  def clipStatsOf(k: BandKernel, raw: Array[Byte], block: Long, geom: Geom): InternalRow =
-    statsRow(k.clipStats(raw, block, geom))
-
-  def decodeOf(k: BandKernel, raw: Array[Byte]): ArrayData =
-    ArrayData.toArrayData(k.decode(raw))
-
-  def contourOf(k: BandKernel, raw: Array[Byte], level: Double): ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      k.contour(raw, level).map(s => ArrayData.toArrayData(s): Any))
 
   /** Contour segments INCLUDING the cells that span into the east/south
     * neighbors, via the focal halo exchange: the padded grid supplies the
@@ -160,17 +152,6 @@ object RqBridge {
       p += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-
-  def ndiffOf(k: BandPairKernel, a: Array[Byte], b: Array[Byte]): ArrayData =
-    ArrayData.toArrayData(k.normalizedDifference(a, b))
-
-  def ndStatsOf(k: BandPairKernel, a: Array[Byte], b: Array[Byte]): InternalRow =
-    statsRow(k.ndStats(a, b))
-
-  def clipOf(k: BandKernel, raw: Array[Byte], block: Long, geom: Geom): ArrayData = {
-    val v = k.clip(raw, block, geom)
-    if (v == null) null else ArrayData.toArrayData(v)
   }
 
   def intersectsCell(geom: Geom, cell: Long): Boolean = {
@@ -734,12 +715,6 @@ object RqBridge {
   def polyfillDyn(wkt: String, z: Int, mode: String): ArrayData =
     ArrayData.toArrayData(graft.quadbin.Polyfill.cells(geomOf(wkt), z, mode))
 
-  /** Unpack the per-tile zone list (value, wkt) and burn it into a fresh
-    * band blob. Zone counts per tile are small (polyfill join), so the
-    * per-row WKT parse is bounded by the zone list, not the pixel count. */
-  def regionLabelOf(k: BandKernel, block: Long, raw: Array[Byte]): Array[Byte] =
-    k.regionLabel(block, raw)
-
   def regionStripsOf(k: BandKernel, block: Long,
       valRaw: Array[Byte]): ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -945,6 +920,9 @@ object RqBridge {
     k.gridStat(block, pxs, pys, vals, radius, mode)
   }
 
+  /** Unpack the per-tile zone list (value, wkt) and burn it into a fresh
+    * band blob. Zone counts per tile are small (polyfill join), so the
+    * per-row WKT parse is bounded by the zone list, not the pixel count. */
   def rasterizeOf(k: BandKernel, block: Long, zones: ArrayData): Array[Byte] = {
     val n = zones.numElements()
     val vals = new Array[Double](n)
@@ -957,16 +935,6 @@ object RqBridge {
       i += 1
     }
     k.rasterize(block, vals, geoms)
-  }
-
-  def clipStatsDyn(k: BandKernel, raw: Array[Byte], block: Long,
-      wkt: String): InternalRow =
-    statsRow(k.clipStats(raw, block, geomOf(wkt)))
-
-  def clipHistDyn(k: BandKernel, raw: Array[Byte], block: Long, wkt: String,
-      min: Double, max: Double, buckets: Int): ArrayData = {
-    val h = k.clipHistogram(raw, block, geomOf(wkt), min, max, buckets)
-    if (h == null) null else ArrayData.toArrayData(h)
   }
 
   /** Per-pixel OLS fit over a tile's time series: `series` is the sorted
@@ -1042,23 +1010,15 @@ object RqBridge {
     }
     ArrayData.toArrayData(out.toArray)
   }
-
-  val B = "org.apache.spark.sql.graft.RqBridge"
 }
 
 /** rq_decode(band) → ARRAY<DOUBLE> raw DN values (F10 + F7 gzip sniffing). */
-case class RqDecode(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqDecode(child: Expression, kernel: BandKernel) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_decode"
-  override protected def nullSafeEval(raw: Any): Any =
-    RqBridge.decodeOf(kernel, raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.decodeOf($k, $c)")
-  }
+  def compute(raw: Any): Any = ArrayData.toArrayData(kernel.decode(raw.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1067,20 +1027,12 @@ case class RqDecode(child: Expression, kernel: BandKernel)
   * mapped to its bin's class (ST_Reclass shape; left-closed bins, binary
   * search). The output composes with every blob kernel downstream. */
 case class RqReclassify(child: Expression, kernel: BandKernel,
-    breaks: Array[Double], classes: Array[Double])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    breaks: Array[Double], classes: Array[Double]) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_reclassify"
-  override protected def nullSafeEval(raw: Any): Any =
-    kernel.reclassify(raw.asInstanceOf[Array[Byte]], breaks, classes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = ctx.addReferenceObj("breaks", breaks, "double[]")
-    val c = ctx.addReferenceObj("classes", classes, "double[]")
-    defineCodeGen(ctx, ev, raw => s"$k.reclassify($raw, $b, $c)")
-  }
+  def compute(raw: Any): Any = kernel.reclassify(raw.asInstanceOf[Array[Byte]], breaks, classes)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1088,20 +1040,13 @@ case class RqReclassify(child: Expression, kernel: BandKernel,
   * linear DN rescale a·v + b re-encoded to `outDtype` (half-even rint +
   * range clamp for integer outputs), nodata → `outNodata`. No shuffle. */
 case class RqTranslate(child: Expression, kernel: BandKernel,
-    outDtype: String, outNodata: Double, a: Double, b: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    outDtype: String, outNodata: Double, a: Double, b: Double) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_translate"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     kernel.translate(raw.asInstanceOf[Array[Byte]], outDtype, outNodata, a, b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val nd = if (outNodata.isNaN) "Double.NaN" else s"${outNodata}D"
-    defineCodeGen(ctx, ev, raw =>
-      s"""$k.translate($raw, "$outDtype", $nd, ${a}D, ${b}D)""")
-  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1109,8 +1054,7 @@ case class RqTranslate(child: Expression, kernel: BandKernel,
   * M_i · P / ((M_i + M_j)/2) over physical values, NaN on any invalid
   * input; float64 gzip blob out ([[graft.raquet.Pansharpen.brovey]]). */
 case class RqBrovey(pan: Expression, mi: Expression, mj: Expression,
-    kp: BandKernel, ki: BandKernel, kj: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    kp: BandKernel, ki: BandKernel, kj: BandKernel) extends TernaryTileKernel {
   override def first: Expression = pan
   override def second: Expression = mi
   override def third: Expression = mj
@@ -1119,16 +1063,9 @@ case class RqBrovey(pan: Expression, mi: Expression, mj: Expression,
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_brovey"
-  override protected def nullSafeEval(p: Any, a: Any, b: Any): Any =
+  def compute(p: Any, a: Any, b: Any): Any =
     graft.raquet.Pansharpen.brovey(kp, ki, kj, p.asInstanceOf[Array[Byte]],
       a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("kp", kp, classOf[BandKernel].getName)
-    val i = ctx.addReferenceObj("ki", ki, classOf[BandKernel].getName)
-    val j = ctx.addReferenceObj("kj", kj, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (pn, a, b) =>
-      s"graft.raquet.Pansharpen.brovey($p, $i, $j, $pn, $a, $b)")
-  }
   override protected def withNewChildrenInternal(
       p: Expression, a: Expression, b: Expression): Expression =
     copy(pan = p, mi = a, mj = b)
@@ -1138,18 +1075,15 @@ case class RqBrovey(pan: Expression, mi: Expression, mj: Expression,
   * [x1,y1,x2,y2] marching-squares segments in fractional pixel
   * coordinates (the gdal_contour shape; see [[BandKernel.contour]]). */
 case class RqContour(child: Expression, kernel: BandKernel, level: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_contour"
-  override protected def nullSafeEval(raw: Any): Any =
-    RqBridge.contourOf(kernel, raw.asInstanceOf[Array[Byte]], level)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.contourOf($k, $c, ${level}D)")
-  }
+  def compute(raw: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      kernel.contour(raw.asInstanceOf[Array[Byte]], level).map(s => ArrayData.toArrayData(s): Any))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1157,64 +1091,29 @@ case class RqContour(child: Expression, kernel: BandKernel, level: Double)
   * segments INCLUDING cross-tile cells (halo-label contract of
   * [[RqFocalMean]]; see [[RqBridge.contourHaloOf]] for ownership). */
 case class RqFocalContour(band: Expression, halos: Expression,
-    kernel: BandKernel, level: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, RqBridge.haloType)
+    kernel: BandKernel, level: Double) extends HaloFocal {
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "rq_focal_contour"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.contourHaloOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], level)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.contourHaloOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, ${level}D);
-        }""")
-  }
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): Expression = copy(band = l, halos = r)
+  protected def focal(raw: Array[Byte], h: ArrayData): Any =
+    RqBridge.contourHaloOf(kernel, raw, h, level)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(band = l, halos = r)
 }
 
-/** rq_rasterize(block, zones) → band blob with each zone's value burned
-  * onto pixels whose center falls inside its geometry (max value wins on
-  * overlap, untouched pixels = nodata). `zones` is the per-tile
-  * ARRAY<STRUCT<value DOUBLE, wkt STRING>> a polyfill join + collect_list
-  * produces — the vector→raster half of the engine (gdal_rasterize shape,
-  * inverse of rq_clip). */
 /** rq_region_label(block, band) → float64 blob of per-tile 4-connected
   * equal-value component labels (global-pixel-id of each component's min
   * pixel; see [[graft.raquet.BandKernel.regionLabel]]). */
 case class RqRegionLabel(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_region_label"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionLabelOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionLabelOf($k, $b, $raw)")
-  }
+  def compute(b: Any, raw: Any): Any =
+    kernel.regionLabel(b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, band = r)
 }
@@ -1223,7 +1122,7 @@ case class RqRegionLabel(block: Expression, band: Expression, kernel: BandKernel
   * size table (see [[graft.raquet.BandKernel.regionSizes]]) — the
   * pixel-volume-free path for global region sizes. */
 case class RqRegionSizes(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
@@ -1237,12 +1136,8 @@ case class RqRegionSizes(block: Expression, band: Expression, kernel: BandKernel
     StructField("gy1", LongType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_region_sizes"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
+  def compute(b: Any, raw: Any): Any =
     RqBridge.regionSizesOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionSizesOf($k, $b, $raw)")
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, band = r)
 }
@@ -1252,7 +1147,7 @@ case class RqRegionSizes(block: Expression, band: Expression, kernel: BandKernel
   * [[graft.raquet.BandKernel.regionNeighbors]]) — the cross-value
   * neighbor graph the sieve APPLY step merges along. */
 case class RqRegionNeighbors(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
@@ -1261,13 +1156,8 @@ case class RqRegionNeighbors(block: Expression, band: Expression, kernel: BandKe
     StructField("lb", LongType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_region_neighbors"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionNeighborsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionNeighborsOf($k, $b, $raw)")
-  }
+  def compute(b: Any, raw: Any): Any =
+    RqBridge.regionNeighborsOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, band = r)
 }
@@ -1277,7 +1167,7 @@ case class RqRegionNeighbors(block: Expression, band: Expression, kernel: BandKe
   * [[graft.raquet.BandKernel.regionStrips]]); the cross-tile label-merge
   * edges come from equi-joining opposing strips. */
 case class RqRegionStrips(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
@@ -1288,13 +1178,8 @@ case class RqRegionStrips(block: Expression, band: Expression, kernel: BandKerne
     StructField("v", DoubleType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_region_strips"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionStripsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionStripsOf($k, $b, $raw)")
-  }
+  def compute(b: Any, raw: Any): Any =
+    RqBridge.regionStripsOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, band = r)
 }
@@ -1308,7 +1193,7 @@ case class RqRegionStrips(block: Expression, band: Expression, kernel: BandKerne
   * blob per consumer. */
 case class RqRegionAnalysis(block: Expression, band: Expression,
     kernel: BandKernel, withNeighbors: Boolean, withLabel: Boolean)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
@@ -1335,14 +1220,9 @@ case class RqRegionAnalysis(block: Expression, band: Expression,
     StructField("lab", BinaryType, nullable = true)))
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_region_analysis"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
+  def compute(b: Any, raw: Any): Any =
     RqBridge.regionAnalysisOf(kernel, b.asInstanceOf[Long],
       raw.asInstanceOf[Array[Byte]], withNeighbors, withLabel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) =>
-      s"${RqBridge.B}.regionAnalysisOf($k, $b, $raw, $withNeighbors, $withLabel)")
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, band = r)
 }
@@ -1351,8 +1231,7 @@ case class RqRegionAnalysis(block: Expression, band: Expression,
   * remap through an O(1) hash table (see [[RqBridge.labelRemapOf]]);
   * `asLong` picks BIGINT output (exact for labels < 2^53), else DOUBLE. */
 case class RqLabelRemap(lab: Expression, kv: Expression, kernel: BandKernel,
-    asLong: Boolean)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    asLong: Boolean) extends BinaryTileKernel {
   override def left: Expression = lab
   override def right: Expression = kv
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
@@ -1365,14 +1244,8 @@ case class RqLabelRemap(lab: Expression, kv: Expression, kernel: BandKernel,
     containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_label_remap"
-  override protected def nullSafeEval(l: Any, k: Any): Any =
-    RqBridge.labelRemapOf(kernel, l.asInstanceOf[Array[Byte]],
-      k.asInstanceOf[ArrayData], asLong)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (l, kv) =>
-      s"${RqBridge.B}.labelRemapOf($k, $l, $kv, $asLong)")
-  }
+  def compute(l: Any, k: Any): Any =
+    RqBridge.labelRemapOf(kernel, l.asInstanceOf[Array[Byte]], k.asInstanceOf[ArrayData], asLong)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(lab = l, kv = r)
 }
@@ -1382,7 +1255,7 @@ case class RqLabelRemap(lab: Expression, kv: Expression, kernel: BandKernel,
   * per pixel resolves two per-region attributes at once, both emitted as
   * exact longs. */
 case class RqLabelRemap2(lab: Expression, kv: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = lab
   override def right: Expression = kv
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
@@ -1397,14 +1270,8 @@ case class RqLabelRemap2(lab: Expression, kv: Expression, kernel: BandKernel)
     containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_label_remap2"
-  override protected def nullSafeEval(l: Any, k: Any): Any =
-    RqBridge.labelRemap2Of(kernel, l.asInstanceOf[Array[Byte]],
-      k.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (l, kv) =>
-      s"${RqBridge.B}.labelRemap2Of($k, $l, $kv)")
-  }
+  def compute(l: Any, k: Any): Any =
+    RqBridge.labelRemap2Of(kernel, l.asInstanceOf[Array[Byte]], k.asInstanceOf[ArrayData])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(lab = l, kv = r)
 }
@@ -1413,8 +1280,7 @@ case class RqLabelRemap2(lab: Expression, kv: Expression, kernel: BandKernel)
   * links for polygonize (see [[RqBridge.regionSegmentsOf]]). Halos use the
   * focal-exchange layout and may be NULL (isolated tile). */
 case class RqRegionSegments(block: Expression, band: Expression,
-    halos: Expression, kernel: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    halos: Expression, kernel: BandKernel) extends TernaryTileKernel {
   override def first: Expression = block
   override def second: Expression = band
   override def third: Expression = halos
@@ -1429,33 +1295,10 @@ case class RqRegionSegments(block: Expression, band: Expression,
     StructField("lab", LongType, nullable = false))), containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "rq_region_segments"
-  override def eval(input: InternalRow): Any = {
-    val b = block.eval(input)
-    val raw = band.eval(input)
-    if (b == null || raw == null) null
-    else RqBridge.regionSegmentsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val bl = block.genCode(ctx)
-    val bd = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${bl.code}
-        ${bd.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${bl.isNull} && !${bd.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.regionSegmentsOf($k, ${bl.value},
-            ${bd.value}, ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
+  override protected def optionalInputs: Set[Int] = Set(2)
+  def compute(b: Any, raw: Any, h: Any): Any =
+    RqBridge.regionSegmentsOf(kernel, b.asInstanceOf[Long],
+      raw.asInstanceOf[Array[Byte]], h.asInstanceOf[ArrayData])
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(block = f, band = s, halos = t)
 }
@@ -1465,8 +1308,7 @@ case class RqRegionSegments(block: Expression, band: Expression,
   * Points must arrive sorted by their id field — the accumulation chain
   * is array-order-deterministic so the oracle replays it bit-for-bit. */
 case class RqIdwGrid(block: Expression, points: Expression,
-    kernel: BandKernel, radius: Long)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandKernel, radius: Long) extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = points
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
@@ -1478,14 +1320,8 @@ case class RqIdwGrid(block: Expression, points: Expression,
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_idw_grid"
-  override protected def nullSafeEval(b: Any, ps: Any): Any =
-    RqBridge.idwGridOf(kernel, b.asInstanceOf[Long],
-      ps.asInstanceOf[ArrayData], radius)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, ps) =>
-      s"${RqBridge.B}.idwGridOf($k, $b, $ps, ${radius}L)")
-  }
+  def compute(b: Any, ps: Any): Any =
+    RqBridge.idwGridOf(kernel, b.asInstanceOf[Long], ps.asInstanceOf[ArrayData], radius)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, points = r)
 }
@@ -1493,18 +1329,12 @@ case class RqIdwGrid(block: Expression, points: Expression,
 /** rq_mask_range(band) → float64 blob: v ∈ [lo, hi) → NaN, nodata → NaN,
   * else pass-through (see [[graft.raquet.BandKernel.maskRange]]). */
 case class RqMaskRange(child: Expression, kernel: BandKernel,
-    lo: Double, hi: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    lo: Double, hi: Double) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_mask_range"
-  override protected def nullSafeEval(raw: Any): Any =
-    kernel.maskRange(raw.asInstanceOf[Array[Byte]], lo, hi)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, raw => s"$k.maskRange($raw, $lo, $hi)")
-  }
+  def compute(raw: Any): Any = kernel.maskRange(raw.asInstanceOf[Array[Byte]], lo, hi)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -1512,8 +1342,7 @@ case class RqMaskRange(child: Expression, kernel: BandKernel,
 /** rq_temporal_fill(stack) — linear time-axis gap fill of one block's
   * sorted (t, blob) stack (see [[graft.raquet.BandKernel.temporalFill]]);
   * returns (t, float64 blob) pairs in the same order. */
-case class RqTemporalFill(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqTemporalFill(child: Expression, kernel: BandKernel) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(
     ArrayType(StructType(Seq(
       StructField("t", DoubleType, nullable = false),
@@ -1523,12 +1352,7 @@ case class RqTemporalFill(child: Expression, kernel: BandKernel)
     StructField("vals", BinaryType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_temporal_fill"
-  override protected def nullSafeEval(stack: Any): Any =
-    RqBridge.temporalFillOf(kernel, stack.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, stack => s"${RqBridge.B}.temporalFillOf($k, $stack)")
-  }
+  def compute(stack: Any): Any = RqBridge.temporalFillOf(kernel, stack.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -1536,8 +1360,7 @@ case class RqTemporalFill(child: Expression, kernel: BandKernel)
 /** rq_theilsen_mk(stack) — Theil–Sen median slope + Mann–Kendall S/tau
   * along one block's sorted (t, blob) stack (see
   * [[graft.raquet.BandKernel.theilSenMk]]). */
-case class RqTheilSenMk(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqTheilSenMk(child: Expression, kernel: BandKernel) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(
     ArrayType(StructType(Seq(
       StructField("t", DoubleType, nullable = false),
@@ -1548,12 +1371,7 @@ case class RqTheilSenMk(child: Expression, kernel: BandKernel)
     StructField("tau", BinaryType, nullable = false)))
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_theilsen_mk"
-  override protected def nullSafeEval(stack: Any): Any =
-    RqBridge.theilSenMkOf(kernel, stack.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, stack => s"${RqBridge.B}.theilSenMkOf($k, $stack)")
-  }
+  def compute(stack: Any): Any = RqBridge.theilSenMkOf(kernel, stack.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -1564,8 +1382,7 @@ case class RqTheilSenMk(child: Expression, kernel: BandKernel)
   * their id field — the average chain is array-order-deterministic and
   * nearest ties resolve to the first (= lowest-id) point. */
 case class RqGridStat(block: Expression, points: Expression,
-    kernel: BandKernel, radius: Long, mode: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandKernel, radius: Long, mode: Int) extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = points
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
@@ -1577,20 +1394,20 @@ case class RqGridStat(block: Expression, points: Expression,
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_grid_stat"
-  override protected def nullSafeEval(b: Any, ps: Any): Any =
-    RqBridge.gridStatOf(kernel, b.asInstanceOf[Long],
-      ps.asInstanceOf[ArrayData], radius, mode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, ps) =>
-      s"${RqBridge.B}.gridStatOf($k, $b, $ps, ${radius}L, $mode)")
-  }
+  def compute(b: Any, ps: Any): Any =
+    RqBridge.gridStatOf(kernel, b.asInstanceOf[Long], ps.asInstanceOf[ArrayData], radius, mode)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, points = r)
 }
 
+/** rq_rasterize(block, zones) → band blob with each zone's value burned
+  * onto pixels whose center falls inside its geometry (max value wins on
+  * overlap, untouched pixels = nodata). `zones` is the per-tile
+  * ARRAY<STRUCT<value DOUBLE, wkt STRING>> a polyfill join + collect_list
+  * produces — the vector→raster half of the engine (gdal_rasterize shape,
+  * inverse of rq_clip). */
 case class RqRasterize(block: Expression, zones: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = block
   override def right: Expression = zones
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
@@ -1600,12 +1417,8 @@ case class RqRasterize(block: Expression, zones: Expression, kernel: BandKernel)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_rasterize"
-  override protected def nullSafeEval(b: Any, zs: Any): Any =
+  def compute(b: Any, zs: Any): Any =
     RqBridge.rasterizeOf(kernel, b.asInstanceOf[Long], zs.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, zs) => s"${RqBridge.B}.rasterizeOf($k, $b, $zs)")
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(block = l, zones = r)
 }
@@ -1615,21 +1428,13 @@ case class RqRasterize(block: Expression, zones: Expression, kernel: BandKernel)
   * tiles give exact dataset-level distributions/percentiles without a
   * global sort — the mergeable-sketch shape, exact for bounded DN ranges. */
 case class RqHistogram(child: Expression, kernel: BandKernel,
-    min: Double, max: Double, buckets: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    min: Double, max: Double, buckets: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_histogram"
-  override protected def nullSafeEval(raw: Any): Any =
-    ArrayData.toArrayData(
-      kernel.histogram(raw.asInstanceOf[Array[Byte]], min, max, buckets))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, raw =>
-      s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-        s"$k.histogram($raw, $min, $max, $buckets))")
-  }
+  def compute(raw: Any): Any =
+    ArrayData.toArrayData(kernel.histogram(raw.asInstanceOf[Array[Byte]], min, max, buckets))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1638,19 +1443,15 @@ case class RqHistogram(child: Expression, kernel: BandKernel,
   * pyramid's 2×2-average reduce. Composes with quadbin_from_tile bit math
   * for the child cell ids; see [[graft.raquet.Pyramid.upsampleLevel]]. */
 case class RqChildTile(band: Expression, quadrant: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = band
   override def right: Expression = quadrant
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_child_tile"
-  override protected def nullSafeEval(raw: Any, q: Any): Any =
+  def compute(raw: Any, q: Any): Any =
     kernel.childTile(raw.asInstanceOf[Array[Byte]], q.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (raw, q) => s"$k.childTile($raw, $q)")
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, quadrant = r)
 }
@@ -1660,37 +1461,18 @@ case class RqChildTile(band: Expression, quadrant: Expression, kernel: BandKerne
   * other side's blob through BYTE-IDENTICAL (no decode/re-encode), so
   * single-source regions of a mosaic cost nothing per tile. */
 case class RqComposite(a: Expression, b: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = a
   override def right: Expression = b
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = a.nullable && b.nullable
   override def prettyName: String = "rq_composite"
-  override def eval(input: InternalRow): Any = {
-    val ra = a.eval(input)
-    val rb = b.eval(input)
+  override protected def optionalInputs: Set[Int] = Set(0, 1)
+  def compute(ra: Any, rb: Any): Any =
     if (ra == null) rb
     else if (rb == null) ra
     else kernel.composite(ra.asInstanceOf[Array[Byte]], rb.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val ea = a.genCode(ctx)
-    val eb = b.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ea.code}
-        ${eb.code}
-        boolean ${ev.isNull} = ${ea.isNull} && ${eb.isNull};
-        byte[] ${ev.value} = null;
-        if (!${ev.isNull}) {
-          if (${ea.isNull}) { ${ev.value} = ${eb.value}; }
-          else if (${eb.isNull}) { ${ev.value} = ${ea.value}; }
-          else { ${ev.value} = $k.composite(${ea.value}, ${eb.value}); }
-        }
-      """)
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(a = l, b = r)
 }
@@ -1698,32 +1480,12 @@ case class RqComposite(a: Expression, b: Expression, kernel: BandKernel)
 /** rq_summary_stats(band) → stats struct over valid pixels (A1); null for
   * empty tiles. The partial-merge fields (count/sum/sum_sq) make the output
   * directly mergeable by [[graft.operators.StatsMerge]] (A3). */
-case class RqSummaryStats(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqSummaryStats(child: Expression, kernel: BandKernel) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = RqBridge.statsSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_summary_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    if (raw == null) null
-    else RqBridge.statsOf(kernel, raw.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val c = child.genCode(ctx)
-    val row = ctx.freshName("statsRow")
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${c.isNull}) {
-          InternalRow $row = ${RqBridge.B}.statsOf($k, ${c.value});
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(raw: Any): Any = RqBridge.statsRow(kernel.stats(raw.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1731,8 +1493,7 @@ case class RqSummaryStats(child: Expression, kernel: BandKernel)
   * NULL outside the tile / at nodata pixels. */
 case class RqRasterValue(
     band: Expression, block: Expression, lon: Expression, lat: Expression,
-    kernel: BandKernel)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
+    kernel: BandKernel) extends QuaternaryTileKernel {
   override def first: Expression = band
   override def second: Expression = block
   override def third: Expression = lon
@@ -1742,20 +1503,10 @@ case class RqRasterValue(
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "rq_raster_value"
-  override protected def nullSafeEval(b: Any, blk: Any, x: Any, y: Any): Any = {
+  def compute(b: Any, blk: Any, x: Any, y: Any): Any = {
     val v = kernel.valueAt(b.asInstanceOf[Array[Byte]], blk.asInstanceOf[Long],
       x.asInstanceOf[Double], y.asInstanceOf[Double])
     if (java.lang.Double.isNaN(v)) null else v
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    nullSafeCodeGen(ctx, ev, (b, blk, x, y) => {
-      val v = ctx.freshName("v")
-      s"""
-         |double $v = $k.valueAt($b, $blk, $x, $y);
-         |if (Double.isNaN($v)) { ${ev.isNull} = true; } else { ${ev.value} = $v; }
-       """.stripMargin
-    })
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
@@ -1766,8 +1517,7 @@ case class RqRasterValue(
   * valid pixels whose center is inside the geometry (F13+A1, the per-tile
   * half of ST_RegionStats); null when the tile misses the geometry. */
 case class RqClipStats(band: Expression, block: Expression,
-    kernel: BandKernel, wkt: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandKernel, wkt: String) extends BinaryTileKernel {
   @transient private lazy val geom: Geom = Wkt.parse(wkt)
   override def left: Expression = band
   override def right: Expression = block
@@ -1775,31 +1525,8 @@ case class RqClipStats(band: Expression, block: Expression,
   override def dataType: DataType = RqBridge.statsSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_clip_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    if (raw == null || blk == null) null
-    else RqBridge.clipStatsOf(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], geom)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val row = ctx.freshName("clipRow")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull}) {
-          InternalRow $row = ${RqBridge.B}.clipStatsOf($k, ${b.value}, ${blk.value}, $g);
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(raw: Any, blk: Any): Any =
+    RqBridge.statsRow(kernel.clipStats(raw.asInstanceOf[Array[Byte]], blk.asInstanceOf[Long], geom))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, block = r)
 }
@@ -1809,8 +1536,7 @@ case class RqClipStats(band: Expression, block: Expression,
   * or the pixel is nodata (ST_Clip, `docs/engines.md:48`); NULL when the tile
   * misses the geometry entirely. */
 case class RqClip(band: Expression, block: Expression,
-    kernel: BandKernel, wkt: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandKernel, wkt: String) extends BinaryTileKernel {
   @transient private lazy val geom: Geom = Wkt.parse(wkt)
   override def left: Expression = band
   override def right: Expression = block
@@ -1818,31 +1544,9 @@ case class RqClip(band: Expression, block: Expression,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "rq_clip"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    if (raw == null || blk == null) null
-    else RqBridge.clipOf(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], geom)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val arr = ctx.freshName("clipArr")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull}) {
-          org.apache.spark.sql.catalyst.util.ArrayData $arr =
-            ${RqBridge.B}.clipOf($k, ${b.value}, ${blk.value}, $g);
-          if ($arr != null) { ${ev.isNull} = false; ${ev.value} = $arr; }
-        }
-      """)
+  def compute(raw: Any, blk: Any): Any = {
+    val v = kernel.clip(raw.asInstanceOf[Array[Byte]], blk.asInstanceOf[Long], geom)
+    if (v == null) null else ArrayData.toArrayData(v)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, block = r)
@@ -1863,7 +1567,7 @@ case class RqPolyfillDyn(wkt: Expression, zoom: Expression, mode: String)
     RqBridge.polyfillDyn(w.toString, z.asInstanceOf[Int], mode)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (w, z) =>
-      s"""${RqBridge.B}.polyfillDyn($w.toString(), $z, "$mode")""")
+      s"""org.apache.spark.sql.graft.RqBridge.polyfillDyn($w.toString(), $z, "$mode")""")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(wkt = l, zoom = r)
 }
@@ -1874,8 +1578,7 @@ case class RqPolyfillDyn(wkt: Expression, zoom: Expression, mode: String)
   * distributions and percentiles (zonal median) without sorting pixels. */
 case class RqClipHistDyn(band: Expression, block: Expression,
     wkt: Expression, kernel: BandKernel, min: Double, max: Double,
-    buckets: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    buckets: Int) extends TernaryTileKernel {
   override def first: Expression = band
   override def second: Expression = block
   override def third: Expression = wkt
@@ -1884,33 +1587,10 @@ case class RqClipHistDyn(band: Expression, block: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "rq_clip_histogram"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    val w = wkt.eval(input)
-    if (raw == null || blk == null || w == null) null
-    else RqBridge.clipHistDyn(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], w.toString, min, max, buckets)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val w = wkt.genCode(ctx)
-    val arr = ctx.freshName("zonalHist")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        ${w.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull} && !${w.isNull}) {
-          org.apache.spark.sql.catalyst.util.ArrayData $arr = ${RqBridge.B}.clipHistDyn(
-            $k, ${b.value}, ${blk.value}, ${w.value}.toString(), $min, $max, $buckets);
-          if ($arr != null) { ${ev.isNull} = false; ${ev.value} = $arr; }
-        }
-      """)
+  def compute(raw: Any, blk: Any, w: Any): Any = {
+    val h = kernel.clipHistogram(raw.asInstanceOf[Array[Byte]], blk.asInstanceOf[Long],
+      RqBridge.geomOf(w.toString), min, max, buckets)
+    if (h == null) null else ArrayData.toArrayData(h)
   }
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(band = f, block = s, wkt = t)
@@ -1919,8 +1599,7 @@ case class RqClipHistDyn(band: Expression, block: Expression,
 /** rq_temporal_fit(series) → per-pixel OLS (slope[], intercept[]) blobs
   * over a tile's sorted time series — pixel-level change detection (trend
   * maps). One expression per block, post-aggregation, fully parallel. */
-case class RqTemporalFit(series: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqTemporalFit(series: Expression, kernel: BandKernel) extends UnaryTileKernel {
   override def child: Expression = series
   override def inputTypes: Seq[AbstractDataType] = Seq(
     ArrayType(StructType(Seq(
@@ -1929,12 +1608,7 @@ case class RqTemporalFit(series: Expression, kernel: BandKernel)
   override def dataType: DataType = RqBridge.temporalFitSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_temporal_fit"
-  override protected def nullSafeEval(s: Any): Any =
-    RqBridge.temporalFitOf(kernel, s.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, s => s"${RqBridge.B}.temporalFitOf($k, $s)")
-  }
+  def compute(s: Any): Any = RqBridge.temporalFitOf(kernel, s.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(series = c)
 }
@@ -1958,7 +1632,7 @@ case class StContains(wkt: Expression, lon: Expression, lat: Expression)
       .containsPoint(x.asInstanceOf[Double], y.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (w, x, y) =>
-      s"${RqBridge.B}.geomOf($w.toString()).containsPoint($x, $y)")
+      s"org.apache.spark.sql.graft.RqBridge.geomOf($w.toString()).containsPoint($x, $y)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(wkt = f, lon = s, lat = t)
 }
@@ -1968,8 +1642,7 @@ case class StContains(wkt: Expression, lon: Expression, lat: Expression)
   * collect_list-per-tile shape rq_rasterize uses). */
 case class RqZonalHists(band: Expression, block: Expression,
     zones: Expression, kernel: BandKernel, min: Double, max: Double,
-    buckets: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    buckets: Int) extends TernaryTileKernel {
   override def first: Expression = band
   override def second: Expression = block
   override def third: Expression = zones
@@ -1983,14 +1656,9 @@ case class RqZonalHists(band: Expression, block: Expression,
     containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_zonal_histograms"
-  override protected def nullSafeEval(raw: Any, blk: Any, zs: Any): Any =
+  def compute(raw: Any, blk: Any, zs: Any): Any =
     RqBridge.zonalHistsOf(kernel, raw.asInstanceOf[Array[Byte]],
       blk.asInstanceOf[Long], zs.asInstanceOf[ArrayData], min, max, buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (raw, blk, zs) =>
-      s"${RqBridge.B}.zonalHistsOf($k, $raw, $blk, $zs, $min, $max, $buckets)")
-  }
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(band = f, block = s, zones = t)
 }
@@ -2000,8 +1668,7 @@ case class RqZonalHists(band: Expression, block: Expression,
   * center falls inside. Same interior fast path (fused stats, no
   * point-in-polygon loop) via the shared kernel. */
 case class RqClipStatsDyn(band: Expression, block: Expression,
-    wkt: Expression, kernel: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    wkt: Expression, kernel: BandKernel) extends TernaryTileKernel {
   override def first: Expression = band
   override def second: Expression = block
   override def third: Expression = wkt
@@ -2010,77 +1677,29 @@ case class RqClipStatsDyn(band: Expression, block: Expression,
   override def dataType: DataType = RqBridge.statsSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_clip_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    val w = wkt.eval(input)
-    if (raw == null || blk == null || w == null) null
-    else RqBridge.clipStatsDyn(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], w.toString)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val w = wkt.genCode(ctx)
-    val row = ctx.freshName("zonalStats")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        ${w.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull} && !${w.isNull}) {
-          InternalRow $row = ${RqBridge.B}.clipStatsDyn(
-            $k, ${b.value}, ${blk.value}, ${w.value}.toString());
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(raw: Any, blk: Any, w: Any): Any =
+    RqBridge.statsRow(kernel.clipStats(raw.asInstanceOf[Array[Byte]],
+      blk.asInstanceOf[Long], RqBridge.geomOf(w.toString)))
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(band = f, block = s, wkt = t)
 }
 
 /** The shared shape of the focal operators over (band blob, halo strips):
-  * a NULL band gives NULL, a NULL halo list means an empty halo, and the
-  * value is `RqBridge.<bridge>(kernel, band, halos, args...)` on both the
-  * interpreted and the generated path. */
-trait HaloFocal extends BinaryExpression with ImplicitCastInputTypes {
+  * a NULL band gives NULL, and a NULL halo list reaches the kernel as an
+  * empty halo. */
+trait HaloFocal extends BinaryTileKernel {
   def band: Expression
   def halos: Expression
   def kernel: BandKernel
-  protected def bridge: String
-  /** Plan-time trailing arguments of the bridge call. */
-  protected def args: Seq[Any] = Nil
-  protected def compute(raw: Array[Byte], h: ArrayData): Any
+  /** The value over the band blob and the (possibly null) halo list. */
+  protected def focal(raw: Array[Byte], h: ArrayData): Any
   override def left: Expression = band
   override def right: Expression = halos
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, RqBridge.haloType)
   override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else compute(raw.asInstanceOf[Array[Byte]], halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    val extra = args.map(a => s", $a").mkString
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.$bridge($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}$extra);
-        }
-      """)
-  }
+  override protected def optionalInputs: Set[Int] = Set(1)
+  final def compute(raw: Any, h: Any): Any =
+    focal(raw.asInstanceOf[Array[Byte]], h.asInstanceOf[ArrayData])
 }
 
 /** rq_focal_mean(band, halos) → float64 band BLOB of 3×3 neighborhood
@@ -2092,8 +1711,7 @@ trait HaloFocal extends BinaryExpression with ImplicitCastInputTypes {
 case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_focal_mean"
-  protected def bridge: String = "focalOf"
-  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.focalOf(kernel, raw, h)
+  protected def focal(raw: Array[Byte], h: ArrayData): Any = RqBridge.focalOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2104,8 +1722,7 @@ case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel) 
 case class RqFillNodata(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_fill_nodata"
-  protected def bridge: String = "fillOf"
-  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.fillOf(kernel, raw, h)
+  protected def focal(raw: Array[Byte], h: ArrayData): Any = RqBridge.fillOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2113,17 +1730,13 @@ case class RqFillNodata(band: Expression, halos: Expression, kernel: BandKernel)
 /** rq_chamfer_seed(band) → float64 blob: 0 at target-valued valid pixels,
   * +∞ elsewhere (see [[RqBridge.chamferSeedOf]]). */
 case class RqChamferSeed(band: Expression, kernel: BandKernel, target: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def child: Expression = band
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_chamfer_seed"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     RqBridge.chamferSeedOf(kernel, raw.asInstanceOf[Array[Byte]], target)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.chamferSeedOf($k, $c, $target)")
-  }
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(band = c)
 }
@@ -2135,8 +1748,7 @@ case class RqChamferRelax(band: Expression, halos: Expression, kernel: BandKerne
     extends HaloFocal {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_chamfer_relax"
-  protected def bridge: String = "chamferRelaxOf"
-  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+  protected def focal(raw: Array[Byte], h: ArrayData): Any =
     RqBridge.chamferRelaxOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
@@ -2149,9 +1761,7 @@ case class RqFocalSlope(band: Expression, halos: Expression,
     kernel: BandKernel, cell: Double, zt: Boolean = false) extends HaloFocal {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_focal_slope"
-  protected def bridge: String = "slopeOf"
-  override protected def args: Seq[Any] = Seq(cell, zt)
-  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+  protected def focal(raw: Array[Byte], h: ArrayData): Any =
     RqBridge.slopeOf(kernel, raw, h, cell, zt)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
@@ -2164,9 +1774,7 @@ case class RqFocalHillshadeMd(band: Expression, halos: Expression,
     kernel: BandKernel, cell: Double, altitudeDeg: Double) extends HaloFocal {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "rq_focal_hillshade_md"
-  protected def bridge: String = "hillshadeMdOf"
-  override protected def args: Seq[Any] = Seq(cell, altitudeDeg)
-  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+  protected def focal(raw: Array[Byte], h: ArrayData): Any =
     RqBridge.hillshadeMdOf(kernel, raw, h, cell, altitudeDeg)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
@@ -2179,9 +1787,7 @@ case class RqFocalTerrain(band: Expression, halos: Expression,
     kernel: BandKernel, cell: Double, azimuthDeg: Double, altitudeDeg: Double) extends HaloFocal {
   override def dataType: DataType = RqBridge.terrainSchema
   override def prettyName: String = "rq_focal_terrain"
-  protected def bridge: String = "terrainOf"
-  override protected def args: Seq[Any] = Seq(cell, azimuthDeg, altitudeDeg)
-  protected def compute(raw: Array[Byte], h: ArrayData): Any =
+  protected def focal(raw: Array[Byte], h: ArrayData): Any =
     RqBridge.terrainOf(kernel, raw, h, cell, azimuthDeg, altitudeDeg)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
@@ -2190,8 +1796,7 @@ case class RqFocalTerrain(band: Expression, halos: Expression,
 /** rq_color_relief(band) → struct of r/g/b uint8 band blobs mapped
   * through a plan-time color ramp (see [[RqBridge.colorReliefOf]]). */
 case class RqColorRelief(child: Expression, kernel: BandKernel,
-    breaks: Seq[Double], colors: Seq[(Int, Int, Int)])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    breaks: Seq[Double], colors: Seq[(Int, Int, Int)]) extends UnaryTileKernel {
   require(breaks.nonEmpty && breaks.length == colors.length,
     s"ramp needs one color per break: ${breaks.length} vs ${colors.length}")
   require(breaks.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
@@ -2203,19 +1808,8 @@ case class RqColorRelief(child: Expression, kernel: BandKernel,
   override def dataType: DataType = RqBridge.colorReliefSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_color_relief"
-  override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    if (raw == null) null
-    else RqBridge.colorReliefOf(kernel, raw.asInstanceOf[Array[Byte]],
-      breaksArr, colorsArr)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val br = ctx.addReferenceObj("breaks", breaksArr, "double[]")
-    val co = ctx.addReferenceObj("colors", colorsArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, raw =>
-      s"${ev.value} = ${RqBridge.B}.colorReliefOf($k, $raw, $br, $co);")
-  }
+  def compute(raw: Any): Any =
+    RqBridge.colorReliefOf(kernel, raw.asInstanceOf[Array[Byte]], breaksArr, colorsArr)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -2226,8 +1820,7 @@ case class RqColorRelief(child: Expression, kernel: BandKernel,
 case class RqFocalTpi(band: Expression, halos: Expression, kernel: BandKernel) extends HaloFocal {
   override def dataType: DataType = RqBridge.tpiSchema
   override def prettyName: String = "rq_focal_tpi"
-  protected def bridge: String = "tpiOf"
-  protected def compute(raw: Array[Byte], h: ArrayData): Any = RqBridge.tpiOf(kernel, raw, h)
+  protected def focal(raw: Array[Byte], h: ArrayData): Any = RqBridge.tpiOf(kernel, raw, h)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, halos = r)
 }
@@ -2237,58 +1830,28 @@ case class RqFocalTpi(band: Expression, halos: Expression, kernel: BandKernel) e
   * `docs/engines.md:100`) — one fused pass, no intermediate ND array; NULL
   * when no pixel pair is valid. */
 case class RqNdStats(left: Expression, right: Expression, kernel: BandPairKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = RqBridge.statsSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_normalized_difference_stats"
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) null
-    else RqBridge.ndStatsOf(kernel, a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    val a = left.genCode(ctx)
-    val b = right.genCode(ctx)
-    val row = ctx.freshName("ndStatsRow")
-    ev.copy(code =
-      code"""
-        ${a.code}
-        ${b.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${a.isNull} && !${b.isNull}) {
-          InternalRow $row = ${RqBridge.B}.ndStatsOf($k, ${a.value}, ${b.value});
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(a: Any, b: Any): Any =
+    RqBridge.statsRow(kernel.ndStats(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]]))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-/** rq_normalized_difference(band_a, band_b) → ARRAY<DOUBLE> of
-  * (a-b)/(a+b) over physical values (F14, NDVI); NaN where invalid. */
 /** rq_band_math(a, b) with a plan-time op → per-pixel ARRAY<DOUBLE> over
   * physical values (add/sub/mul/div/ratio/min/max) — generic map algebra
   * completing the ND/clip family. */
 case class RqBandMath(left: Expression, right: Expression,
-    kernel: BandPairKernel, op: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandPairKernel, op: String) extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_band_math"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayData.toArrayData(kernel.bandMath(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($k.bandMath($a, $b, "$op"))""")
-  }
+  def compute(a: Any, b: Any): Any = ArrayData.toArrayData(
+    kernel.bandMath(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -2297,54 +1860,27 @@ case class RqBandMath(left: Expression, right: Expression,
   * one fused pass (the decode-then-select shape every scale query should
   * use; the pixel-returning twin is [[RqBandMath]]). */
 case class RqBandMathStats(left: Expression, right: Expression,
-    kernel: BandPairKernel, op: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandPairKernel, op: String) extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = RqBridge.statsSchema
   override def nullable: Boolean = true
   override def prettyName: String = "rq_band_math_stats"
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) null
-    else RqBridge.statsRow(kernel.bandMathStats(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    val a = left.genCode(ctx)
-    val b = right.genCode(ctx)
-    val row = ctx.freshName("bmStats")
-    ev.copy(code =
-      code"""
-        ${a.code}
-        ${b.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${a.isNull} && !${b.isNull}) {
-          InternalRow $row = ${RqBridge.B}.statsRow(
-            $k.bandMathStats(${a.value}, ${b.value}, "$op"));
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
+  def compute(a: Any, b: Any): Any = RqBridge.statsRow(
+    kernel.bandMathStats(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
+/** rq_normalized_difference(band_a, band_b) → ARRAY<DOUBLE> of
+  * (a-b)/(a+b) over physical values (F14, NDVI); NaN where invalid. */
 case class RqNormalizedDifference(left: Expression, right: Expression,
-    kernel: BandPairKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    kernel: BandPairKernel) extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_normalized_difference"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RqBridge.ndiffOf(kernel, a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"${RqBridge.B}.ndiffOf($k, $a, $b)")
-  }
+  def compute(a: Any, b: Any): Any = ArrayData.toArrayData(
+    kernel.normalizedDifference(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]]))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -2386,7 +1922,7 @@ case class QuadbinIntersects(child: Expression, wkt: String,
     RqBridge.intersectsCell(geom, cell.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.intersectsCell($g, $c)")
+    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.RqBridge.intersectsCell($g, $c)")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

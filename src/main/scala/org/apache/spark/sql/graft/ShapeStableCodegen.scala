@@ -62,6 +62,19 @@ object BlockRanges {
     case _ => None
   }
 
+  /** The most OR legs a pushed scan filter may have: parquet source filters
+    * stop translating past about 64. */
+  val MaxLegs = 64
+
+  /** Sorted `spans` with neighbouring pairs merged until at most [[MaxLegs]]
+    * remain: a sorted superset of every span, for scan pushdown. */
+  def capped(spans: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    var out = spans.toIndexedSeq
+    while (out.length > MaxLegs)
+      out = out.grouped(2).map(g => (g.head._1, g.last._2)).toIndexedSeq
+    out
+  }
+
   /** Sorted, disjoint, non-adjacent spans covering exactly the legs. */
   def union(legs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val out = ArrayBuffer.empty[(Long, Long)]

@@ -77,6 +77,16 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
       .data.select("block", "band_1_count")
   }
 
+  /** Plan-time kernel constants that differ at every position: a histogram
+    * range, a contour level and a mask interval. */
+  private def kernelConstants(s: SparkSession, i: Int): DataFrame = {
+    val ds = RaquetIO.read(s, fixture)
+    ds.data.select(col("block"),
+      rq_histogram(col("band_1"), ds.meta, "band_1", -0.5 - i, 255.5 + i, 16).as("h"),
+      rq_contour(col("band_1"), ds.meta, "band_1", 100.5 + i).as("c"),
+      sha2(rq_mask_range(col("band_1"), ds.meta, "band_1", 50.0 + i, 150.0 + i), 256).as("m"))
+  }
+
   /** Small squares inside every tile with even x and y over 20×20 tiles
     * around the fixture: 100 cells, no two Morton-adjacent, so 100 ranges. */
   private val sparseWkt: String = {
@@ -88,7 +98,8 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
   private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   private val kinds: Seq[(String, (SparkSession, Int) => DataFrame)] =
-    Seq("point" -> point, "region stats" -> regionStats, "readRegion" -> region)
+    Seq("point" -> point, "region stats" -> regionStats, "readRegion" -> region,
+      "kernel constants" -> kernelConstants)
 
   // each mode measures at positions no earlier query used: the class cache
   // is shared by every session in the JVM
@@ -168,6 +179,22 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
     val row = UnsafeProjection.create(Seq(BindReferences.bindReference(e,
       AttributeSeq(Seq(a, b)))))(InternalRow(v, 0L))
     if (row.isNullAt(0)) null else row.get(0, e.dataType)
+  }
+
+  test("capped spans are sorted, within the leg cap, and cover every input span") {
+    val point = Gen.frequency(4 -> Gen.choose(-5000L, 5000L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue), 1 -> Gen.choose(Long.MinValue, Long.MaxValue))
+    // sorted disjoint spans from sorted distinct points, 0 to 300 of them
+    val spans = Gen.choose(0, 600).flatMap(n => Gen.listOfN(n, point))
+      .map(_.distinct.sorted.grouped(2).collect { case Seq(lo, hi) => (lo, hi) }.toSeq)
+    forAll(spans, 100) { in =>
+      val out = BlockRanges.capped(in)
+      assert(out.length <= BlockRanges.MaxLegs)
+      assert(out.forall(s => s._1 <= s._2))
+      assert(out.iterator.zip(out.iterator.drop(1)).forall { case (p, n) => p._2 < n._1 })
+      assert(in.forall(s => out.exists(o => o._1 <= s._1 && s._2 <= o._2)))
+      if (in.length <= BlockRanges.MaxLegs) assert(out == in)
+    }
   }
 
   test("closed legs, OR-ed or alone, become one in-ranges of the same value, nulls included") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Viewshed
@@ -14,6 +15,60 @@ import graft.raquet.{BandKernel, FixtureGen, PixelCodec}
 class ViewshedSpec extends SparkSpec {
 
   private val bs = 16
+
+  /** The relational formulation the kernel path replaced, kept as this
+    * spec's equivalence oracle: every sample coordinate and blocking
+    * verdict is the same IEEE arithmetic, but it shuffles the O(R³) sample
+    * table the kernel path avoids. */
+  private def viewshedReference(data: DataFrame, kernel: BandKernel,
+      band: String, observers: DataFrame, z: Int, radius: Int): DataFrame = {
+    val pix = Viewshed.diskPixels(data, kernel, band, observers, z, radius).persist()
+
+    // observer eye elevation: ground + oh (NULL ground → NULL verdicts)
+    val obsGround = pix.join(broadcast(observers
+        .select(col("ox").as("gx"), col("oy").as("gy"))),
+        Seq("gx", "gy"), "left_semi")
+    val obsH = observers.join(broadcast(obsGround),
+        observers("ox") === obsGround("gx") &&
+          observers("oy") === obsGround("gy"), "left")
+      .select(observers("oid"), col("ox"), col("oy"),
+        (col("e") + col("oh")).as("ho"))
+
+    // every target offset in the Chebyshev ring, with its ground elevation
+    val pixT = pix.select(col("gx").as("tx"), col("gy").as("ty"),
+      col("e").as("et"))
+    val tgt = obsH
+      .withColumn("dx", explode(sequence(lit(-radius), lit(radius))))
+      .withColumn("dy", explode(sequence(lit(-radius), lit(radius))))
+      .filter(!(col("dx") === 0 && col("dy") === 0))
+      .withColumn("n", greatest(abs(col("dx")), abs(col("dy"))))
+      .withColumn("tx", col("ox") + col("dx"))
+      .withColumn("ty", col("oy") + col("dy"))
+      .join(pixT.hint("shuffle_hash"), Seq("tx", "ty"), "left")
+
+    // intermediate sightline samples: nearest lattice point at parameter
+    // k/n; the blocking test cross-multiplies the two angles' rise/run so
+    // every verdict is integer-exact (nodata samples never block)
+    val pixS = pix.select(col("gx").as("sx"), col("gy").as("sy"),
+      col("e").as("es"))
+    val blockedBy = tgt.filter(col("n") >= 2)
+      .withColumn("k", explode(sequence(lit(1), col("n") - 1)))
+      .withColumn("sx", col("ox") + floor(
+        col("k") * col("dx") / col("n") + lit(0.5)))
+      .withColumn("sy", col("oy") + floor(
+        col("k") * col("dy") / col("n") + lit(0.5)))
+      .join(pixS.hint("shuffle_hash"), Seq("sx", "sy"))
+      .withColumn("blk", col("es").isNotNull && col("et").isNotNull &&
+        col("ho").isNotNull &&
+        (col("es") - col("ho")) * col("n") > (col("et") - col("ho")) * col("k"))
+      .groupBy("oid", "tx", "ty")
+      .agg(max(when(col("blk"), 1).otherwise(0)).as("b"))
+
+    tgt.join(blockedBy, Seq("oid", "tx", "ty"), "left")
+      .select(col("oid"), col("tx").as("gx"), col("ty").as("gy"),
+        when(col("et").isNull || col("ho").isNull, lit(null))
+          .otherwise(coalesce(col("b"), lit(0)) === 0).as("visible"))
+  }
 
   /** The operator's exact model, replayed imperatively: nearest-lattice
     * samples at floor(k·d/n + 0.5), cross-multiplied angle test, nodata
@@ -116,7 +171,7 @@ class ViewshedSpec extends SparkSpec {
         if (r.isNullAt(3)) null else r.getBoolean(3)))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
     val got = canon(Viewshed.viewshed(tiles, meta, "band_1", obs, z, 12))
-    val want = canon(Viewshed.viewshedReference(tiles, kernel, "band_1",
+    val want = canon(viewshedReference(tiles, kernel, "band_1",
       obs, z, 12))
     assert(got == want)
     // the off-raster observer really exercises the null-disk branch
