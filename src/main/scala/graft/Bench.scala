@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,9 +24,10 @@ import graft.raquet.{FixtureGen, RaquetIO}
   * Methodology: per-query untimed warm-up immediately before its timed
   * window (JVM/codegen/page-cache), then median-of-3 timed runs
   * (median-of-5 for the 15 GB-class bL_ scans), each forcing full
-  * evaluation through the noop sink. Emits the main JSON record (stdout +
-  * BENCH_LOCAL.json) as soon as the query loop ends; the opt-in
-  * scale ladder (SPARK_GRAFT_LADDER=1) runs after and can never lose it.
+  * evaluation through the noop sink. Emits the main JSON record (stdout,
+  * BENCH_LOCAL_<sf>_c<cpus>.json and its BENCH_LOCAL.json mirror) as soon
+  * as the query loop ends; the opt-in scale ladder (SPARK_GRAFT_LADDER=1)
+  * runs after and can never lose it.
   */
 object Bench {
 
@@ -350,9 +351,11 @@ object Bench {
   }
 
   /** Query A via the stats-column fast path (RaquetIOSpec proves it equals
-    * the decode path): interior tiles read 6 numeric columns instead of the
-    * ~30 KB blob, so bytes and decode CPU scale with the region perimeter —
-    * the shape that survives 100×. */
+    * the decode path): interior tiles answer from 6 numeric columns instead
+    * of decoding the ~30 KB blob, so decode CPU scales with the region
+    * perimeter — the shape that survives 100×. Blob bytes do not: the one
+    * scan reads the blob chunk of every row group the cover's pushed
+    * ranges meet. */
   private def largeRegionStats(s: SparkSession, wkt: String): DataFrame =
     RaquetIO.regionStatsTiles(s, LargeRasterDir, wkt, "band_1")
       .agg(rq_stats_merge(col("s")).as("m")).select("m.*")
@@ -936,24 +939,23 @@ object Bench {
       iowait: Double = -1.0, rerun: Boolean = false, firstSec: Double = -1.0,
       fromChild: Boolean = false)
 
-  /** Per-query seconds from the COMMITTED idle record for this sf
-    * (BENCH_LOCAL_<sf>.json at HEAD) — the anomaly re-run reference.
-    * Empty map when the file is absent/unparseable, or when it was
-    * recorded at a DIFFERENT core count: heavy scans scale ~linearly
-    * with cores, so an 8-core record overwriting the reference (it
-    * happened — a driver scaling run) would silently stop every 32-core
-    * anomaly flag (8-core times are ~3-4x higher). */
+  /** The committed record of a run at scale factor `sfName` on `cpus`
+    * cores. Keyed by core count: heavy scans scale ~linearly with cores,
+    * so an 8-core run that overwrote the 32-core record (it happened — a
+    * scaling run) would silently stop every 32-core anomaly flag. */
+  def recordPath(sfName: String, cpus: String): Path =
+    Paths.get(s"BENCH_LOCAL_${sfName}_c$cpus.json")
+
+  /** Per-query seconds from the COMMITTED idle record for this sf and core
+    * count ([[recordPath]] at HEAD) — the anomaly re-run reference. Empty
+    * map when the file is absent or unparseable. */
   def committedQueryTimes(sfName: String, cpus: String): Map[String, Double] = try {
-    val p = Paths.get(s"BENCH_LOCAL_$sfName.json")
-    if (!Files.exists(p)) return Map.empty
-    val text = Files.readString(p)
-    val cpusRe = """"cpus":("?)([^,"}]+)\1""".r
-    val recCpus = cpusRe.findFirstMatchIn(text).map(_.group(2))
-    if (!recCpus.contains(cpus)) {
-      System.err.println(s"[bench] committed record for $sfName is at " +
-        s"cpus=${recCpus.getOrElse("?")}, run is at $cpus — no anomaly reference")
+    val p = recordPath(sfName, cpus)
+    if (!Files.exists(p)) {
+      System.err.println(s"[bench] no committed $p — no anomaly reference")
       return Map.empty
     }
+    val text = Files.readString(p)
     val qStart = text.indexOf("\"queries\":{")
     if (qStart < 0) return Map.empty
     val qEnd = text.indexOf('}', qStart)
@@ -1308,12 +1310,13 @@ object Bench {
         else dirty.mkString(""","dirty_windows":{""", ",", "}")
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"bl_fresh_jvm":$blFresh$errC$contC$dirtyC,"queries":$qsC,"sf":"$sfDir"}"""
     }
-    // per-sf mirror: totals are only comparable within one scale factor, so
-    // each sf keeps its own baseline file (BENCH_LOCAL.json stays as the
-    // latest-run mirror for tooling that expects the fixed name)
+    // per-(sf, cores) record: totals are only comparable within one scale
+    // factor and core count, so each pair keeps its own baseline file
+    // (BENCH_LOCAL.json stays as the latest-run mirror for tooling that
+    // expects the fixed name)
     val sfName = Paths.get(sfDir).getFileName.toString
     def emit(json: String): Unit = {
-      Files.writeString(Paths.get(s"BENCH_LOCAL_$sfName.json"), json + "\n")
+      Files.writeString(recordPath(sfName, cpus), json + "\n")
       Files.writeString(Paths.get("BENCH_LOCAL.json"), json + "\n")
       System.err.println(json)
       println(json)

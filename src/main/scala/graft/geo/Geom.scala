@@ -75,6 +75,39 @@ final case class PolygonGeom(rings: Array[Array[Double]]) extends Geom {
     inside
   }
 
+  /** Number of vertices over all rings: an upper bound on [[rowCrossings]]. */
+  def edgeCount: Int = rings.iterator.map(_.length / 2).sum
+
+  /** The edge intercepts [[containsPoint]] compares `px` against on the
+    * line `py`, sorted ascending into `xs` (NaN intercepts, which no `px`
+    * is below, left out); returns their count. Each is computed with
+    * [[containsPoint]]'s own expressions, so for every `px` inside the bbox
+    * `containsPoint(px, py)` is true exactly when an odd number of them are
+    * greater than `px`. */
+  def rowCrossings(py: Double, xs: Array[Double]): Int = {
+    var n = 0
+    var r = 0
+    while (r < rings.length) {
+      val ring = rings(r)
+      val m = ring.length
+      var i = 0
+      var j = m - 2
+      while (i < m) {
+        val xi = ring(i); val yi = ring(i + 1)
+        val xj = ring(j); val yj = ring(j + 1)
+        if ((yi > py) != (yj > py)) {
+          val x = (xj - xi) * (py - yi) / (yj - yi) + xi
+          if (!java.lang.Double.isNaN(x)) { xs(n) = x; n += 1 }
+        }
+        j = i
+        i += 2
+      }
+      r += 1
+    }
+    java.util.Arrays.sort(xs, 0, n)
+    n
+  }
+
   private def segsIntersect(ax: Double, ay: Double, bx: Double, by: Double,
                             cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
     def orient(px: Double, py: Double, qx: Double, qy: Double, rx: Double, ry: Double): Int = {

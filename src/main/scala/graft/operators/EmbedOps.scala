@@ -46,7 +46,13 @@ object EmbedOps {
     * Pure narrow projection — no shuffle; the sign matrix is plan-time
     * constant (sign(i,j) = parity of the 60-bit md5 of "i_j", a
     * definition any SQL engine can recompute). Output: (vec_id, j, p)
-    * long format, one row per projected coordinate. */
+    * long format, one row per projected coordinate.
+    *
+    * The sign matrix is one array literal and each coordinate one
+    * `aggregate(zip_with(...))` over its row, a left fold of integers: the
+    * same values as 16 written-out 64-term sums, but generated code of a
+    * constant size (the written-out sums exceed janino's 64 KB method
+    * limit, and the stage then runs without whole-stage codegen). */
   def signProject(vecs: DataFrame, dim: Int = 64, outDim: Int = 16): DataFrame = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def sign(i: Int, j: Int): Long = {
@@ -54,12 +60,12 @@ object EmbedOps {
         .map(b => f"$b%02x").mkString
       if (java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2 == 1) 1L else -1L
     }
-    val q = (i: Int) =>
-      round(col("embedding")(i).cast("double") * 64, 0).cast("long")
-    val proj = (0 until outDim).map { j =>
-      (0 until dim).map(i => q(i) * lit(sign(i, j))).reduce(_ + _)
-    }
-    vecs.select(col("vec_id"), posexplode(array(proj: _*)))
+    val signs = Array.tabulate(outDim, dim)((j, i) => sign(i, j))
+    val q = transform(slice(col("embedding"), 1, dim),
+      x => round(x.cast("double") * 64, 0).cast("long"))
+    val proj = transform(typedLit(signs),
+      s => aggregate(zip_with(q, s, _ * _), lit(0L), _ + _))
+    vecs.select(col("vec_id"), posexplode(proj))
       .select(col("vec_id"), col("pos").cast("int").as("j"), col("col").as("p"))
   }
 

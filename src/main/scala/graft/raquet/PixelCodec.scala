@@ -245,31 +245,34 @@ object PixelCodec {
   final val StatCount = 0; final val StatMin = 1; final val StatMax = 2
   final val StatSum = 3; final val StatSumSq = 4
 
-  /** Valid-pixel stats with NaN/Inf + nodata masking; mask(i)=true keeps the
-    * pixel (null mask = all kept). Returns null when no valid pixels (the
-    * reference's empty-tile semantics). */
-  def maskedStats(values: Array[Double], nodata: Double, mask: Array[Boolean]): Array[Double] = {
+  /** Valid-pixel stats with NaN/Inf + nodata masking over the pixels of
+    * `runs`, in run order (null runs = every pixel, in order). Returns null
+    * when no valid pixels (the reference's empty-tile semantics). */
+  def maskedStats(values: Array[Double], nodata: Double, runs: PixelRuns): Array[Double] = {
+    val kept = if (runs == null) PixelRuns.all(values.length) else runs
     var count = 0L
     var mn = Double.PositiveInfinity
     var mx = Double.NegativeInfinity
     var sum = 0.0
     var sumSq = 0.0
     val hasNodata = !nodata.isNaN
-    var i = 0
-    val n = values.length
-    while (i < n) {
-      val v = values(i)
-      val keep = (mask == null || mask(i)) &&
-        !java.lang.Double.isNaN(v) && !java.lang.Double.isInfinite(v) &&
-        !(hasNodata && v == nodata)
-      if (keep) {
-        count += 1
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        sum += v
-        sumSq += v * v
+    var r = 0
+    while (r < kept.count) {
+      var i = kept.start(r)
+      val end = kept.end(r)
+      while (i < end) {
+        val v = values(i)
+        if (!java.lang.Double.isNaN(v) && !java.lang.Double.isInfinite(v) &&
+            !(hasNodata && v == nodata)) {
+          count += 1
+          if (v < mn) mn = v
+          if (v > mx) mx = v
+          sum += v
+          sumSq += v * v
+        }
+        i += 1
       }
-      i += 1
+      r += 1
     }
     if (count == 0) null
     else Array(count.toDouble, mn, mx, sum, sumSq)

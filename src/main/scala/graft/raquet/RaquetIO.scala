@@ -265,14 +265,17 @@ object RaquetIO {
     * into tiles fully inside the polygon — where every pixel center is in
     * the region, so the tile's pre-aggregated `{band}_{stat}` columns (spec
     * `raquet.md:89-126`) ARE its clip stats — and boundary tiles, which
-    * decode + per-pixel clip as usual. Interior tiles read a handful of
-    * numeric columns instead of the ~30 KB blob, so I/O and CPU scale with
-    * the region PERIMETER, not its area (at 60K tiles that's ~1% of the
-    * bytes). Falls back to full decode when the dataset has no stats
-    * columns. `sum_sq` on the interior branch is reconstructed from
-    * mean/stddev, so the merged stddev is float-reconstructed there
-    * (count/min/max/sum/mean stay exact); callers needing bit-exact stddev
-    * should use the decode path.
+    * decode + clip by pixel runs. One scan, pruned by the whole cover's
+    * ranges, reads both; each row takes the stats-column or the clip branch
+    * by `quadbin_in_ranges(block, interior)`, and a `when` branch runs only
+    * for its own rows, so interior blobs are read but never decoded. Decode
+    * CPU therefore scales with the region PERIMETER; blob bytes do not:
+    * parquet reads the blob chunk of every row group the cover's pushed
+    * ranges meet, interior or not. Without stats columns the interior is
+    * empty and every tile takes the clip branch. `sum_sq` on the interior
+    * branch is reconstructed from mean/stddev, so the merged stddev is
+    * float-reconstructed there (count/min/max/sum/mean stay exact); callers
+    * needing bit-exact stddev should use the decode path.
     *
     * Returns (block, s) rows; compose with `agg(rq_stats_merge($"s"))`. */
   def regionStatsTiles(spark: SparkSession, path: String, wkt: String,
@@ -281,23 +284,14 @@ object RaquetIO {
     val (base, meta) = open(spark, path)
     val geom = Wkt.parse(wkt)
     val z = resolveZoom(geom, meta, zoom)
-    val hasStats = statCols(band).forall(base.columns.contains)
     val (interior, boundary) =
-      if (hasStats) Polyfill.splitCover(geom, z)
+      if (statCols(band).forall(base.columns.contains)) Polyfill.splitCover(geom, z)
       else (Array.empty[(Long, Long)], Polyfill.cells(geom, z))
-    def clipStats(df: DataFrame) = {
-      val ds = RaquetDataset(df, meta)
-      df.select(col("block"),
-        rq_clip_stats(ds.band(band), col("block"), meta, band, wkt).as("s"))
-    }
-    val boundaryDf = clipStats(
-      base.filter(cappedExactRangeFilter(Polyfill.merge(boundary.map(c => (c, c))))))
-    if (interior.isEmpty) boundaryDf
-    else {
-      base.filter(cappedExactRangeFilter(interior))
-        .select(col("block"), columnStats(band).as("s"))
-        .unionByName(boundaryDf)
-    }
+    val clip = rq_clip_stats(RaquetDataset(base, meta).band(band), col("block"), meta, band, wkt)
+    base.filter(cappedExactRangeFilter(Polyfill.merge(interior ++ boundary.map(c => (c, c)))))
+      .select(col("block"), (if (interior.isEmpty) clip
+        else when(quadbin_in_ranges(col("block"), Polyfill.merge(interior)), columnStats(band))
+          .otherwise(clip)).as("s"))
   }
 
   private def statCols(band: String): Seq[String] =

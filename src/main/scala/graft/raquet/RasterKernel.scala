@@ -87,59 +87,55 @@ final case class BandKernel(
     math.toDegrees(math.atan(math.sinh(math.Pi * (1.0 - 2.0 * t))))
   }
 
-  /** Stats over valid pixels whose CENTER falls inside `geom` ("center" mode,
-    * reference `docs/performance.md:118-126`); null if none. Skips the
-    * point-in-polygon loop entirely when the tile is fully inside. */
-  def clipStats(raw: Array[Byte], block: Long, geom: Geom): Array[Double] = {
+  /** The pixels of tile `block` whose CENTER falls inside `geom`, as row
+    * runs ([[PixelRuns]]): exactly the pixels a per-pixel
+    * `geom.containsPoint(pixelLon, pixelLat)` test accepts. */
+  def pixelRuns(block: Long, geom: Geom): PixelRuns = {
     val z = Quadbin.zoom(block)
     val x = Quadbin.tileX(block)
     val y = Quadbin.tileY(block)
-    val box = graft.geo.BBox(
-      Quadbin.tileWest(x, z), Quadbin.tileSouth(y, z),
+    PixelRuns(geom, Array.tabulate(width)(pixelLon(x, z, _)),
+      Array.tabulate(height)(pixelLat(y, z, _)))
+  }
+
+  private def tileBox(block: Long): graft.geo.BBox = {
+    val z = Quadbin.zoom(block)
+    val x = Quadbin.tileX(block)
+    val y = Quadbin.tileY(block)
+    graft.geo.BBox(Quadbin.tileWest(x, z), Quadbin.tileSouth(y, z),
       Quadbin.tileEast(x, z), Quadbin.tileNorth(y, z))
-    // box tests BEFORE any decode: fully-inside tiles (the bulk of a large
-    // region) take the fused single-pass kernel, fully-outside decode nothing
+  }
+
+  /** Stats over valid pixels whose CENTER falls inside `geom` ("center" mode,
+    * reference `docs/performance.md:118-126`); null if none. Box tests come
+    * BEFORE any decode: a fully-inside tile (the bulk of a large region)
+    * takes the fused single-pass kernel, a fully-outside one decodes
+    * nothing. */
+  def clipStats(raw: Array[Byte], block: Long, geom: Geom): Array[Double] = {
+    val box = tileBox(block)
     if (geom.containsBox(box)) return PixelCodec.fusedStats(raw, dtype, nodata)
     if (!geom.intersectsBox(box)) return null
-    val values = decode(raw)
-    val mask = new Array[Boolean](width * height)
-    var j = 0
-    while (j < height) {
-      val lat = pixelLat(y, z, j)
-      var i = 0
-      while (i < width) {
-        mask(j * width + i) = geom.containsPoint(pixelLon(x, z, i), lat)
-        i += 1
-      }
-      j += 1
-    }
-    PixelCodec.maskedStats(values, nodata, mask)
+    PixelCodec.maskedStats(decode(raw), nodata, pixelRuns(block, geom))
   }
 
   /** ST_Clip (`docs/engines.md:48`): physical per-pixel values with pixels
     * whose CENTER falls outside `geom` (and nodata/NaN pixels) set to NaN;
     * null when the tile misses the geometry entirely. Same box fast paths as
-    * [[clipStats]]: fully-inside tiles skip the point-in-polygon loop. */
+    * [[clipStats]]: a fully-inside tile builds no pixel runs. */
   def clip(raw: Array[Byte], block: Long, geom: Geom): Array[Double] = {
-    val z = Quadbin.zoom(block)
-    val x = Quadbin.tileX(block)
-    val y = Quadbin.tileY(block)
-    val box = graft.geo.BBox(
-      Quadbin.tileWest(x, z), Quadbin.tileSouth(y, z),
-      Quadbin.tileEast(x, z), Quadbin.tileNorth(y, z))
+    val box = tileBox(block)
     if (!geom.intersectsBox(box)) return null
     val v = physical(raw)
     if (geom.containsBox(box)) return v
-    var j = 0
-    while (j < height) {
-      val lat = pixelLat(y, z, j)
-      var i = 0
-      while (i < width) {
-        if (!geom.containsPoint(pixelLon(x, z, i), lat)) v(j * width + i) = Double.NaN
-        i += 1
-      }
-      j += 1
+    val runs = pixelRuns(block, geom)
+    var outside = 0 // the first pixel after the previous run
+    var r = 0
+    while (r < runs.count) {
+      java.util.Arrays.fill(v, outside, runs.start(r), Double.NaN)
+      outside = runs.end(r)
+      r += 1
     }
+    java.util.Arrays.fill(v, outside, width * height, Double.NaN)
     v
   }
 
@@ -671,42 +667,30 @@ final case class BandKernel(
     * zone's value onto every pixel whose CENTER falls inside its geometry
     * (the same center rule as [[clipStats]]); overlaps resolve
     * deterministically by MAX value; untouched pixels stay nodata. Whole-
-    * tile zones take the containsBox fast path (no point-in-polygon loop).
+    * tile zones take the containsBox fast path (no pixel runs built).
     * Returns a well-formed gzip band blob of this kernel's dtype. */
   def rasterize(block: Long, values: Array[Double],
       geoms: Array[Geom]): Array[Byte] = {
-    val z = Quadbin.zoom(block)
-    val x = Quadbin.tileX(block)
-    val y = Quadbin.tileY(block)
     val fill = if (nodata.isNaN) Double.NaN else nodata
     val out = new Array[Double](width * height)
     java.util.Arrays.fill(out, fill)
-    val box = graft.geo.BBox(
-      Quadbin.tileWest(x, z), Quadbin.tileSouth(y, z),
-      Quadbin.tileEast(x, z), Quadbin.tileNorth(y, z))
-    def burn(p: Int, v: Double): Unit = {
-      val cur = out(p)
-      val unset = java.lang.Double.isNaN(cur) || (!nodata.isNaN && cur == nodata)
-      if (unset || v > cur) out(p) = v
-    }
+    val box = tileBox(block)
     var k = 0
     while (k < geoms.length) {
       val g = geoms(k)
       if (g.intersectsBox(box)) {
-        if (g.containsBox(box)) {
-          var p = 0
-          while (p < out.length) { burn(p, values(k)); p += 1 }
-        } else {
-          var j = 0
-          while (j < height) {
-            val lat = pixelLat(y, z, j)
-            var i = 0
-            while (i < width) {
-              if (g.containsPoint(pixelLon(x, z, i), lat)) burn(j * width + i, values(k))
-              i += 1
-            }
-            j += 1
+        val runs = if (g.containsBox(box)) PixelRuns.all(out.length) else pixelRuns(block, g)
+        val v = values(k)
+        var r = 0
+        while (r < runs.count) {
+          var p = runs.start(r)
+          while (p < runs.end(r)) {
+            val cur = out(p)
+            val unset = java.lang.Double.isNaN(cur) || (!nodata.isNaN && cur == nodata)
+            if (unset || v > cur) out(p) = v
+            p += 1
           }
+          r += 1
         }
       }
       k += 1
@@ -763,8 +747,8 @@ final case class BandKernel(
 
   /** Per-tile bucket histogram restricted to pixels whose CENTER falls
     * inside `geom` — the zonal twin of [[histogram]], with [[clipStats]]'s
-    * box fast paths (fully-inside tiles skip the point-in-polygon loop,
-    * fully-outside tiles return null before any decode). Merging these
+    * box fast paths (fully-inside tiles build no pixel runs, fully-outside
+    * tiles return null before any decode). Merging these
     * vectors per zone gives exact zonal distributions/percentiles. */
   def clipHistogram(raw: Array[Byte], block: Long, geom: Geom,
       min: Double, max: Double, buckets: Int): Array[Long] =
@@ -774,30 +758,24 @@ final case class BandKernel(
     * decodes each tile once and runs this per overlapping zone. */
   def clipHistogramOn(v: Array[Double], block: Long, geom: Geom,
       min: Double, max: Double, buckets: Int): Array[Long] = {
-    val z = Quadbin.zoom(block)
-    val x = Quadbin.tileX(block)
-    val y = Quadbin.tileY(block)
-    val box = graft.geo.BBox(
-      Quadbin.tileWest(x, z), Quadbin.tileSouth(y, z),
-      Quadbin.tileEast(x, z), Quadbin.tileNorth(y, z))
+    val box = tileBox(block)
     if (!geom.intersectsBox(box)) return null
-    val inside = geom.containsBox(box)
+    val runs = if (geom.containsBox(box)) PixelRuns.all(width * height)
+      else pixelRuns(block, geom)
     val bw = (max - min) / buckets
     val out = new Array[Long](buckets)
-    var j = 0
-    while (j < height) {
-      val lat = if (inside) 0.0 else pixelLat(y, z, j)
-      var i = 0
-      while (i < width) {
-        val p = v(j * width + i)
-        if (!(java.lang.Double.isNaN(p) || (!nodata.isNaN && p == nodata)) &&
-            (inside || geom.containsPoint(pixelLon(x, z, i), lat))) {
+    var r = 0
+    while (r < runs.count) {
+      var i = runs.start(r)
+      while (i < runs.end(r)) {
+        val p = v(i)
+        if (!(java.lang.Double.isNaN(p) || (!nodata.isNaN && p == nodata))) {
           val b = ((p - min) / bw).toInt
           if (p >= min && b >= 0 && b < buckets) out(b) += 1
         }
         i += 1
       }
-      j += 1
+      r += 1
     }
     out
   }

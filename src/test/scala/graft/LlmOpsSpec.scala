@@ -466,6 +466,30 @@ class LlmOpsSpec extends SparkSpec {
     assert((0 until 16).exists(j => out((1L, j)) != out((2L, j))))
   }
 
+  test("signProject compiles without codegen fallback and equals exact integer sums") {
+    import spark.implicits._
+    val rnd = new java.util.Random(11)
+    val embs = (0 until 40).map(_ => Array.fill(64)(rnd.nextFloat() * 4 - 2))
+    val vecs = embs.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("vec_id", "embedding")
+    val key = "spark.sql.codegen.fallback"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val out = try operators.EmbedOps.signProject(vecs).collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    finally spark.conf.set(key, before)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def sign(i: Int, j: Int): Long = {
+      val hex = md.digest(s"${i}_$j".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      if (java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2 == 1) 1L else -1L
+    }
+    assert(out.size == 40 * 16)
+    for ((e, v) <- embs.zipWithIndex; j <- 0 until 16) {
+      val q = e.map(x => java.math.BigDecimal.valueOf(x.toDouble * 64)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact)
+      assert(out((v.toLong, j)) == q.indices.map(i => q(i) * sign(i, j)).sum, s"vec $v j $j")
+    }
+  }
+
   test("pageRank: uniform cycle stays uniform; star center outranks leaves") {
     import spark.implicits._
     // 4-cycle: every node has outdeg 1 and indeg 1 -> rank stays at the

@@ -211,16 +211,15 @@ class RaquetIOSpec extends SparkSpec {
     // stddev: interior sum_sq is reconstructed from mean/stddev columns
     assert(math.abs(fast.getDouble(5) - slow.getDouble(5)) < 1e-9 * slow.getDouble(5))
 
-    // plan shape: the union has two parquet scans; the interior one must
-    // read stats columns but NOT the band_1 blob
+    // plan shape: one parquet scan reads the stats columns and the blob;
+    // interior rows take the stats-column branch and never decode
     val scans = fastDf.queryExecution.executedPlan.toString.split("Scan parquet")
-    assert(scans.length >= 3, "expected two parquet scans (interior + boundary)")
-    val readSchemas = scans.drop(1).map(c =>
-      c.linesIterator.find(_.contains("ReadSchema")).getOrElse(""))
-    assert(readSchemas.exists(s => s.contains("band_1_count") && !s.contains("band_1:binary")),
-      s"no blob-free interior scan in:\n${readSchemas.mkString("\n")}")
-    assert(readSchemas.exists(_.contains("band_1:binary")),
-      s"no decoding boundary scan in:\n${readSchemas.mkString("\n")}")
+    assert(scans.length == 2, "expected one parquet scan")
+    val readSchema = scans(1).linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(readSchema.contains("band_1_count") && readSchema.contains("band_1:binary"),
+      s"scan misses the stats columns or the blob: $readSchema")
+    assert(fastDf.queryExecution.optimizedPlan.toString.contains("CASE WHEN"),
+      "no stats-column branch")
   }
 
   test("stats-column fast path degenerate covers: no interior / no boundary") {
