@@ -5,16 +5,68 @@ import org.apache.spark.sql.functions._
 import graft.quadbin.Quadbin
 import graft.raquet.{GeoTiff, RaquetIO}
 
-/** GeoTIFF ingest/export against the REFERENCE's own golden expectations
-  * (`tests/test_geotiff2raquet.py`). europe.tif is exactly mercator-grid-
-  * aligned, so nearest-neighbour warp is an identity resample and even the
-  * reference's statistics goldens must match. */
+/** GeoTIFF ingest/export.
+  *
+  * Five tests compare against the REFERENCE's own golden expectations
+  * (`tests/test_geotiff2raquet.py`) for its rasters (FIXTURES.md §1):
+  * europe structure, n37 DEM, big-world wrap, discreteloss and colored
+  * palette. They need the reference repository's files and cancel where
+  * those are absent. Each has a synthetic twin below that drives the same
+  * code path from a raster the test writes itself: geographic int16
+  * cubicspline, geographic deflate nodata-0 mask, global geographic wrap,
+  * palette ColorMap.
+  *
+  * The tests that only need a mercator-aligned input (identity warp for
+  * every kernel, unknown resampling, overviews/min-zoom, convolution
+  * overview, target-size split, tileStats columns, convert → export
+  * round-trip) run on the europe twin ([[europeTwin]]): europe.tif's
+  * geometry with hashed pixels. Its grid is exactly mercator-aligned, so a
+  * nearest-neighbour warp is an identity resample. */
 class GeoTiffSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory("gt").toString + "/" + name
 
+  /** Cancels a reference-golden test where its input raster is absent: its
+    * expected values are facts of that file, which no generator here can
+    * reproduce. */
+  private def assumeReference(path: String): Unit =
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
+      s"$path is absent: this test checks the reference's goldens for that raster")
+
+  /** Europe twin pixel: the low byte of a fixed integer hash (lowbias32) of
+    * (band, row, column). Hashed bytes are incompressible and no kernel can
+    * reproduce them by interpolating a smooth field. */
+  private def twinPixel(b: Int, i: Int, j: Int): Int = {
+    var h = (b * 1024 + j) * 1024 + i
+    h ^= h >>> 16; h *= 0x7feb352d
+    h ^= h >>> 15; h *= 0x846ca68b
+    h ^= h >>> 16
+    h & 0xFF
+  }
+
+  /** europe.tif's geometry (FIXTURES.md §2c): 1024×1024 px, 4 × uint8 (so
+    * RGBA colorinterp), EPSG:3857, no nodata, pixel size CE/2^13 (zoom 13
+    * pixels: z5 tiles of 256 px), origin at the NW corner of z5 tile
+    * (16, 8) = (0°E, 66.513°N). It spans z5 tiles x 16-19 × y 8-11.
+    * Written once per suite. */
+  private lazy val europeTwin: String = {
+    val tif = tmp("europe-twin.tif")
+    val n = 1024; val nb = 4; val rps = 64
+    val ce = GeoTiff.CE
+    val strips = (0 until n / rps).iterator.map { s0 =>
+      val arr = new Array[Byte](rps * n * nb)
+      for (j <- 0 until rps; i <- 0 until n; b <- 0 until nb)
+        arr((j * n + i) * nb + b) = twinPixel(b, i, s0 * rps + j).toByte
+      arr
+    }
+    graft.raquet.TiffWriter.writeStrips(tif, n, n, "uint8", nb, ce / (1 << 13),
+      -ce / 2 + 16 * ce / 32, ce / 2 - 8 * ce / 32, None, rps, strips)
+    tif
+  }
+
   test("europe.tif converts to the reference's golden structure and stats") {
+    assumeReference("/root/reference/examples/europe.tif")
     val out = tmp("europe.parquet")
     val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif", out)
     // goldens from tests/test_geotiff2raquet.py:68-118
@@ -45,6 +97,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("n37 DEM (geographic, int16, uncompressed) converts with golden tiling") {
+    assumeReference("/root/reference/tests/n37_w123_1arc_v2.tif")
     val out = tmp("n37.parquet")
     // the reference test converts this DEM with CubicSpline
     // (tests/test_geotiff2raquet.py:128); same kernel here
@@ -85,26 +138,29 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("every non-near kernel reproduces an aligned identity warp") {
-    // europe.tif is exactly mercator-grid-aligned: every interpolating
+    // the europe twin is exactly mercator-grid-aligned: every interpolating
     // kernel must return the original pixels — convolution weights collapse
     // onto sample centers, and each footprint statistic sees a single-pixel
     // box (rms and mode included: |v| = v for uint8, mode of one value is
     // itself). cubicspline is deliberately absent: a B-spline SMOOTHS even
-    // on aligned grids (w(0)=2/3), and is covered by the n37 golden test.
+    // on aligned grids (w(0)=2/3), and is covered by the n37 golden test
+    // and its geographic int16 twin.
+    // expected: band_1's exact mean over all 2^20 source pixels
+    var sum = 0L
+    for (j <- 0 until 1024; i <- 0 until 1024) sum += twinPixel(0, i, j)
+    val mean = sum.toDouble / (1 << 20)
     for (alg <- Seq("bilinear", "cubic", "lanczos", "average",
         "sum", "rms", "min", "max", "med", "q1", "q3", "mode")) {
       val out = tmp(s"europe_$alg.parquet")
-      val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-        out, resampling = alg)
+      val meta = GeoTiff.convert(spark, europeTwin, out, resampling = alg)
       val st = meta.bands.head.stats.get
-      assert(math.abs(st._3 - 166.0527229309082) < 1e-9, s"$alg mean ${st._3}")
+      assert(math.abs(st._3 - mean) < 1e-9, s"$alg mean ${st._3}")
     }
   }
 
   test("unknown resampling algorithm fails loudly") {
     val e = intercept[Exception] {
-      GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-        tmp("bad.parquet"), resampling = "mediocre")
+      GeoTiff.convert(spark, europeTwin, tmp("bad.parquet"), resampling = "mediocre")
     }
     def rootMsg(t: Throwable): String =
       if (t.getCause != null) rootMsg(t.getCause) else String.valueOf(t.getMessage)
@@ -112,6 +168,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("big-world.tif (global wrap) matches golden tiling; validate is green") {
+    assumeReference("/root/reference/tests/big-world.tif")
     val out = tmp("bigworld.parquet")
     val meta = GeoTiff.convert(spark, "/root/reference/tests/big-world.tif", out)
     // goldens from tests/test_geotiff2raquet.py:365-389
@@ -126,6 +183,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("discreteloss (geographic uint8, nodata 0, deflate) matches golden tiling") {
+    assumeReference("/root/reference/tests/geotiff-discreteloss_2023.tif")
     val out = tmp("loss.parquet")
     val meta = GeoTiff.convert(spark,
       "/root/reference/tests/geotiff-discreteloss_2023.tif", out,
@@ -144,6 +202,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("colored.tif: palette band with the reference's golden colortable") {
+    assumeReference("/root/reference/tests/colored.tif")
     val out = tmp("colored.parquet")
     val meta = GeoTiff.convert(spark, "/root/reference/tests/colored.tif", out)
     // goldens from tests/test_geotiff2raquet.py:333-363
@@ -158,6 +217,182 @@ class GeoTiffSpec extends SparkSpec {
     // colortable survives the metadata JSON round-trip
     val back = RaquetIO.readMetadata(spark, out)
     assert(back.bands.head.colortable.get("4") == Seq(255, 165, 0, 255))
+  }
+
+  test("geographic int16 twin: cubicspline keeps block-constant values, type and nodata") {
+    // the n37 golden's path: geographic int16, uncompressed strips, nodata
+    // −32767, zoomStrategy lower, cubicspline — on a 512×512 1-arcsecond
+    // raster at (122.75°W, 37.875°N)
+    val n = 512; val d = 1.0 / 3600
+    val x0 = -122.75; val y0 = 37.875
+    // constant on 64×64-px blocks, signed values −3000..3111
+    def v(i: Int, j: Int): Int = ((j / 64) * 8 + i / 64) * 97 - 3000
+    val strips = (0 until n / 64).iterator.map { s0 =>
+      val bb = java.nio.ByteBuffer.allocate(64 * n * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      for (j <- 0 until 64; i <- 0 until n) bb.putShort(v(i, s0 * 64 + j).toShort)
+      bb.array()
+    }
+    val tif = tmp("geo16.tif")
+    graft.raquet.TiffWriter.writeStrips(tif, n, n, "int16", 1, d, x0, y0,
+      Some(-32767.0), 64, strips, epsg = 4326)
+    val out = tmp("geo16.parquet")
+    val meta = GeoTiff.convert(spark, tif, out, zoomStrategy = "lower",
+      resampling = "cubicspline")
+    // resolution = mercator window diagonal / pixel diagonal
+    //   = hypot(512 · 30.92 m, 512 · 39.14 m) / hypot(512, 512) ≈ 35.27 m;
+    // log2(CE / 2^8 / 35.27 m) = 12.12, which "lower" floors to 12
+    assert(meta.maxZoom == 12, s"zoom ${meta.maxZoom}")
+    assert(meta.bands.head.bandType == "int16")
+    assert(meta.bands.head.nodata.contains(-32767.0))
+    // The B-spline weights are renormalized to sum to 1 and reach 2 source
+    // px past the sample, and a z20 target pixel (38.2 m) puts its sample
+    // within 1 source px of the probe: at a block centre, ≥ 29 px from any
+    // edge, the field is constant and stays so after rounding.
+    import spark.implicits._
+    import graft.functions.GraftFunctions.rq_raster_value
+    val probes = (for (bi <- 0 until 8; bj <- 0 until 8) yield {
+      val lon = x0 + (bi * 64 + 32 + 0.5) * d
+      val lat = y0 - (bj * 64 + 32 + 0.5) * d
+      (Quadbin.fromLonLat(lon, lat, meta.maxZoom), lon, lat,
+        v(bi * 64 + 32, bj * 64 + 32).toDouble)
+    }).toDF("block", "lon", "lat", "want")
+    val got = RaquetIO.read(spark, out).data.join(probes, "block")
+      .select(col("lon"), col("lat"), col("want"), rq_raster_value(col("band_1"),
+        col("block"), col("lon"), col("lat"), meta, "band_1"))
+      .collect()
+    assert(got.length == 64, s"${got.length} of 64 probes land in a tile")
+    got.foreach(r => assert(r.getDouble(3) == r.getDouble(2),
+      s"probe (${r.getDouble(0)}, ${r.getDouble(1)})"))
+  }
+
+  test("geographic deflate nodata-0 mask twin: exact stats; validate is green") {
+    // the discreteloss golden's path: geographic uint8, deflate tiles,
+    // nodata 0, zoomStrategy upper — a 256×256 1-arcsecond mask at
+    // (10°E, 45°N), 1 on a 16-px checkerboard and nodata elsewhere
+    val n = 256; val d = 1.0 / 3600
+    val mask = Array.tabulate(n * n)(p =>
+      if ((p % n / 16 + p / n / 16) % 2 == 0) 1.0 else 0.0)
+    val tif = tmp("mask.tif")
+    graft.raquet.TiffWriter.writeTiled(tif, n, n, "uint8", Array(mask), d,
+      10.0, 45.0, Some(0.0), tileW = 128, tileL = 128, compression = 8,
+      epsg = 4326)
+    val out = tmp("mask.parquet")
+    val meta = GeoTiff.convert(spark, tif, out, zoomStrategy = "upper")
+    // resolution = hypot(256 · 30.92 m, 256 · 43.70 m) / hypot(256, 256)
+    // ≈ 37.86 m; log2(CE / 2^8 / 37.86 m) = 12.01, which "upper" ceils to 13
+    assert(meta.maxZoom == 13, s"zoom ${meta.maxZoom}")
+    assert(meta.bands.head.nodata.contains(0.0))
+    // a nearest-neighbour warp only copies source pixels: every valid one
+    // is 1, so min = max = mean = 1 and the stddev is 0
+    val st = meta.bands.head.stats.get
+    assert(st == ((1.0, 1.0, 1.0, 0.0)))
+    val report = graft.raquet.Maintenance.validate(spark, out).collect()
+    assert(report.forall(_.getBoolean(1)),
+      report.filterNot(_.getBoolean(1)).mkString(";"))
+  }
+
+  test("global geographic twin: rows past ±85.0511° are clipped; validate is green") {
+    // big-world's path: a 4-band geographic source spanning −180..180 ×
+    // −90..90 at 360/1024 = 0.3515625° per pixel, no nodata
+    val w = 1024; val h = 512; val d = 360.0 / w
+    def v(b: Int, i: Int, j: Int): Int = (i + 3 * j + 50 * b) % 256
+    val strips = (0 until h / 64).iterator.map { s0 =>
+      val arr = new Array[Byte](64 * w * 4)
+      for (j <- 0 until 64; i <- 0 until w; b <- 0 until 4)
+        arr((j * w + i) * 4 + b) = v(b, i, s0 * 64 + j).toByte
+      arr
+    }
+    val tif = tmp("world.tif")
+    graft.raquet.TiffWriter.writeStrips(tif, w, h, "uint8", 4, d, -180.0, 90.0,
+      None, 64, strips, epsg = 4326)
+    // north clip row ⌈(90 − 85.0511) / 0.3515625⌉ = ⌈14.08⌉ = 15, south
+    // ⌊(90 + 85.0511) / 0.3515625⌋ = ⌊497.92⌋ = 497; all columns stay
+    assert(GeoTiff.pixelWindow(GeoTiff.readInfo(tif)) == ((0, 15, 1024, 482)))
+    val out = tmp("world.parquet")
+    val meta = GeoTiff.convert(spark, tif, out)
+    // rows 15..497 span ±84.73°: resolution = hypot(CE, 0.98 CE) /
+    // hypot(1024, 482) ≈ 49.57 km; log2(CE / 2^8 / 49.57 km) = 1.66 rounds
+    // to 2. Min zoom = round(32 − log2(1.40 · 2^32 / 181) − 8) = round(−0.99)
+    // = −1, clamped to 0. At z2 the window reaches all 4 × 4 tiles.
+    assert(meta.maxZoom == 2 && meta.minZoom == 0 && meta.pixelZoom == 10)
+    assert(meta.numBlocks == 16)
+    assert(meta.width == 1024 && meta.height == 1024)
+    assert(meta.bands.head.nodata.isEmpty)
+    assert(meta.bands.map(_.colorinterp.get) == Seq("red", "green", "blue", "alpha"))
+    val report = graft.raquet.Maintenance.validate(spark, out).collect()
+    assert(report.forall(_.getBoolean(1)),
+      report.filterNot(_.getBoolean(1)).mkString(";"))
+  }
+
+  test("palette twin: the ColorMap becomes the colortable; the nodata index is transparent") {
+    // colored.tif's path: 1-band uint8, PhotometricInterpretation 3 with a
+    // ColorMap (tag 320), nodata 0 — a hand-assembled classic TIFF on one
+    // mercator-aligned z6 tile (32, 24), 256×256 px
+    val n = 256
+    val size = GeoTiff.CE / (1L << 6)
+    val x0 = -GeoTiff.CE / 2 + 32 * size
+    val y0 = GeoTiff.CE / 2 - 24 * size
+    val px = size / n
+    // the golden's six RGB entries, the rest of the 2^8 black
+    val rgb = Seq((0, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 0),
+      (255, 165, 0), (255, 0, 0))
+    def idx(i: Int, j: Int): Int = (i / 32 + j / 32) % 6
+    val LE = java.nio.ByteOrder.LITTLE_ENDIAN
+    val nTags = 16
+    val ifdAt = 8
+    val cmapAt = ifdAt + 2 + nTags * 12 + 4
+    val scaleAt = cmapAt + 3 * 256 * 2; val tieAt = scaleAt + 24
+    val geoAt = tieAt + 48; val dataAt = geoAt + 32
+    val bb = java.nio.ByteBuffer.allocate(dataAt + n * n).order(LE)
+    bb.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifdAt)
+    def entry(id: Int, ttype: Int, count: Int, value: Int): Unit =
+      bb.putShort(id.toShort).putShort(ttype.toShort).putInt(count).putInt(value)
+    bb.putShort(nTags.toShort)
+    entry(256, 3, 1, n); entry(257, 3, 1, n); entry(258, 3, 1, 8)
+    entry(259, 3, 1, 1); entry(262, 3, 1, 3) // palette
+    entry(273, 4, 1, dataAt); entry(277, 3, 1, 1); entry(278, 3, 1, n)
+    entry(279, 4, 1, n * n); entry(284, 3, 1, 1)
+    entry(320, 3, 3 * 256, cmapAt)
+    entry(339, 3, 1, 1)
+    entry(33550, 12, 3, scaleAt); entry(33922, 12, 6, tieAt)
+    entry(34735, 3, 16, geoAt)
+    entry(42113, 2, 2, '0'.toInt) // GDAL_NODATA "0\0", inline
+    bb.putInt(0) // next IFD
+    // ColorMap: all reds, then all greens, then all blues; 16-bit entries,
+    // so an 8-bit channel c is stored as c × 257
+    bb.position(cmapAt)
+    for (ch <- 0 until 3; k <- 0 until 256) {
+      val c = rgb.lift(k).map(t => Seq(t._1, t._2, t._3)(ch)).getOrElse(0)
+      bb.putShort((c * 257).toShort)
+    }
+    bb.putDouble(px).putDouble(px).putDouble(0)
+    bb.putDouble(0).putDouble(0).putDouble(0).putDouble(x0).putDouble(y0).putDouble(0)
+    Seq(1, 1, 0, 3, 1024, 0, 1, 1, 1025, 0, 1, 1, 3072, 0, 1, 3857)
+      .foreach(k => bb.putShort(k.toShort))
+    for (j <- 0 until n; i <- 0 until n) bb.put(idx(i, j).toByte)
+    val tif = tmp("palette.tif")
+    java.nio.file.Files.write(java.nio.file.Paths.get(tif), bb.array())
+
+    val out = tmp("palette.parquet")
+    val meta = GeoTiff.convert(spark, tif, out)
+    assert(meta.bands.map(_.colorinterp.get) == Seq("palette"))
+    // pixels stay palette indices (not expanded to RGB): valid ones are 1..5
+    val st = meta.bands.head.stats.get
+    assert(st._1 == 1.0 && st._2 == 5.0, s"stats $st")
+    // the reader's rule: each 16-bit entry >> 8 (c × 257 >> 8 = c), alpha
+    // 255 except 0 for the nodata index
+    val ct = meta.bands.head.colortable.get
+    assert(ct.size == 256)
+    assert(ct("0") == Seq(0, 0, 0, 0))
+    assert(ct("1") == Seq(0, 255, 0, 255))
+    assert(ct("2") == Seq(0, 0, 255, 255))
+    assert(ct("3") == Seq(255, 255, 0, 255))
+    assert(ct("4") == Seq(255, 165, 0, 255))
+    assert(ct("5") == Seq(255, 0, 0, 255))
+    assert(ct("6") == Seq(0, 0, 0, 255))
+    // the colortable survives the metadata JSON round-trip
+    assert(RaquetIO.readMetadata(spark, out).bands.head.colortable.get == ct)
   }
 
   test("UTM source (EPSG:32633) converts via the transverse-mercator warp") {
@@ -329,23 +564,22 @@ class GeoTiffSpec extends SparkSpec {
 
   test("overviews=none and min-zoom override control the pyramid (cli.py:393-403)") {
     val outNone = tmp("eu_none.parquet")
-    val mNone = GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-      outNone, overviews = "none")
+    val mNone = GeoTiff.convert(spark, europeTwin, outNone, overviews = "none")
     assert(mNone.minZoom == 5 && mNone.maxZoom == 5)
-    assert(RaquetIO.read(spark, outNone).data.count() == 16) // native only
+    // native only: z5 tiles x 16-19 × y 8-11
+    assert(RaquetIO.read(spark, outNone).data.count() == 16)
 
     val outZ4 = tmp("eu_z4.parquet")
-    val mZ4 = GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-      outZ4, minZoomOverride = Some(4))
+    val mZ4 = GeoTiff.convert(spark, europeTwin, outZ4, minZoomOverride = Some(4))
     assert(mZ4.minZoom == 4)
-    assert(RaquetIO.read(spark, outZ4).data.count() == 20) // 16 native + 4 z4
+    // 16 native + their 4 z4 parents (x 8-9 × y 4-5)
+    assert(RaquetIO.read(spark, outZ4).data.count() == 20)
   }
 
   test("convert with a convolution overview kernel matches a direct halo build") {
     import graft.functions.GraftFunctions.quadbin_zoom
     val out = tmp("eu_cubic.parquet")
-    val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-      out, overviewResampling = "cubic")
+    val meta = GeoTiff.convert(spark, europeTwin, out, overviewResampling = "cubic")
     val ds = RaquetIO.read(spark, out)
     def tiles(z: Int, df: org.apache.spark.sql.DataFrame) = df
       .filter(quadbin_zoom(col("block")) === z)
@@ -361,12 +595,15 @@ class GeoTiffSpec extends SparkSpec {
 
   test("target-size convert writes a Morton-sorted multi-file directory") {
     val out = tmp("eu_split")
-    val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif",
-      out, targetFileBytes = 400000)
+    // hashed bytes do not deflate: a native row is ≈ 4 × 65,536 B, so the
+    // cap holds ⌊400,000 / 262,208⌋ = 1 row per file
+    val meta = GeoTiff.convert(spark, europeTwin, out, targetFileBytes = 400000)
     val parts = java.nio.file.Files.list(java.nio.file.Paths.get(out))
       .toArray.map(_.toString).filter(_.endsWith(".parquet"))
     assert(parts.length >= 2, s"${parts.length} part files")
     val ds = RaquetIO.read(spark, out)
+    // 16 (z5) + 4 (z4) + 1 (z3) + 1 (z2); min zoom = round(32 −
+    // log2(7.59e8 / 181) − 8) = 2 for the twin's 45° × 25.5° bounds
     assert(ds.data.count() == 22)
     assert(ds.meta.numBlocks == meta.numBlocks)
   }
@@ -947,8 +1184,7 @@ class GeoTiffSpec extends SparkSpec {
 
   test("convert tileStats=true writes the spec's per-tile statistics columns") {
     val rq = tmp("stats.parquet")
-    val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif", rq,
-      tileStats = true)
+    val meta = GeoTiff.convert(spark, europeTwin, rq, tileStats = true)
     val ds = RaquetIO.read(spark, rq)
     val statCols = (1 to 4).flatMap(b => Seq(s"band_${b}_count", s"band_${b}_min",
       s"band_${b}_max", s"band_${b}_sum", s"band_${b}_mean", s"band_${b}_stddev"))
@@ -972,18 +1208,19 @@ class GeoTiffSpec extends SparkSpec {
 
   test("convert → export round-trip preserves mercator-aligned pixels") {
     val rq = tmp("rt.parquet")
-    val meta = GeoTiff.convert(spark, "/root/reference/examples/europe.tif", rq)
+    val meta = GeoTiff.convert(spark, europeTwin, rq)
     val tif = tmp("rt.tif")
     GeoTiff.export(spark, rq, tif)
     val back = GeoTiff.read(tif)
     assert(back.width == 1024 && back.height == 1024 && back.bands == 4)
     // aligned grid: NN convert then mosaic = original pixels
-    val orig = GeoTiff.read("/root/reference/examples/europe.tif")
+    val orig = GeoTiff.read(europeTwin)
     val diffs = (0 until 1024 by 97).flatMap(j => (0 until 1024 by 89).map(i =>
       math.abs(orig.sample(0, i, j) - back.sample(0, i, j))))
     assert(diffs.forall(_ == 0.0), s"pixel drift: max=${diffs.max}")
     // the export is a COG: pyramid levels became overview IFDs, and the
-    // overview pixels equal the dataset's own pyramid tiles
+    // overview pixels equal the dataset's own pyramid tiles: zooms 5 → 2
+    // give min(5 − 2, 8) = 3 overviews, the first 512 px wide
     val ovs = GeoTiff.readOverviews(tif)
     assert(ovs.size == math.min(meta.maxZoom - meta.minZoom, 8), s"overviews: $ovs")
     if (ovs.nonEmpty) {
