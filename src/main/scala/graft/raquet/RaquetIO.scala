@@ -5,13 +5,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.statistics.LongStatistics
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
@@ -19,7 +19,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{BlockRanges, Bridge}
+import org.apache.spark.sql.graft.{BlockRanges, Bridge, LocalParquetRows}
 import org.apache.spark.sql.types.StructType
 
 import graft.geo.Wkt
@@ -43,6 +43,13 @@ import graft.quadbin.{Polyfill, Quadbin}
   * record filter. The table DataFrame is then built with that schema, so
   * Spark infers nothing either. The metadata is parsed once and carried
   * into expressions as plan-time config — never re-parsed per row.
+  *
+  * A point read ([[readAt]]) on a flat table goes on from the footer pass
+  * to the rows: every data file is opened behind a `block = b` filter (no
+  * footer is read twice), only the row groups whose `block` statistics
+  * admit the point's cell (and, through the column index, only their
+  * matching pages) are read, and the rows come back as a local relation,
+  * so a `select` + `collect` over them runs no Spark job.
   */
 object RaquetIO {
 
@@ -82,39 +89,67 @@ object RaquetIO {
     * row of the first file in path order is returned, whatever the
     * session's scan settings. */
   def readMetadata(spark: SparkSession, path: String): RaquetMetadata =
-    footerPass(spark, path)._2
+    footerPass(spark, path).meta
 
   /** The table at `path` opened from its footers: the DataFrame of every
     * row (metadata rows included), built with the footer schema so Spark
     * runs no inference job, and the parsed metadata. */
   private[raquet] def open(spark: SparkSession, path: String): (DataFrame, RaquetMetadata) = {
-    val (schema, meta) = footerPass(spark, path)
-    (spark.read.schema(schema).parquet(path), meta)
+    val t = footerPass(spark, path)
+    (spark.read.schema(t.schema).parquet(path), t.meta)
   }
 
-  /** The footer pass: (data schema, metadata) of the table at `path`. Each
-    * data file is opened at most once, in path order, until one holds the
-    * metadata row; the first one's footer gives the schema. */
-  private def footerPass(spark: SparkSession, path: String): (StructType, RaquetMetadata) = {
+  /** What the footer pass learns of a table: its data files in path order,
+    * whether it is flat (see [[listTable]]), the data schema, the metadata,
+    * and the footers it read, by file. `conf` is the session's Hadoop conf
+    * the files were listed and opened with. */
+  private final case class Footers(conf: Configuration, files: Seq[FileStatus], flat: Boolean,
+      schema: StructType, meta: RaquetMetadata, read: Map[HPath, ParquetMetadata])
+
+  /** The footer pass over the table at `path`. Each data file is opened at
+    * most once, in path order, until one holds the metadata row; the first
+    * one's footer gives the schema. */
+  private def footerPass(spark: SparkSession, path: String): Footers = {
     val conf = spark.sessionState.newHadoopConf()
-    val options = HadoopReadOptions.builder(conf).withRecordFilter(MetadataRowFilter).build()
+    val (files, flat) = listTable(conf, path)
     var schema: StructType = null
     var json: Option[String] = None
-    val files = dataFiles(conf, path).iterator
-    while (json.isEmpty && files.hasNext) {
-      val file = files.next()
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
+    val read = Map.newBuilder[HPath, ParquetMetadata]
+    val unread = files.iterator
+    while (json.isEmpty && unread.hasNext) {
+      val file = unread.next()
+      val reader = openFile(conf, file, MetadataRowFilter)
       try {
+        read += file.getPath -> reader.getFooter
         if (schema == null) schema = sparkSchema(spark, file, reader)
         json = metadataRow(reader)
       } finally reader.close()
     }
     require(json.nonEmpty, s"no metadata row (block=0) in $path")
-    (schema, RaquetMetadata.parse(json.get))
+    Footers(conf, files, flat, schema, RaquetMetadata.parse(json.get), read.result())
   }
 
-  private val MetadataRowFilter =
-    FilterCompat.get(FilterApi.eq(FilterApi.longColumn("block"), java.lang.Long.valueOf(0L)))
+  private val MetadataRowFilter = blockFilter(0L)
+
+  private def blockFilter(b: Long): FilterCompat.Filter =
+    FilterCompat.get(FilterApi.eq(FilterApi.longColumn("block"), java.lang.Long.valueOf(b)))
+
+  /** A reader of `file` with the session's read options over `conf`: it
+    * yields only the row groups whose statistics admit `filter` (missing
+    * statistics admit it) and, through the column index, only their
+    * matching pages. `footer`, the file's footer when it was already read,
+    * is not read again. Parquet's default options would build a new Hadoop
+    * `Configuration` for every file (10-15 ms each). */
+  private def openFile(conf: Configuration, file: FileStatus,
+      filter: FilterCompat.Filter = FilterCompat.NOOP,
+      footer: Option[ParquetMetadata] = None): ParquetFileReader = {
+    val input = HadoopInputFile.fromStatus(file, conf)
+    val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
+    footer match {
+      case Some(f) => ParquetFileReader.open(input, f, options, input.newStream())
+      case None => ParquetFileReader.open(input, options)
+    }
+  }
 
   /** The data files of the table at `path` in path order, by Spark's listing
     * rules: the path may be a glob; a file path is a single-file table; in a
@@ -122,8 +157,14 @@ object RaquetIO {
     * skipped, subdirectories (the `k=v` partitions) are recursed into and
     * empty files are dropped. Goes through the Hadoop `FileSystem`, so
     * remote paths list as Spark does. */
-  private[raquet] def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
-    val root = new org.apache.hadoop.fs.Path(path)
+  private[raquet] def dataFiles(conf: Configuration, path: String): Seq[FileStatus] =
+    listTable(conf, path)._1
+
+  /** [[dataFiles]], and whether the table is flat: every file is a matched
+    * path or sits directly in a matched directory, so Spark infers no
+    * partition column from a `k=v` directory. */
+  private def listTable(conf: Configuration, path: String): (Seq[FileStatus], Boolean) = {
+    val root = new HPath(path)
     val fs = root.getFileSystem(conf)
     def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) ||
       n.endsWith("._COPYING_")
@@ -132,7 +173,9 @@ object RaquetIO {
       else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
     val tops = Option(fs.globStatus(root)).toSeq.flatten
     if (tops.isEmpty) throw new java.io.FileNotFoundException(s"path does not exist: $path")
-    tops.flatMap(t => if (t.isDirectory) walk(t) else Seq(t)).sortBy(_.getPath.toString)
+    val files = tops.flatMap(t => if (t.isDirectory) walk(t) else Seq(t)).sortBy(_.getPath.toString)
+    val matched = tops.map(_.getPath).toSet
+    (files, files.forall(f => matched(f.getPath) || matched(f.getPath.getParent)))
   }
 
   /** The data schema Spark's inference derives from this footer: its
@@ -175,19 +218,14 @@ object RaquetIO {
     found
   }
 
-  /** Files of the table at `path` that hold a `block = 0` row, from their
-    * footers: a row group whose `block` minimum is 0 holds one (blocks are
-    * never negative). */
+  /** Files of the table at `path` that hold a `block = 0` row, read as the
+    * footer pass reads it: only the row groups whose `block` statistics
+    * admit 0 (missing statistics admit it) are searched. */
   private[raquet] def metadataFiles(spark: SparkSession, path: String): Seq[Path] = {
     val conf = spark.sessionState.newHadoopConf()
     dataFiles(conf, path).filter { file =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-      try reader.getRowGroups.asScala.exists(_.getColumns.asScala.exists { c =>
-        c.getPath.toDotString == "block" && (c.getStatistics match {
-          case s: LongStatistics => s.hasNonNullValue && s.getMin == 0L
-          case _ => false
-        })
-      }) finally reader.close()
+      val reader = openFile(conf, file, MetadataRowFilter)
+      try metadataRow(reader).nonEmpty finally reader.close()
     }.map(f => Paths.get(f.getPath.toUri))
   }
 
@@ -198,12 +236,26 @@ object RaquetIO {
   }
 
   /** S4: point query — only the tile covering (lon, lat) at `zoom` (default
-    * max_zoom). Sorted `block` + pushed equality = a handful of pages read. */
+    * max_zoom). On a flat table without `time_cf` (one row per tile) the
+    * rows are read on the driver from the files whose footers admit the
+    * cell, reusing the footers the footer pass read, and come back as a
+    * local relation: a `select` over it is evaluated by the optimizer and
+    * collects without a Spark job. Partitioned tables (their partition
+    * column comes from the directories) and temporal ones (many rows per
+    * tile) keep the scan, where sorted `block` + pushed equality read a
+    * handful of pages. */
   def readAt(spark: SparkSession, path: String, lon: Double, lat: Double,
       zoom: Int = -1): RaquetDataset = {
-    val (all, meta) = open(spark, path)
-    val z = if (zoom < 0) meta.maxZoom else meta.clampZoom(zoom)
-    RaquetDataset(all.filter(col("block") === Quadbin.fromLonLat(lon, lat, z)), meta)
+    val t = footerPass(spark, path)
+    val z = if (zoom < 0) t.meta.maxZoom else t.meta.clampZoom(zoom)
+    val b = Quadbin.fromLonLat(lon, lat, z)
+    val data =
+      if (t.flat && !t.schema.fieldNames.contains("time_cf")) {
+        val filter = blockFilter(b)
+        LocalParquetRows(spark, t.conf, t.schema,
+          t.files.iterator.map(f => openFile(t.conf, f, filter, t.read.get(f.getPath))), filter)
+      } else spark.read.schema(t.schema).parquet(path).filter(col("block") === b)
+    RaquetDataset(data, t.meta)
   }
 
   /** OR-of-BETWEEN predicate over compacted Morton ranges. Ranges at zoom z

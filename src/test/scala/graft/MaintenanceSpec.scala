@@ -132,6 +132,22 @@ class MaintenanceSpec extends SparkSpec {
     assert(RaquetIO.read(spark, dir).meta.numBlocks == ds.meta.numBlocks + 1)
   }
 
+  test("upsert replaces the metadata row of a table whose footers carry no block statistics") {
+    import graft.quadbin.Quadbin
+    val dir = tmpDir() + "/nostats"
+    val all = spark.read.parquet(fixture)
+    // data files, then the metadata row in a file of its own, all without statistics
+    for ((rows, mode) <- Seq(all.filter(col("block") =!= 0L) -> "overwrite",
+        all.filter(col("block") === 0L) -> "append"))
+      rows.write.mode(mode).option("parquet.column.statistics.enabled", "false").parquet(dir)
+    val cSrc = Quadbin.tileToCell(39, 31, 6)
+    val rep = Maintenance.upsert(spark, dir, RaquetIO.read(spark, dir).data
+      .filter(col("block") === cSrc).withColumn("block", lit(Quadbin.tileToCell(41, 26, 6))))
+    assert(rep.rowsInserted == 1, rep.toString)
+    assert(spark.read.parquet(dir).filter(col("block") === 0L).count() == 1)
+    assert(RaquetIO.readMetadata(spark, dir).numBlocks == 65)
+  }
+
   test("upsertWithPyramid: refreshes exactly the changed ancestors; rejects bad input") {
     val dir = tmpDir() + "/pyds"
     val ds = RaquetIO.read(spark, fixture)

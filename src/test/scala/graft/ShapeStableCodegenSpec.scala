@@ -57,12 +57,26 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
   }
 
   // query positions 0..4: distinct tiles and rectangles, all inside the data
-  private def point(s: SparkSession, i: Int): DataFrame = {
+  private def pointAt(i: Int): (Double, Double) = {
     val b = Quadbin.cellBounds(Quadbin.tileToCell(32 + i, 24 + (3 * i) % 8, 6))
-    val (lon, lat) = ((b(0) + b(2)) / 2 + 0.013 * i, (b(1) + b(3)) / 2 - 0.007 * i)
+    ((b(0) + b(2)) / 2 + 0.013 * i, (b(1) + b(3)) / 2 - 0.007 * i)
+  }
+
+  private def point(s: SparkSession, i: Int): DataFrame = {
+    val (lon, lat) = pointAt(i)
     val ds = RaquetIO.readAt(s, fixture, lon, lat)
     ds.data.select(rq_raster_value(col("band_1"), col("block"), lit(lon), lit(lat),
       ds.meta, "band_1").as("v"))
+  }
+
+  /** The point query as a scan: `readAt` evaluates its kernel on the
+    * driver, so this form is the one that runs the kernel in generated code. */
+  private def pointScan(s: SparkSession, i: Int): DataFrame = {
+    val (lon, lat) = pointAt(i)
+    val ds = RaquetIO.read(s, fixture)
+    ds.data.filter(col("block") === Quadbin.fromLonLat(lon, lat, 6))
+      .select(rq_raster_value(col("band_1"), col("block"), lit(lon), lit(lat),
+        ds.meta, "band_1").as("v"))
   }
 
   private def regionStats(s: SparkSession, i: Int): DataFrame = {
@@ -98,8 +112,8 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
   private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   private val kinds: Seq[(String, (SparkSession, Int) => DataFrame)] =
-    Seq("point" -> point, "region stats" -> regionStats, "readRegion" -> region,
-      "kernel constants" -> kernelConstants)
+    Seq("point" -> point, "point scan" -> pointScan, "region stats" -> regionStats,
+      "readRegion" -> region, "kernel constants" -> kernelConstants)
 
   // each mode measures at positions no earlier query used: the class cache
   // is shared by every session in the JVM
@@ -124,7 +138,7 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
     withAqe(false) {
       val bare = tileRect(33, 25, 34, 26)
       val queries: Seq[(String, SparkSession => DataFrame)] = Seq(
-        "point" -> (point(_, 1)),
+        "point scan" -> (pointScan(_, 1)),
         "16-tile region" -> (regionStats(_, 1)),
         "100-range region" -> (s => RaquetIO.readRegion(s, fixture, sparseWkt).data.select("block")),
         "st_quadbin_intersects" -> (s => s.read.parquet(fixture)
@@ -297,7 +311,7 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
       Seq[Any](null, 0L, 1L, 100L, -7L, Long.MaxValue).foreach(v => assert(eval(once, v) == eval(e, v)))
     }
     withAqe(false) {
-      Seq(point(spark, 1), regionStats(spark, 1),
+      Seq(point(spark, 1), pointScan(spark, 1), regionStats(spark, 1),
         RaquetIO.readRegion(spark, fixture, sparseWkt).data).foreach { df =>
         val once = ShapeStableCodegen(df.queryExecution.sparkPlan)
         assert(ShapeStableCodegen(once) == once)
