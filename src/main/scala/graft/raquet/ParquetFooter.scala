@@ -150,5 +150,8 @@ object ParquetFooter {
     // it reads skip verification, with a stale one they throw
     Files.deleteIfExists(
       file.resolveSibling("." + file.getFileName.toString + ".crc"))
+    // a same-length rewrite within the mtime resolution keeps the file's
+    // cache key
+    FooterCache.evict(file)
   }
 }

@@ -1,6 +1,7 @@
 package graft.raquet
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +10,8 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -19,7 +21,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{BlockRanges, Bridge, LocalParquetRows}
+import org.apache.spark.sql.graft.{BlockRanges, Bridge, ListedFileScan, LocalParquetRows}
 import org.apache.spark.sql.types.StructType
 
 import graft.geo.Wkt
@@ -40,16 +42,23 @@ import graft.quadbin.{Polyfill, Quadbin}
   * inference would, and the `block = 0` metadata row is read from the first
   * file (in path order) whose `block` statistics admit 0 — only the `block`
   * and `metadata` columns of those row groups, behind an `eq(block, 0)`
-  * record filter. The table DataFrame is then built with that schema, so
-  * Spark infers nothing either. The metadata is parsed once and carried
-  * into expressions as plan-time config — never re-parsed per row.
+  * record filter. The table DataFrame is then built with that schema over
+  * that listing, so Spark neither infers nor lists anything. The metadata
+  * is parsed once and carried into expressions as plan-time config — never
+  * re-parsed per row.
+  *
+  * Each footer read, and the parsed metadata row, is kept in the
+  * process-wide [[FooterCache]] under the file's path, length and
+  * modification time, so the pass over an unchanged table reads nothing
+  * but the listing.
   *
   * A point read ([[readAt]]) on a flat table goes on from the footer pass
-  * to the rows: every data file is opened behind a `block = b` filter (no
-  * footer is read twice), only the row groups whose `block` statistics
-  * admit the point's cell (and, through the column index, only their
-  * matching pages) are read, and the rows come back as a local relation,
-  * so a `select` + `collect` over them runs no Spark job.
+  * to the rows: only the files whose cached `block` statistics admit the
+  * point's cell are opened behind a `block = b` filter (a file whose footer
+  * is not cached yet is opened too), only their row groups that admit the
+  * cell (and, through the column index, only the matching pages) are read,
+  * and the rows come back as a local relation, so a `select` + `collect`
+  * over them runs no Spark job.
   */
 object RaquetIO {
 
@@ -96,43 +105,67 @@ object RaquetIO {
     * runs no inference job, and the parsed metadata. */
   private[raquet] def open(spark: SparkSession, path: String): (DataFrame, RaquetMetadata) = {
     val t = footerPass(spark, path)
-    (spark.read.schema(t.schema).parquet(path), t.meta)
+    (scan(spark, path, t), t.meta)
   }
 
-  /** What the footer pass learns of a table: its data files in path order,
-    * whether it is flat (see [[listTable]]), the data schema, the metadata,
-    * and the footers it read, by file. `conf` is the session's Hadoop conf
-    * the files were listed and opened with. */
-  private final case class Footers(conf: Configuration, files: Seq[FileStatus], flat: Boolean,
-      schema: StructType, meta: RaquetMetadata, read: Map[HPath, ParquetMetadata])
+  /** What the footer pass learns of a table: its listing, the footer of its
+    * first file and the metadata. `conf` is the session's Hadoop conf the
+    * files were listed and opened with. */
+  private final class Footers(spark: SparkSession, val conf: Configuration, val listing: Listing,
+      first: ParquetMetadata, val meta: RaquetMetadata) {
+    def files: Seq[FileStatus] = listing.files
 
-  /** The footer pass over the table at `path`. Each data file is opened at
-    * most once, in path order, until one holds the metadata row; the first
-    * one's footer gives the schema. */
+    /** The data schema, from the first file's footer. */
+    lazy val schema: StructType = sparkSchema(spark, files.head.getPath, first)
+  }
+
+  /** The footer pass over the table at `path`: one listing, then the files
+    * in path order until one holds the metadata row. Each file's footer and
+    * metadata row come from [[FooterCache]] when it holds this version of
+    * the file, so on an unchanged table the pass reads nothing but the
+    * listing. */
   private def footerPass(spark: SparkSession, path: String): Footers = {
     val conf = spark.sessionState.newHadoopConf()
-    val (files, flat) = listTable(conf, path)
-    var schema: StructType = null
-    var json: Option[String] = None
-    val read = Map.newBuilder[HPath, ParquetMetadata]
-    val unread = files.iterator
-    while (json.isEmpty && unread.hasNext) {
-      val file = unread.next()
-      val reader = openFile(conf, file, MetadataRowFilter)
-      try {
-        read += file.getPath -> reader.getFooter
-        if (schema == null) schema = sparkSchema(spark, file, reader)
-        json = metadataRow(reader)
-      } finally reader.close()
-    }
-    require(json.nonEmpty, s"no metadata row (block=0) in $path")
-    Footers(conf, files, flat, schema, RaquetMetadata.parse(json.get), read.result())
+    val listing = listTable(conf, path)
+    val searched = listing.files.to(LazyList).map(searchMetadata(conf, _))
+    val meta = searched.flatMap(_.meta).headOption
+    require(meta.nonEmpty, s"no metadata row (block=0) in $path")
+    new Footers(spark, conf, listing, searched.head.footer, meta.get)
   }
+
+  /** The cache entry of `file` once its metadata row is known: a cached
+    * entry answers when it holds the row or when its `block` statistics
+    * rule out 0; otherwise the file is opened (its footer read only when
+    * not cached) and the row groups whose statistics admit 0 are searched. */
+  private def searchMetadata(conf: Configuration, file: FileStatus): FooterCache.Entry =
+    FooterCache.shared.get(file) match {
+      case Some(e) if e.meta.nonEmpty || !admits(e.footer, 0L) => e
+      case cached =>
+        val reader = openFile(conf, file, MetadataRowFilter, cached.map(_.footer))
+        try {
+          val e = FooterCache.Entry(reader.getFooter, metadataRow(reader).map(RaquetMetadata.parse))
+          FooterCache.shared.put(file, e)
+          e
+        } finally reader.close()
+    }
+
+  /** Whether the `block` statistics of some row group of `footer` admit
+    * `block = b` (missing statistics admit it): the row-group test the
+    * reader itself applies first. */
+  private def admits(footer: ParquetMetadata, b: Long): Boolean = {
+    val eq = blockEq(b)
+    footer.getBlocks.asScala.exists(g => !StatisticsFilter.canDrop(eq, g.getColumns))
+  }
+
+  private def blockEq(b: Long): FilterPredicate =
+    FilterApi.eq(FilterApi.longColumn("block"), java.lang.Long.valueOf(b))
+
+  private def blockFilter(b: Long): FilterCompat.Filter = FilterCompat.get(blockEq(b))
 
   private val MetadataRowFilter = blockFilter(0L)
 
-  private def blockFilter(b: Long): FilterCompat.Filter =
-    FilterCompat.get(FilterApi.eq(FilterApi.longColumn("block"), java.lang.Long.valueOf(b)))
+  /** Data files opened and footers read by the driver-side passes. */
+  private[graft] val fileOpens, footerReads = new AtomicLong
 
   /** A reader of `file` with the session's read options over `conf`: it
     * yields only the row groups whose statistics admit `filter` (missing
@@ -145,11 +178,36 @@ object RaquetIO {
       footer: Option[ParquetMetadata] = None): ParquetFileReader = {
     val input = HadoopInputFile.fromStatus(file, conf)
     val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
+    fileOpens.incrementAndGet()
     footer match {
       case Some(f) => ParquetFileReader.open(input, f, options, input.newStream())
-      case None => ParquetFileReader.open(input, options)
+      case None =>
+        footerReads.incrementAndGet()
+        ParquetFileReader.open(input, options)
     }
   }
+
+  /** `reader`, a reader of `file` opened without a cached footer, once its
+    * footer is in the cache. */
+  private def cacheFooter(file: FileStatus, reader: ParquetFileReader): ParquetFileReader = {
+    FooterCache.shared.put(file, FooterCache.Entry(reader.getFooter, None))
+    reader
+  }
+
+  /** The footer of `file`, from the cache or read and cached. */
+  private def footerOf(conf: Configuration, file: FileStatus): ParquetMetadata =
+    FooterCache.shared.get(file).map(_.footer).getOrElse {
+      val reader = cacheFooter(file, openFile(conf, file))
+      try reader.getFooter finally reader.close()
+    }
+
+  /** A listed table: each path the table path matched with the data files
+    * under it, every data file in path order, and whether the table is
+    * flat: every file is a matched path or sits directly in a matched
+    * directory, so Spark infers no partition column from a `k=v`
+    * directory. */
+  private final case class Listing(roots: Seq[(HPath, Seq[FileStatus])],
+      files: Seq[FileStatus], flat: Boolean)
 
   /** The data files of the table at `path` in path order, by Spark's listing
     * rules: the path may be a glob; a file path is a single-file table; in a
@@ -158,39 +216,52 @@ object RaquetIO {
     * empty files are dropped. Goes through the Hadoop `FileSystem`, so
     * remote paths list as Spark does. */
   private[raquet] def dataFiles(conf: Configuration, path: String): Seq[FileStatus] =
-    listTable(conf, path)._1
+    listTable(conf, path).files
 
-  /** [[dataFiles]], and whether the table is flat: every file is a matched
-    * path or sits directly in a matched directory, so Spark infers no
-    * partition column from a `k=v` directory. */
-  private def listTable(conf: Configuration, path: String): (Seq[FileStatus], Boolean) = {
+  private def listTable(conf: Configuration, path: String): Listing = {
     val root = new HPath(path)
     val fs = root.getFileSystem(conf)
-    def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) ||
-      n.endsWith("._COPYING_")
     def walk(s: FileStatus): Seq[FileStatus] =
       if (!s.isDirectory) Seq(s).filter(_.getLen > 0)
       else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
     val tops = Option(fs.globStatus(root)).toSeq.flatten
     if (tops.isEmpty) throw new java.io.FileNotFoundException(s"path does not exist: $path")
-    val files = tops.flatMap(t => if (t.isDirectory) walk(t) else Seq(t)).sortBy(_.getPath.toString)
+    val roots = tops.map(t => t.getPath -> (if (t.isDirectory) walk(t) else Seq(t)))
+    val files = roots.flatMap(_._2).sortBy(_.getPath.toString)
     val matched = tops.map(_.getPath).toSet
-    (files, files.forall(f => matched(f.getPath) || matched(f.getPath.getParent)))
+    Listing(roots, files, files.forall(f => matched(f.getPath) || matched(f.getPath.getParent)))
   }
+
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_")
+
+  /** The parquet scan of the table the footer pass listed. */
+  private def scan(spark: SparkSession, path: String, t: Footers): DataFrame =
+    ListedFileScan(spark, path, t.listing.roots, t.schema)
 
   /** The data schema Spark's inference derives from this footer: its
     * row-metadata entry or the converted parquet schema, built with the
     * converter settings schema inference uses. */
-  private def sparkSchema(spark: SparkSession, file: FileStatus,
-      reader: ParquetFileReader): StructType = {
+  private def sparkSchema(spark: SparkSession, file: HPath, footer: ParquetMetadata): StructType = {
     val c = spark.sessionState.conf
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, reader.getFooter),
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(
         assumeBinaryIsString = c.isParquetBinaryAsString,
         assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
         inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
         nanosAsLong = c.legacyParquetNanosAsLong,
         respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
+  /** The data schema of a table of `files` (Spark's own listing) as Spark
+    * infers it without schema merging, from the footer of its first data
+    * file in path order, on the driver; None for a table without one. The
+    * `raquet` source's schema. */
+  def inferSchema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.filter(f => f.getLen > 0 && !hidden(f.getPath.getName)).sortBy(_.getPath.toString)
+      .headOption.map(f => sparkSchema(spark, f.getPath, footerOf(conf, f)))
   }
 
   /** `metadata` of the first `block = 0` row in the row groups the reader's
@@ -218,15 +289,12 @@ object RaquetIO {
     found
   }
 
-  /** Files of the table at `path` that hold a `block = 0` row, read as the
-    * footer pass reads it: only the row groups whose `block` statistics
-    * admit 0 (missing statistics admit it) are searched. */
+  /** Files of the table at `path` that hold a `block = 0` row, searched as
+    * the footer pass searches them. */
   private[raquet] def metadataFiles(spark: SparkSession, path: String): Seq[Path] = {
     val conf = spark.sessionState.newHadoopConf()
-    dataFiles(conf, path).filter { file =>
-      val reader = openFile(conf, file, MetadataRowFilter)
-      try metadataRow(reader).nonEmpty finally reader.close()
-    }.map(f => Paths.get(f.getPath.toUri))
+    dataFiles(conf, path).filter(searchMetadata(conf, _).meta.nonEmpty)
+      .map(f => Paths.get(f.getPath.toUri))
   }
 
   /** S1+S3: full scan, metadata row(s) excluded (`docs/engines.md:118-121`). */
@@ -237,24 +305,31 @@ object RaquetIO {
 
   /** S4: point query — only the tile covering (lon, lat) at `zoom` (default
     * max_zoom). On a flat table without `time_cf` (one row per tile) the
-    * rows are read on the driver from the files whose footers admit the
-    * cell, reusing the footers the footer pass read, and come back as a
-    * local relation: a `select` over it is evaluated by the optimizer and
-    * collects without a Spark job. Partitioned tables (their partition
-    * column comes from the directories) and temporal ones (many rows per
-    * tile) keep the scan, where sorted `block` + pushed equality read a
-    * handful of pages. */
+    * rows are read on the driver and come back as a local relation: a
+    * `select` over it is evaluated by the optimizer and collects without a
+    * Spark job. Of the files whose footers are cached, only those whose
+    * `block` statistics admit the cell are opened; the others are opened
+    * as well and their footers enter the cache. Partitioned tables (their
+    * partition column comes from the directories) and temporal ones (many
+    * rows per tile) keep the scan, where sorted `block` + pushed equality
+    * read a handful of pages. */
   def readAt(spark: SparkSession, path: String, lon: Double, lat: Double,
       zoom: Int = -1): RaquetDataset = {
     val t = footerPass(spark, path)
     val z = if (zoom < 0) t.meta.maxZoom else t.meta.clampZoom(zoom)
     val b = Quadbin.fromLonLat(lon, lat, z)
     val data =
-      if (t.flat && !t.schema.fieldNames.contains("time_cf")) {
+      if (t.listing.flat && !t.schema.fieldNames.contains("time_cf")) {
         val filter = blockFilter(b)
-        LocalParquetRows(spark, t.conf, t.schema,
-          t.files.iterator.map(f => openFile(t.conf, f, filter, t.read.get(f.getPath))), filter)
-      } else spark.read.schema(t.schema).parquet(path).filter(col("block") === b)
+        val readers = t.files.iterator.flatMap { f =>
+          FooterCache.shared.get(f) match {
+            case Some(e) =>
+              Option.when(admits(e.footer, b))(openFile(t.conf, f, filter, Some(e.footer)))
+            case None => Some(cacheFooter(f, openFile(t.conf, f, filter)))
+          }
+        }
+        LocalParquetRows(spark, t.conf, t.schema, readers, filter)
+      } else scan(spark, path, t).filter(col("block") === b)
     RaquetDataset(data, t.meta)
   }
 
@@ -486,6 +561,7 @@ object RaquetIO {
       .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
     Files.createDirectories(Paths.get(file).toAbsolutePath.getParent)
     Files.move(part, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
+    FooterCache.evict(Paths.get(file))
     deleteTree(tmp)
   }
 

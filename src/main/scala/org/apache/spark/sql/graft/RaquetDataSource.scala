@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal, Not}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetDataSourceV2, ParquetTable}
 import org.apache.spark.sql.types.StructType
@@ -16,9 +19,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * raquet table format as a registered Spark data source (discovered via
   * META-INF/services/…DataSourceRegister).
   *
-  * Reading delegates wholesale to the parquet source (raquet IS parquet —
-  * spec `format-specs/raquet.md:9-18`), so schema inference, vectorized
-  * scan, predicate pushdown, and partition pruning are stock Spark. The one
+  * Reading delegates to the parquet source (raquet IS parquet — spec
+  * `format-specs/raquet.md:9-18`), so vectorized scan, predicate pushdown,
+  * and partition pruning are stock Spark. The schema is the first data
+  * file's footer schema, read on the driver as `RaquetIO` reads it, so
+  * opening a table runs no Spark job. The one
   * raquet-specific read semantic — the `block = 0` metadata row is format
   * plumbing, not data (`raquet.md:38,59-63`; consumers must exclude it,
   * `docs/engines.md:118-121`) — is applied by [[RaquetMetadataExclusion]]:
@@ -64,6 +69,15 @@ object RaquetDataSourceV2 {
       "(the block = 0 metadata row would otherwise surface as data): build " +
       "the session with spark.sql.extensions=graft.functions.GraftExtensions " +
       "or builder.withExtensions(new graft.functions.GraftExtensions())"
+
+  /** The schema of a `raquet` table of `files`: the footer schema of its
+    * first data file, read on the driver without a Spark job, unless the
+    * options ask to merge the files' schemas (`merged`, Spark's parquet
+    * inference). */
+  private[graft] def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus], merged: => Option[StructType]): Option[StructType] =
+    if (new ParquetOptions(options, spark.sessionState.conf).mergeSchema) merged
+    else graft.raquet.RaquetIO.inferSchema(spark, files)
 }
 
 /** Read-only parquet table (non-case subclass: the write path must fail
@@ -73,6 +87,10 @@ class RaquetReadTable(name: String, sparkSession: SparkSession,
     userSpecifiedSchema: Option[StructType])
     extends ParquetTable(name, sparkSession, options, paths, userSpecifiedSchema,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]) {
+  override def inferSchema(files: Seq[FileStatus]): Option[StructType] =
+    RaquetDataSourceV2.inferSchema(sparkSession, options.asCaseSensitiveMap.asScala.toMap, files,
+      super.inferSchema(files))
+
   // When GraftExtensions is installed, RaquetMetadataExclusion replaces this
   // marked table with a plain ParquetTable (plus the block != 0 filter)
   // during analysis — so a scan build reaching THIS class means the rule
@@ -96,6 +114,11 @@ class RaquetReadTable(name: String, sparkSession: SparkSession,
 class RaquetFileFormat extends ParquetFileFormat {
   override def shortName(): String = "raquet"
   override def toString: String = "Raquet"
+
+  override def inferSchema(sparkSession: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] =
+    RaquetDataSourceV2.inferSchema(sparkSession, options, files,
+      super.inferSchema(sparkSession, options, files))
   // Same fail-fast contract as RaquetReadTable.newScanBuilder: the exclusion
   // rule swaps this format for plain ParquetFileFormat, so building a reader
   // here means the extensions are not installed in the active session.
@@ -137,8 +160,10 @@ object RaquetMetadataExclusion extends Rule[LogicalPlan] {
         if r.table.isInstanceOf[ParquetTable] &&
           r.table.name.startsWith(RaquetDataSourceV2.Marker) =>
       val t = r.table.asInstanceOf[ParquetTable]
+      // the data schema rides along, so the plain table infers nothing
       withExclusion(r.copy(table = t.copy(
-        name = t.name.stripPrefix(RaquetDataSourceV2.Marker))))
+        name = t.name.stripPrefix(RaquetDataSourceV2.Marker),
+        userSpecifiedSchema = t.userSpecifiedSchema.orElse(Some(t.dataSchema)))))
     case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
         if fs.fileFormat.isInstanceOf[RaquetFileFormat] =>
       withExclusion(r.copy(relation = fs.copy(

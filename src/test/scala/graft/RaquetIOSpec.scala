@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
@@ -634,7 +636,10 @@ class RaquetIOSpec extends SparkSpec {
     layouts.foreach { path =>
       assert(RaquetMetadata.toJson(RaquetIO.readMetadata(spark, path)) ==
         RaquetMetadata.toJson(limitQueryMetadata(path)), path)
-      assert(RaquetIO.read(spark, path).data.schema == spark.read.parquet(path).schema, path)
+      val inferred = spark.read.parquet(path).schema
+      assert(RaquetIO.read(spark, path).data.schema == inferred, path)
+      assert(spark.read.format("raquet").load(path).schema == inferred, path)
+      assert(spark.sql(s"SELECT * FROM raquet.`$path`").schema == inferred, path)
     }
     assert(RaquetIO.readMetadata(spark, upserted).numBlocks == src.meta.numBlocks + 1)
     assert(RaquetIO.read(spark, parted).data.columns.last == "part")
@@ -662,7 +667,44 @@ class RaquetIOSpec extends SparkSpec {
       assert(jobsDuring(RaquetIO.regionStatsTiles(spark, path, wkt, "band_1"))._2 == 0,
         s"regionStatsTiles($path)")
       assert(jobsDuring(RaquetIO.readAt(spark, path, lon, lat))._2 == 0, s"readAt($path)")
+      assert(jobsDuring(spark.read.format("raquet").load(path))._2 == 0, s"format(raquet) $path")
+      assert(jobsDuring(spark.sql(s"SELECT * FROM raquet.`$path`"))._2 == 0, s"SQL on $path")
     }
+  }
+
+  test("a glob open returns the directory's rows and logs no missing-path warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = tmpDir() + "/glob"
+    val src = RaquetIO.read(spark, fixture)
+    RaquetIO.write(src.data, src.meta, dir, maxRecordsPerFile = 16)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("glob-open-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warnings.add(
+          s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage} ${Option(e.getThrown).getOrElse("")}")
+    }
+    val context = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    capture.start()
+    context.getConfiguration.getRootLogger.addAppender(capture, Level.WARN, null)
+    context.updateLoggers()
+    val rows = try {
+      val glob = s"$dir/part-*"
+      Seq(RaquetIO.read(spark, glob).data,
+        RaquetIO.regionStatsTiles(spark, glob, "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))", "band_1"))
+        .map(_.select("block").collect().map(_.getLong(0)).sorted.toSeq)
+    } finally {
+      context.getConfiguration.getRootLogger.removeAppender(capture.getName)
+      context.updateLoggers()
+      capture.stop()
+    }
+    assert(rows.head == RaquetIO.read(spark, dir).data.select("block").collect()
+      .map(_.getLong(0)).sorted.toSeq)
+    assert(rows.head.length == 85 && rows(1).nonEmpty)
+    assert(warnings.isEmpty, warnings.asScala.mkString("\n"))
   }
 
   test("the metadata row comes from the first file in path order, whatever the scan settings") {
