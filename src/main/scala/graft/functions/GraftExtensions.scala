@@ -23,6 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // spatial predicate → Morton-range pushdown rewrite
     ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.QuadbinRangeRewrite)
+    // small aggregates folded into local relations on the driver, once the
+    // scan's columns and filters are final (see DriverAggregate.scala)
+    ext.injectPreCBORule(_ => org.apache.spark.sql.graft.DriverAggregate)
     // per-query constants out of generated code, right before whole-stage
     // codegen (see ShapeStableCodegen.scala)
     ext.injectColumnar(_ => org.apache.spark.sql.graft.ShapeStableCodegen.columnarRule)

@@ -86,7 +86,6 @@ object Gridding {
     require(x0 >= 0 && y0 >= 0, s"extent origin must be >= 0, got ($x0, $y0)")
     val bw = kernel.width; val bh = kernel.height
     val spark = points.sparkSession
-    import spark.implicits._
     // one row per extent tile (nx·ny is the RASTER size in tiles —
     // driver-side enumeration would be fine, but range() keeps it a plan)
     val tiles = spark.range(nx.toLong * ny)

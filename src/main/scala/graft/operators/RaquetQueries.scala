@@ -1383,12 +1383,11 @@ object RaquetQueries {
       .withColumn("roll3_sum", sum(col("vsum")).over(w.rowsBetween(-2, 0)))
   }
 
-  /** The SQL-text path: everything through `spark.sql` with the registered
-    * function family (metadata bound as a JSON literal, exactly how an
-    * external SQL user would call it). Values re-verify the band_2 pyramid
-    * identity at zoom 4. */
+  /** The SQL-text path: everything through `spark.sql` with the function
+    * family the session's `GraftExtensions` inject (metadata bound as a JSON
+    * literal, exactly how an external SQL user would call it). Values
+    * re-verify the band_2 pyramid identity at zoom 4. */
   def q43SqlSurface(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ds = RaquetIO.read(spark, Fixture)
     ds.data.createOrReplaceTempView("rq_gradient16")
     val metaJson = graft.raquet.RaquetMetadata.toJson(ds.meta)

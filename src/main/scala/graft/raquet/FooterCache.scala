@@ -8,8 +8,9 @@ import com.google.common.cache.{Cache, CacheBuilder, Weigher}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 
-/** Parsed parquet footers of raquet data files, each with the file's parsed
-  * `block = 0` metadata row once a footer pass has found it there.
+/** Parsed parquet footers of raquet data files, each with the outcome of
+  * the footer pass's search for the `block = 0` metadata row once it has
+  * searched the file: the parsed row, or that the file holds none.
   *
   * An entry is keyed by the file's qualified path, length and modification
   * time, which the table listing returns on every open: a rewritten,
@@ -58,8 +59,10 @@ private[graft] object FooterCache {
       Key(file.getPath.toString, file.getLen, file.getModificationTime)
   }
 
-  /** A file's footer and, when the file holds it, its metadata row. */
-  final case class Entry(footer: ParquetMetadata, meta: Option[RaquetMetadata])
+  /** A file's footer; once `searched` for the metadata row, `meta` is the
+    * row when the file holds it (None: the file holds none). */
+  final case class Entry(footer: ParquetMetadata, meta: Option[RaquetMetadata],
+      searched: Boolean = false)
 
   /** The bound of the process-wide cache: about 7,000 footers of one row
     * group and 16 columns (about 9.4 KB each). */

@@ -1,14 +1,12 @@
 package graft.raquet
 
-import java.awt.image.IndexColorModel
 import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
 import javax.imageio.ImageIO
-import javax.imageio.plugins.tiff.TIFFDirectory
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{col => column}
 import org.apache.spark.sql.types._
 
@@ -1287,8 +1285,7 @@ object GeoTiff {
     * per-band stats vector) pairs. */
   private def levelRows(spark: SparkSession, src: SourceInfo, ifd: Int,
       zoom: Int, bs: Int, win: (Int, Int, Int, Int), resampling: String,
-      tileStats: Boolean = false, bandLayout: String = "sequential",
-      compression: String = "gzip", quality: Option[Int] = None)
+      tileStats: Boolean, bandLayout: String, compression: String, quality: Option[Int])
       : org.apache.spark.rdd.RDD[(Row, Seq[Array[Double]])] = {
     val (xtMin, xtMax, ytMin, ytMax) = tileEnvelope(src, win, zoom)
     // row-major tile order + contiguous split ⇒ each partition holds runs

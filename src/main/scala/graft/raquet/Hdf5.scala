@@ -377,7 +377,7 @@ object Hdf5 {
     val c = new Cur(body, 0)
     val ver = c.u8()
     val rank = c.u8()
-    val flags = c.u8()
+    c.skip(1) // flags
     ver match {
       case 1 => c.skip(5) // reserved
       case 2 => c.skip(1) // type

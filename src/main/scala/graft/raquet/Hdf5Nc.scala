@@ -194,7 +194,6 @@ object Hdf5Nc {
       extends GeoTiff.PixelSampler with AutoCloseable {
     private val sz = g.elemSize
     private val buf = new Array[Byte](ww * wh * sz)
-    private val fillByte: Byte = 0 // absent chunks read as the fill pattern below
 
     locally {
       val rr = RandomReader(g.path)

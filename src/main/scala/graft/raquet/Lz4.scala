@@ -56,7 +56,7 @@ object Lz4 {
         require(offset > 0 && offset <= op, s"lz4: bad match offset $offset at $op")
         val matchLen = varLen(token & 0xF) + 4
         require(op + matchLen <= outLen, "lz4: match overruns output")
-        var from = op - offset
+        val from = op - offset
         var k = 0
         while (k < matchLen) { // forward copy handles overlap correctly
           out(op + k) = out(from + k); k += 1

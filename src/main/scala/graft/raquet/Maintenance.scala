@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.quadbin.Quadbin
 
 /** Maintenance / table-management operators (SURVEY.md §2.11).
   *

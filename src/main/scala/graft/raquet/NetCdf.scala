@@ -716,7 +716,6 @@ object NetCdfWriter {
     val ny = lats.length; val nx = lons.length; val nt = times.length
     val planeBytes = ny * nx * 4
     val planePadded = (planeBytes + 3) / 4 * 4
-    val recSize = 8 + planePadded // time (8) + v plane, both 4-aligned
     val latName = mapping.map(_.latAxis).getOrElse("lat")
     val lonName = mapping.map(_.lonAxis).getOrElse("lon")
 
@@ -740,9 +739,6 @@ object NetCdfWriter {
       }
       def floatAttr(n: String, v: Float): Unit = {
         name(n); out.writeInt(5); nn(1); out.writeFloat(v)
-      }
-      def doubleAttr(n: String, v: Double): Unit = {
-        name(n); out.writeInt(6); nn(1); out.writeDouble(v)
       }
       def doublesAttr(n: String, vs: Array[Double]): Unit = {
         name(n); out.writeInt(6); nn(vs.length); vs.foreach(out.writeDouble)

@@ -59,6 +59,15 @@ import graft.quadbin.{Polyfill, Quadbin}
   * cell (and, through the column index, only the matching pages) are read,
   * and the rows come back as a local relation, so a `select` + `collect`
   * over them runs no Spark job.
+  *
+  * An aggregate over a flat table opened here (or over a point read's rows)
+  * whose input the footers show to be small runs on the driver as well:
+  * [[org.apache.spark.sql.graft.DriverAggregate]] reads the admitted row
+  * groups' needed columns through the same cached footers and
+  * [[org.apache.spark.sql.graft.LocalParquetRows]], and folds the aggregate
+  * into a local relation at plan time. The stats-column aggregates and
+  * small region statistics run no Spark job; large and partitioned inputs
+  * keep the scan.
   */
 object RaquetIO {
 
@@ -134,16 +143,18 @@ object RaquetIO {
   }
 
   /** The cache entry of `file` once its metadata row is known: a cached
-    * entry answers when it holds the row or when its `block` statistics
-    * rule out 0; otherwise the file is opened (its footer read only when
-    * not cached) and the row groups whose statistics admit 0 are searched. */
+    * entry answers when it was searched (row found or not) or when its
+    * `block` statistics rule out 0; otherwise the file is opened (its footer
+    * read only when not cached) and the row groups whose statistics admit 0
+    * are searched. */
   private def searchMetadata(conf: Configuration, file: FileStatus): FooterCache.Entry =
     FooterCache.shared.get(file) match {
-      case Some(e) if e.meta.nonEmpty || !admits(e.footer, 0L) => e
+      case Some(e) if e.searched || !admits(e.footer, 0L) => e
       case cached =>
         val reader = openFile(conf, file, MetadataRowFilter, cached.map(_.footer))
         try {
-          val e = FooterCache.Entry(reader.getFooter, metadataRow(reader).map(RaquetMetadata.parse))
+          val e = FooterCache.Entry(reader.getFooter,
+            metadataRow(reader).map(RaquetMetadata.parse), searched = true)
           FooterCache.shared.put(file, e)
           e
         } finally reader.close()
@@ -172,8 +183,9 @@ object RaquetIO {
     * statistics admit it) and, through the column index, only their
     * matching pages. `footer`, the file's footer when it was already read,
     * is not read again. Parquet's default options would build a new Hadoop
-    * `Configuration` for every file (10-15 ms each). */
-  private def openFile(conf: Configuration, file: FileStatus,
+    * `Configuration` for every file (10-15 ms each). Counted in
+    * [[fileOpens]] (and [[footerReads]] without `footer`). */
+  def openFile(conf: Configuration, file: FileStatus,
       filter: FilterCompat.Filter = FilterCompat.NOOP,
       footer: Option[ParquetMetadata] = None): ParquetFileReader = {
     val input = HadoopInputFile.fromStatus(file, conf)
@@ -194,8 +206,10 @@ object RaquetIO {
     reader
   }
 
-  /** The footer of `file`, from the cache or read and cached. */
-  private def footerOf(conf: Configuration, file: FileStatus): ParquetMetadata =
+  /** The footer of the data file `file`, from [[FooterCache]] or read and
+    * cached. With [[openFile]], the file access of the driver-side reads
+    * planned outside this object ([[org.apache.spark.sql.graft.DriverAggregate]]). */
+  def footerOf(conf: Configuration, file: FileStatus): ParquetMetadata =
     FooterCache.shared.get(file).map(_.footer).getOrElse {
       val reader = cacheFooter(file, openFile(conf, file))
       try reader.getFooter finally reader.close()
@@ -327,8 +341,8 @@ object RaquetIO {
               Option.when(admits(e.footer, b))(openFile(t.conf, f, filter, Some(e.footer)))
             case None => Some(cacheFooter(f, openFile(t.conf, f, filter)))
           }
-        }
-        LocalParquetRows(spark, t.conf, t.schema, readers, filter)
+        }.map(_ -> filter)
+        LocalParquetRows(spark, t.conf, t.schema, readers)
       } else scan(spark, path, t).filter(col("block") === b)
     RaquetDataset(data, t.meta)
   }

@@ -83,7 +83,6 @@ object Vp8 {
   // ------------------------------------------------------------ constants
 
   // intra modes (§11.2): DC, V, H, TM, B_PRED
-  private final val DcPred = 0
   private final val BPred = 4
   // 4x4 modes in the numbering of the extracted probability table (libwebp's
   // enum, a permutation of the RFC's listing): B_DC=0, B_TM=1, B_VE=2,

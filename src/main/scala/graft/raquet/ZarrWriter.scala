@@ -60,7 +60,7 @@ object ZarrWriter {
       dataComp: String = "blosc", coordComp: String = "zlib",
       varName: String = "band", dimSeparator: String = ".",
       consolidate: Boolean = true, dataFilter: String = "none"): Unit = {
-    val ny = lats.length; val nx = lons.length; val nt = times.length
+    val ny = lats.length; val nx = lons.length
     val cy = if (chunkY > 0) chunkY else ny
     val cx = if (chunkX > 0) chunkX else nx
     val root = java.nio.file.Paths.get(path)
@@ -92,7 +92,7 @@ object ZarrWriter {
       times: Array[Double], timeUnits: String, fill: Float,
       value: (Int, Int, Int) => Float, cy: Int, cx: Int,
       dataComp: String, coordComp: String, varName: String,
-      dimSeparator: String, dataFilter: String = "none"): Unit = {
+      dimSeparator: String, dataFilter: String): Unit = {
     val ny = lats.length; val nx = lons.length; val nt = times.length
 
     def coordArray(name: String, vals: Array[Double], attrs: String): Unit = {

@@ -68,8 +68,6 @@ object StreamingTiles {
     val gapUs = gapMinutes * 60L * 1000000L
     implicit val stateEnc = Encoders.product[SessionState]
     implicit val outEnc = Encoders.product[ClosedSession]
-    val spark0 = events.sparkSession
-    import spark0.implicits._
 
     def fn(userId: Long, rows: Iterator[Row],
         state: GroupState[SessionState]): Iterator[ClosedSession] = {

@@ -18,13 +18,23 @@ object ListedFileScan {
   def apply(spark: SparkSession, path: String, roots: Seq[(Path, Seq[FileStatus])],
       schema: StructType): DataFrame = {
     val options = Map("path" -> path)
-    val index = new InMemoryFileIndex(spark, roots.map(_._1), options, Some(schema),
-      new Listed(roots.map { case (p, files) => p -> files.toArray }.toMap))
+    val index = new Index(spark, roots, options, schema)
     val partitions = index.partitionSchema
     val resolver = spark.sessionState.conf.resolver
     val data = StructType(schema.filterNot(f => partitions.exists(p => resolver(p.name, f.name))))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions, data.asNullable, None,
       new ParquetFileFormat, options)(spark))
+  }
+
+  /** The file index of a scan built here: Spark's own over the listing,
+    * which it keeps as `files`, every data file in path order. The type marks
+    * the relation as a raquet table opened from its footers, whose footers
+    * [[DriverAggregate]] may read. */
+  final class Index(spark: SparkSession, roots: Seq[(Path, Seq[FileStatus])],
+      options: Map[String, String], schema: StructType)
+      extends InMemoryFileIndex(spark, roots.map(_._1), options, Some(schema),
+        new Listed(roots.map { case (p, files) => p -> files.toArray }.toMap)) {
+    val files: Seq[FileStatus] = roots.flatMap(_._2).sortBy(_.getPath.toString)
   }
 
   /** A file index's leaf-file cache that holds one listing until the index

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import java.time.ZoneId
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -26,42 +27,55 @@ import org.apache.spark.sql.types.StructType
   * rows go through Spark's own non-vectorized parquet read path: the schema
   * is clipped to each file and the records are assembled by
   * `ParquetReadSupport`'s row converter, with the conf, time zone and
-  * rebase settings the parquet source would use. A projection over the
-  * relation is evaluated by the optimizer (`ConvertToLocalRelation`), so
-  * collecting it runs no Spark job. */
+  * rebase settings the parquet source would use. Only the columns of the
+  * given schema are read, so a caller that needs a few columns of a wide
+  * table (the `block` and stats columns of a raquet table, say) reads none
+  * of its blob chunks. A projection over the relation is evaluated by the
+  * optimizer (`ConvertToLocalRelation`), so collecting it runs no Spark job;
+  * an aggregate over it, or over a small raquet scan read here, is folded by
+  * [[DriverAggregate]]. */
 object LocalParquetRows {
 
-  /** The records of `readers` that `filter` admits, as a DataFrame of
+  /** Row groups and records the driver-side reads have admitted. */
+  private[graft] val rowGroupsRead, recordsRead = new AtomicLong
+
+  /** The records of `readers` that their filters admit, as a DataFrame of
     * `schema` (made nullable, as the parquet source makes a given schema),
-    * in reader order. Each reader yields the row groups (and, through the
-    * column index, the pages) its own options admit; it is closed once
-    * read. `conf` is the session's Hadoop conf; the read settings are set
-    * on it. */
+    * in reader order. See [[rows]]. */
   def apply(spark: SparkSession, conf: Configuration, schema: StructType,
-      readers: Iterator[ParquetFileReader], filter: FilterCompat.Filter): DataFrame = {
+      readers: Iterator[(ParquetFileReader, FilterCompat.Filter)]): DataFrame = {
     val session = spark.asInstanceOf[classic.SparkSession]
-    val sql = session.sessionState.conf
     val nullable = schema.asNullable
-    setReadConf(conf, sql, nullable)
-    val attrs = DataTypeUtils.toAttributes(nullable)
-    // rows hold views on the page buffers until copied out
-    val copy = InterpretedUnsafeProjection.createProjection(
-      attrs.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
-    val rows = readers.flatMap { reader =>
-      try {
-        if (reader.getRowGroups.isEmpty) Vector.empty
-        else records(reader, conf, sql, filter).map(r => copy(r).copy(): InternalRow).toVector
-      } finally reader.close()
-    }.toVector
-    classic.Dataset.ofRows(session, LocalRelation(attrs, rows))
+    classic.Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(nullable),
+      rows(session.sessionState.conf, conf, nullable, readers)))
   }
 
-  /** The admitted records of one file, each converted in place into the
-    * converter's current row. The converter is set up per file, since its
-    * clipped schema depends on the file's own; files whose statistics admit
-    * no row group are skipped before it. */
+  /** The records of `readers` with the columns of `schema`, in reader
+    * order. Each reader yields the row groups (and, through the column
+    * index, the pages) its own options admit, and its filter, applied to
+    * each record, drops the records it rejects; a reader is closed once
+    * read. `conf` is the session's Hadoop conf; the read settings are set on
+    * it. */
+  def rows(sql: SQLConf, conf: Configuration, schema: StructType,
+      readers: Iterator[(ParquetFileReader, FilterCompat.Filter)]): Vector[InternalRow] = {
+    setReadConf(conf, sql, schema)
+    // rows hold views on the page buffers until copied out
+    val copy = InterpretedUnsafeProjection.createProjection(
+      schema.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+    readers.flatMap { case (reader, filter) =>
+      try {
+        if (reader.getRowGroups.isEmpty) Vector.empty
+        else records(reader, conf, sql, filter, r => copy(r).copy()).toVector
+      } finally reader.close()
+    }.toVector
+  }
+
+  /** The admitted records of one file, by row group, each converted in place
+    * into the converter's current row and `copy`ed out of it. The converter
+    * is set up per file, since its clipped schema depends on the file's own;
+    * files whose statistics admit no row group are skipped before it. */
   private def records(reader: ParquetFileReader, conf: Configuration, sql: SQLConf,
-      filter: FilterCompat.Filter): Iterator[InternalRow] = {
+      filter: FilterCompat.Filter, copy: InternalRow => InternalRow): Iterator[InternalRow] = {
     val meta = reader.getFooter.getFileMetaData
     val fileSchema = meta.getSchema
     val kv = meta.getKeyValueMetaData
@@ -83,7 +97,11 @@ object LocalParquetRows {
     Iterator.continually(reader.readNextFilteredRowGroup()).takeWhile(_ != null).flatMap { pages =>
       val recordReader = io.getRecordReader(pages, materializer, filter)
       // the record filter yields null for the rows it rejects
-      Iterator.fill(pages.getRowCount.toInt)(recordReader.read()).filter(_ != null)
+      val rows = Iterator.fill(pages.getRowCount.toInt)(recordReader.read()).filter(_ != null)
+        .map(copy).toVector
+      rowGroupsRead.incrementAndGet()
+      recordsRead.addAndGet(rows.length)
+      rows
     }
   }
 

@@ -29,7 +29,7 @@ object QuadbinRangeRewrite extends Rule[LogicalPlan] {
     case f @ Filter(cond, child) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val rewritten = conjuncts.map {
-        case q @ QuadbinIntersects(attr: Attribute, wkt, false) =>
+        case QuadbinIntersects(attr: Attribute, wkt, false) =>
           And(rangePredicate(attr, wkt), QuadbinIntersects(attr, wkt, expanded = true))
         // zoom-equality: the zoom bits sit above the Morton bits, so all
         // zoom-z ids form ONE contiguous block range — pushdown-able where

@@ -222,7 +222,6 @@ class AudioSpec extends SparkSpec {
   }
 
   test("Spark end to end: SQL surface ≡ DSL, codegen path") {
-    GraftFunctions_register()
     val sql = spark.sql(
       """SELECT id, mm_wav_stats(
            mm_wav_encode(transform(sequence(0, 99), k -> CAST(k % 21 - 10 AS INT)),
@@ -243,7 +242,4 @@ class AudioSpec extends SparkSpec {
       .collect()
     assert(dsl.forall(_.getLong(1) == 100L * 1000000L / 8000))
   }
-
-  private def GraftFunctions_register(): Unit =
-    graft.functions.GraftFunctions.register(spark)
 }

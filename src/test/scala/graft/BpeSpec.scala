@@ -110,7 +110,6 @@ class BpeSpec extends SparkSpec with PropHelper {
 
   test("malformed spec is an ANALYSIS error, not a codegen crash") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Seq(Tuple1("x")).toDF("text").createOrReplaceTempView("bpe_bad")
     val e = intercept[Exception] {
       spark.sql("SELECT rq_bpe_tokens(text, 'x y;ab c') FROM bpe_bad").collect()
@@ -268,7 +267,6 @@ class BpeSpec extends SparkSpec with PropHelper {
 
   test("SQL registration: rq_bpe_tokens with a literal merges spec") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Seq(Tuple1("stream sort")).toDF("text").createOrReplaceTempView("bpe_in")
     val spec = TextOps.DefaultMerges.map { case (a, b) => s"$a $b" }.mkString(",")
     val out = spark.sql(

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.quadbin.Quadbin
 
@@ -35,7 +34,6 @@ class QuadbinFunctionsSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT quadbin_from_tile(1L, 2L, 3) AS c,
                 quadbin_zoom(quadbin_from_tile(1L, 2L, 3)) AS z,
@@ -47,7 +45,6 @@ class QuadbinFunctionsSpec extends SparkSpec {
 
   test("quadbin_bounds returns wsen array") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val b = spark.sql("SELECT quadbin_bounds(quadbin_from_tile(0L, 0L, 1))")
       .first().getSeq[Double](0)
     assert(b(0) == -180.0 && b(2) == 0.0)
@@ -55,7 +52,6 @@ class QuadbinFunctionsSpec extends SparkSpec {
   }
 
   test("expressions stay null-safe") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT quadbin_zoom(CAST(NULL AS BIGINT)) AS z").first()
     assert(r.isNullAt(0))
   }

@@ -536,7 +536,6 @@ class RaquetIOSpec extends SparkSpec {
   }
 
   test("SQL registrations of clip and nd-stats match the Column DSL") {
-    graft.functions.GraftFunctions.register(spark)
     val ds = RaquetIO.read(spark, fixture)
     ds.data.createOrReplaceTempView("rq_sqlreg")
     val metaJson = graft.raquet.RaquetMetadata.toJson(ds.meta)

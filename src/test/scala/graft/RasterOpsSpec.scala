@@ -102,7 +102,6 @@ class RasterOpsSpec extends SparkSpec {
   test("SQL registrations of reclassify/composite/histogram match the DSL") {
     import org.apache.spark.sql.functions.col
     import graft.functions.GraftFunctions._
-    graft.functions.GraftFunctions.register(spark)
     val ds = graft.raquet.RaquetIO.read(spark,
       graft.operators.RaquetQueries.Fixture)
     ds.data.createOrReplaceTempView("rq_ops_sqlreg")
@@ -135,7 +134,6 @@ class RasterOpsSpec extends SparkSpec {
   test("SQL registrations of band-math/st_contains match the DSL") {
     import org.apache.spark.sql.functions.col
     import graft.functions.GraftFunctions._
-    graft.functions.GraftFunctions.register(spark)
     val ds = graft.raquet.RaquetIO.read(spark,
       graft.operators.RaquetQueries.Fixture)
     ds.data.createOrReplaceTempView("rq_bm_sqlreg")

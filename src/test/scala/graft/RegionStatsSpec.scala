@@ -38,12 +38,14 @@ class RegionStatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Runs the query and returns its merged row, after checking that the
-    * executed plan scans once and unions nothing. */
+    * tiles' executed plan scans once and unions nothing. The plan is the
+    * per-tile one: the merge of a region this small runs on the driver
+    * (`DriverAggregate`), where no scan is left to count. */
   private def oneScan(path: String, wkt: String, band: String): (DataFrame, Row) = {
     val tiles = RaquetIO.regionStatsTiles(spark, path, wkt, band)
-    val df = merged(tiles)
-    val row = df.collect()(0)
-    val plan = df.queryExecution.executedPlan
+    val row = merged(tiles).collect()(0)
+    tiles.collect()
+    val plan = tiles.queryExecution.executedPlan
     assert(collect(plan) { case s: FileSourceScanExec => s }.length == 1, s"scans in\n$plan")
     assert(collect(plan) { case u: UnionExec => u }.isEmpty, s"union in\n$plan")
     (tiles, row)

@@ -79,11 +79,16 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
         ds.meta, "band_1").as("v"))
   }
 
-  private def regionStats(s: SparkSession, i: Int): DataFrame = {
+  /** The per-tile stats of a 4×4-tile region: the distributed part of a
+    * region statistic, whose merge this small runs on the driver. */
+  private def regionTiles(s: SparkSession, i: Int): DataFrame = {
     val (x, y) = (32 + i, 24 + (2 * i) % 5)
     RaquetIO.regionStatsTiles(s, fixture, tileRect(x, y, x + 3, y + 3), "band_1")
-      .agg(rq_stats_merge(col("s")).as("m")).select("m.count", "m.min", "m.max", "m.sum")
   }
+
+  private def regionStats(s: SparkSession, i: Int): DataFrame =
+    regionTiles(s, i).agg(rq_stats_merge(col("s")).as("m"))
+      .select("m.count", "m.min", "m.max", "m.sum")
 
   private def region(s: SparkSession, i: Int): DataFrame = {
     val (x, y) = (33 + i, 24 + (3 * i) % 5)
@@ -113,7 +118,8 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
 
   private val kinds: Seq[(String, (SparkSession, Int) => DataFrame)] =
     Seq("point" -> point, "point scan" -> pointScan, "region stats" -> regionStats,
-      "readRegion" -> region, "kernel constants" -> kernelConstants)
+      "region stats tiles" -> regionTiles, "readRegion" -> region,
+      "kernel constants" -> kernelConstants)
 
   // each mode measures at positions no earlier query used: the class cache
   // is shared by every session in the JVM
@@ -139,7 +145,7 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
       val bare = tileRect(33, 25, 34, 26)
       val queries: Seq[(String, SparkSession => DataFrame)] = Seq(
         "point scan" -> (pointScan(_, 1)),
-        "16-tile region" -> (regionStats(_, 1)),
+        "16-tile region" -> (regionTiles(_, 1)),
         "100-range region" -> (s => RaquetIO.readRegion(s, fixture, sparseWkt).data.select("block")),
         "st_quadbin_intersects" -> (s => s.read.parquet(fixture)
           .filter(col("block") =!= 0L && expr(s"st_quadbin_intersects(block, '$bare')"))
@@ -311,7 +317,7 @@ class ShapeStableCodegenSpec extends SparkSpec with PropHelper {
       Seq[Any](null, 0L, 1L, 100L, -7L, Long.MaxValue).foreach(v => assert(eval(once, v) == eval(e, v)))
     }
     withAqe(false) {
-      Seq(point(spark, 1), pointScan(spark, 1), regionStats(spark, 1),
+      Seq(point(spark, 1), pointScan(spark, 1), regionTiles(spark, 1),
         RaquetIO.readRegion(spark, fixture, sparseWkt).data).foreach { df =>
         val once = ShapeStableCodegen(df.queryExecution.sparkPlan)
         assert(ShapeStableCodegen(once) == once)
