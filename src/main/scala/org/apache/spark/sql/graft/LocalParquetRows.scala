@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.api.InitContext
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference,
@@ -33,7 +34,8 @@ import org.apache.spark.sql.types.StructType
   * of its blob chunks. A projection over the relation is evaluated by the
   * optimizer (`ConvertToLocalRelation`), so collecting it runs no Spark job;
   * an aggregate over it, or over a small raquet scan read here, is folded by
-  * [[DriverAggregate]]. */
+  * [[DriverAggregate]], whose parts stream each file's records through
+  * [[foreach]] and keep none of them. */
 object LocalParquetRows {
 
   /** Row groups and records the driver-side reads have admitted. */
@@ -62,20 +64,51 @@ object LocalParquetRows {
     // rows hold views on the page buffers until copied out
     val copy = InterpretedUnsafeProjection.createProjection(
       schema.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
-    readers.flatMap { case (reader, filter) =>
-      try {
-        if (reader.getRowGroups.isEmpty) Vector.empty
-        else records(reader, conf, sql, filter, r => copy(r).copy()).toVector
-      } finally reader.close()
-    }.toVector
+    val rows = Vector.newBuilder[InternalRow]
+    readers.foreach { case (reader, filter) =>
+      foreach(sql, conf, reader, filter)(r => rows += copy(r).copy())
+    }
+    rows.result()
   }
 
-  /** The admitted records of one file, by row group, each converted in place
-    * into the converter's current row and `copy`ed out of it. The converter
-    * is set up per file, since its clipped schema depends on the file's own;
-    * files whose statistics admit no row group are skipped before it. */
-  private def records(reader: ParquetFileReader, conf: Configuration, sql: SQLConf,
-      filter: FilterCompat.Filter, copy: InternalRow => InternalRow): Iterator[InternalRow] = {
+  /** Hands each admitted record of `reader` to `f`, one row group at a
+    * time, while `live` holds, then closes the reader. A record is the
+    * converter's current row, valid only until `f` returns: it holds views
+    * on the row group's pages and is overwritten by the next record. So a
+    * caller that keeps nothing but what `f` computes holds at most one row
+    * group of the file. `conf` must carry the read settings of
+    * [[setReadConf]]. */
+  private[graft] def foreach(sql: SQLConf, conf: Configuration, reader: ParquetFileReader,
+      filter: FilterCompat.Filter, live: () => Boolean = () => true)(
+      f: InternalRow => Unit): Unit =
+    try {
+      // files whose statistics admit no row group need no converter
+      if (!reader.getRowGroups.isEmpty) {
+        val records = recordReader(reader, conf, sql, filter)
+        def next() = if (live()) reader.readNextFilteredRowGroup() else null
+        var pages = next()
+        while (pages != null) {
+          val rows = records(pages)
+          var left = pages.getRowCount
+          var admitted = 0L
+          while (left > 0 && live()) {
+            // the record filter yields null for the rows it rejects
+            val r = rows.read()
+            if (r != null) { f(r); admitted += 1 }
+            left -= 1
+          }
+          rowGroupsRead.incrementAndGet()
+          recordsRead.addAndGet(admitted)
+          pages = next()
+        }
+      }
+    } finally reader.close()
+
+  /** The record reader of each row group of one file, converting records in
+    * place into the converter's current row. The converter is set up per
+    * file, since its clipped schema depends on the file's own. */
+  private def recordReader(reader: ParquetFileReader, conf: Configuration, sql: SQLConf,
+      filter: FilterCompat.Filter): PageReadStore => RecordReader[InternalRow] = {
     val meta = reader.getFooter.getFileMetaData
     val fileSchema = meta.getSchema
     val kv = meta.getKeyValueMetaData
@@ -94,20 +127,12 @@ object LocalParquetRows {
     val requested = context.getRequestedSchema
     reader.setRequestedSchema(requested)
     val io = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(requested, fileSchema, true)
-    Iterator.continually(reader.readNextFilteredRowGroup()).takeWhile(_ != null).flatMap { pages =>
-      val recordReader = io.getRecordReader(pages, materializer, filter)
-      // the record filter yields null for the rows it rejects
-      val rows = Iterator.fill(pages.getRowCount.toInt)(recordReader.read()).filter(_ != null)
-        .map(copy).toVector
-      rowGroupsRead.incrementAndGet()
-      recordsRead.addAndGet(rows.length)
-      rows
-    }
+    pages => io.getRecordReader(pages, materializer, filter)
   }
 
   /** The settings the parquet source puts on the Hadoop conf of a
     * non-vectorized read of `schema`. */
-  private def setReadConf(conf: Configuration, sql: SQLConf, schema: StructType): Unit = {
+  private[graft] def setReadConf(conf: Configuration, sql: SQLConf, schema: StructType): Unit = {
     val json = schema.json
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
     conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)

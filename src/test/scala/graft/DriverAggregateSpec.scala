@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -12,11 +13,13 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{DriverAggregate, LocalReads, QuadbinRangeRewrite}
+import org.apache.spark.sql.graft.{DriverAggregate, LocalParquetRows, LocalReads,
+  QuadbinRangeRewrite}
 
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
-import graft.quadbin.Quadbin
+import graft.geo.Wkt
+import graft.quadbin.{Polyfill, Quadbin}
 import graft.raquet.{FixtureGen, RaquetIO}
 
 /** [[DriverAggregate]]: small aggregates over raquet tables and local
@@ -224,6 +227,28 @@ class DriverAggregateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("records read on the driver stay intact across pages and row groups") {
+    // plain-encoded strings and blobs over many pages and row groups, so
+    // the converter's values are views on page buffers
+    val dir = tmpDir() + "/pages"
+    spark.range(0, 3000, 1, 1).select(col("id"), concat(lit("value-"), col("id").cast("string"))
+      .as("s"), sha2(col("id").cast("string"), 256).cast("binary").as("b")).write
+      .option("parquet.enable.dictionary", "false").option("parquet.page.size", "4096")
+      .option("parquet.block.row.count.limit", "700").parquet(dir)
+    val file = new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+    val conf = spark.sessionState.newHadoopConf()
+    val status = new HPath(file).getFileSystem(conf).getFileStatus(new HPath(file))
+    val reader = RaquetIO.openFile(conf, status)
+    assert(reader.getRowGroups.size > 2)
+    val want = spark.read.parquet(file)
+    val got = LocalParquetRows(spark, conf, want.schema, Iterator((reader, FilterCompat.NOOP)))
+    def values(df: DataFrame) = df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    })
+    assert(values(got).length == 3000 && values(got) == values(want))
+  }
+
   /** A slope table of `side`×`side` 16-pixel tiles at zoom 10. */
   private def slope(side: Int): String = {
     val dir = tmpDir() + "/slope"
@@ -234,36 +259,113 @@ class DriverAggregateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     dir
   }
 
+  private def estimate(df: DataFrame): DriverAggregate.Estimate =
+    df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }
+      .flatMap(DriverAggregate.estimate).get
+
   test("aggregates above the bound keep their scan and its pushed filters") {
-    val side = 16
-    assert(side * side * DriverAggregate.DecodeMsPerTile > DriverAggregate.DistributedMs)
+    // twice the tiles the rule's threads decode within the bound
+    val threads = DriverAggregate.threads(spark)
+    val parallelism = DriverAggregate.Estimate(0L, 0L, 0L, threads).parallelism
+    val side = math.ceil(math.sqrt(
+      2 * DriverAggregate.DistributedMs * parallelism / DriverAggregate.DecodeMsPerTile)).toInt
     val dir = slope(side)
     val queryB = (s: SparkSession) => {
       val ds = RaquetIO.read(s, dir)
       ds.data.select(rq_summary_stats(col("band_1"), ds.meta, "band_1").getField("mean").as("m"))
         .agg(count(lit(1)).as("total"), sum(when(col("m") < 30.0, 1L).otherwise(0L)).as("hit"))
     }
-    val big = (s: SparkSession) => region(s, dir, 512, 384, side, 10)
-    for ((name, q) <- Seq("query B" -> queryB, "256-tile region" -> big)) {
-      val (withRule, without) = (q(spark), q(plain))
-      assert(scans(withRule).length == 1, s"$name:\n${withRule.queryExecution.executedPlan}")
-      assert(pushed(withRule) == pushed(without), name)
-      assert(sorted(withRule) == sorted(without), name)
-    }
-    // the same region, four tiles wide, folds
-    assert(folded(region(spark, dir, 514, 386, 4, 10)))
-    // the estimates: tiles capped by the cells of the pushed ranges (one
-    // range for the aligned 4×4 square, several for the other), none for
-    // a stats-column aggregate
-    def estimate(df: DataFrame): DriverAggregate.Estimate =
-      df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }
-        .flatMap(DriverAggregate.estimate).get
+    val (withRule, without) = (queryB(spark), queryB(plain))
+    assert(scans(withRule).length == 1, withRule.queryExecution.executedPlan)
+    assert(pushed(withRule) == pushed(without))
+    assert(sorted(withRule) == sorted(without))
+    // it stops reading footers once past the bound
+    val e = estimate(queryB(plain))
+    assert(!e.small && e.tiles <= side * side && e.files < slopeFiles(dir), e)
+    // a region decodes only its boundary tiles: 12 of a 4×4 square's 16,
+    // aligned to one pushed range or not; a stats-column aggregate none
     for ((x, y) <- Seq((512L, 384L), (514L, 386L)))
-      assert(estimate(region(plain, dir, x, y, 4, 10)).tiles == 16, (x, y))
-    // the large ones stop reading footers once past the bound
-    for (e <- Seq(estimate(big(plain)), estimate(queryB(plain))))
-      assert(!e.small && e.tiles <= side * side && e.files < slopeFiles(dir), e)
+      assert(estimate(region(plain, dir, x, y, 4, 10)).tiles == 12, (x, y))
     assert(estimate(colstats(plain, dir).last).tiles == 0)
+  }
+
+  test("a mid-size region folds, costed by its boundary tiles") {
+    val dir = slope(16)
+    assert(slopeFiles(dir) > 2)
+    // 12×12 tiles: 100 inside the polygon take the stats columns, 44 decode
+    val (x, y, side) = (513L, 385L, 12)
+    val q = (s: SparkSession) => region(s, dir, x, y, side, 10)
+    val want = sorted(q(plain))
+    val (got, jobs) = jobsDuring(sorted(q(spark)))
+    assert(jobs == 0 && folded(q(spark)), q(spark).queryExecution.executedPlan)
+    assert(got.nonEmpty && got == want)
+    val boundary = Polyfill.splitCover(Wkt.parse(rect(x, y, x + side - 1, y + side - 1, 10)), 10)._2
+    assert(boundary.length == 4 * side - 4)
+    val e = estimate(q(plain))
+    assert(e.tiles == boundary.length && e.small, e)
+    assert(e.threads <= math.min(DriverAggregate.threads(spark), slopeFiles(dir)), e)
+    // the whole table, as one region, folds too
+    assert(folded(region(spark, dir, 512, 384, 16, 10)))
+    assert(sorted(region(spark, dir, 512, 384, 16, 10)) == sorted(region(plain, dir, 512, 384, 16, 10)))
+  }
+
+  test("repeated folds of a double average are bit-identical, summed in path order") {
+    val q = (s: SparkSession) => RaquetIO.read(s, written).data.agg(avg("band_1_mean"))
+    assert(folded(q(spark)))
+    val runs = Seq.fill(5)(q(spark).collect().head.getDouble(0))
+    assert(runs.map(java.lang.Double.doubleToRawLongBits).distinct.length == 1, runs)
+    // a sequential fold's value: each file's rows in record order, the
+    // files in path order
+    val files = new java.io.File(written).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(files.length > 2)
+    val means = files.flatMap(f => spark.read.parquet(f).select("band_1_mean").collect()
+      .filterNot(_.isNullAt(0)).map(_.getDouble(0)))
+    val sum = means.foldLeft(0.0)(_ + _)
+    assert(java.lang.Double.doubleToRawLongBits(runs.head) ==
+      java.lang.Double.doubleToRawLongBits(sum / means.length), (runs.head, sum / means.length))
+  }
+
+  test("a kernel error in one part is raised as thrown, and every reader is closed") {
+    // gradient16 in 16-row files, one tile's gzip blob corrupted past its
+    // header
+    val dir = tmpDir() + "/corrupt"
+    val src = RaquetIO.read(spark, gradient)
+    val tile = src.data.filter(col("block") =!= 0L).orderBy(col("block"))
+      .select("block", "band_1").collect()(40)
+    val (bad, broken) = (tile.getLong(0), tile.getAs[Array[Byte]](1).clone())
+    for (i <- 16 until broken.length - 8) broken(i) = (broken(i) ^ 0x5a).toByte
+    RaquetIO.write(src.data.withColumn("band_1",
+      when(col("block") === bad, lit(broken)).otherwise(col("band_1"))), src.meta, dir,
+      maxRecordsPerFile = 16)
+    assert(slopeFiles(dir) > 2)
+    def stats(data: DataFrame, meta: graft.raquet.RaquetMetadata) =
+      data.select(rq_summary_stats(col("band_1"), meta, "band_1").getField("mean").as("m"))
+        .agg(sum(col("m")))
+    val table = RaquetIO.read(spark, dir)
+    val q = stats(table.data, table.meta)
+    // the sequential fold: the bad tile alone, as a local relation
+    val alone = RaquetIO.read(spark, dir).data.filter(col("block") === bad).collect()
+    val local = spark.createDataFrame(alone.toSeq.asJava, table.data.schema)
+    val want = intercept[Throwable](stats(local, table.meta).collect())
+    val got = intercept[Throwable](q.collect())
+    assert(!got.isInstanceOf[java.util.concurrent.ExecutionException], got)
+    assert(!got.isInstanceOf[org.apache.spark.SparkException], got)
+    assert(got.getClass == want.getClass && got.getMessage == want.getMessage, (got, want))
+    // the plain session fails the same tile in a job
+    assert(intercept[org.apache.spark.SparkException](
+      stats(RaquetIO.read(plain, dir).data, table.meta).collect()) != null)
+    // no file of the table is left open
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val root = new java.io.File(dir).getCanonicalPath
+    val open = Option(fds.listFiles()).toSeq.flatten.flatMap { f =>
+      scala.util.Try(java.nio.file.Files.readSymbolicLink(f.toPath).toString).toOption
+    }.filter(_.startsWith(root + "/"))
+    assert(open.isEmpty, open)
+    // the parts ran on named daemon threads
+    val pool = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("driver-aggregate"))
+    assert(pool.nonEmpty && pool.forall(_.isDaemon), pool)
   }
 
   private def slopeFiles(dir: String): Int =
