@@ -2,7 +2,7 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.raquet.{GeoTiff, PixelCodec, RaquetIO}
 
@@ -152,12 +152,7 @@ object BigTiffCheck {
       println(s"pixel probe OK ($checked checked). PASS")
     } finally {
       spark.stop()
-      deleteRec(Paths.get(dir.toString))
+      RaquetIO.deleteTree(dir.toString)
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) Files.list(p).forEach(deleteRec(_))
-    Files.deleteIfExists(p)
   }
 }

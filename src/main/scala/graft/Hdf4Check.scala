@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import graft.raquet.{GeoTiff, Hdf4, Hdf4Writer, PixelCodec, RaquetIO}
 
@@ -79,12 +79,7 @@ object Hdf4Check {
       println(s"pixel probe OK ($checked checked). PASS")
     } finally {
       spark.stop()
-      deleteRec(Paths.get(dir.toString))
+      RaquetIO.deleteTree(dir.toString)
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) Files.list(p).forEach(deleteRec(_))
-    Files.deleteIfExists(p)
   }
 }

@@ -29,7 +29,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // per-query constants out of generated code, right before whole-stage
     // codegen (see ShapeStableCodegen.scala)
     ext.injectColumnar(_ => org.apache.spark.sql.graft.ShapeStableCodegen.columnarRule)
-    // format("raquet") metadata-row exclusion (see RaquetDataSource.scala)
+    // metadata-row exclusion for the raquet source, every entry point:
+    // format("raquet"), SQL on a path, USING raquet (see RaquetDataSource.scala)
     ext.injectPostHocResolutionRule(_ =>
       org.apache.spark.sql.graft.RaquetMetadataExclusion)
   }

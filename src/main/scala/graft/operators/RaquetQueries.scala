@@ -3514,10 +3514,12 @@ object RaquetQueries {
   }
 
   /** Registered-source driver proof: `spark.read.format("raquet")` — the
-    * DataSourceRegister path plus the RaquetMetadataExclusion analyzer rule
-    * (metadata row dropped by the SOURCE, not the query). The oracle reads
-    * the same parquet with an explicit `block <> 0`; if the rule failed,
-    * an extra NULL-zoom group appears and the row count mismatches. */
+    * DataSourceRegister path (`RaquetFileFormat`, one `HadoopFsRelation`
+    * planned as a `FileSourceScanExec`) plus the RaquetMetadataExclusion
+    * analyzer rule (metadata row dropped by the SOURCE, not the query). The
+    * oracle reads the same parquet with an explicit `block <> 0`; if the
+    * rule failed, an extra NULL-zoom group appears and the row count
+    * mismatches. */
   def q73DataSource(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("raquet").load(Fixture)
       .groupBy(quadbin_zoom(col("block")).cast("long").as("zoom"))
@@ -3851,14 +3853,8 @@ object RaquetQueries {
       // deliberately unsorted input: the ingest sort must do the work
       df.orderBy(col("band_1_sum")).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .iterator()
-      while (part.hasNext) {
-        val f = part.next()
-        if (f.getFileName.toString.endsWith(".parquet"))
-          java.nio.file.Files.move(f,
-            java.nio.file.Paths.get(inDir, s"$name.parquet"))
-      }
+      graft.raquet.ParquetFooter.parquetFiles(java.nio.file.Paths.get(tmp)).foreach(f =>
+        java.nio.file.Files.move(f, java.nio.file.Paths.get(inDir, s"$name.parquet")))
     }
     drop(b1, "drop1")
     val q = graft.streaming.StreamingTiles.ingest(
@@ -3869,18 +3865,12 @@ object RaquetQueries {
       q.processAllAvailable()
     } finally q.stop()
     val back = spark.read.parquet(outDir)
-    val files = java.nio.file.Files.list(java.nio.file.Paths.get(outDir))
-      .iterator()
-    var nFiles = 0
-    var allSorted = true
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getFileName.toString.endsWith(".parquet")) {
-        nFiles += 1
-        val blocks = spark.read.parquet(f.toString).coalesce(1)
-          .select("block").collect().map(_.getLong(0))
-        allSorted &&= blocks.sameElements(blocks.sorted)
-      }
+    val files = graft.raquet.ParquetFooter.parquetFiles(java.nio.file.Paths.get(outDir))
+    val nFiles = files.size
+    val allSorted = files.forall { f =>
+      val blocks = spark.read.parquet(f.toString).coalesce(1)
+        .select("block").collect().map(_.getLong(0))
+      blocks.sameElements(blocks.sorted)
     }
     back.agg(
       count(lit(1)).as("n_rows"),

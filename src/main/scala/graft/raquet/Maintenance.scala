@@ -275,9 +275,7 @@ object Maintenance {
     * `{prefix}-{k}.parquet`, stamp their footers and delete `tmp`; returns
     * how many moved. */
   private def adoptParts(tmp: String, dir: String, prefix: String): Int = {
-    import scala.jdk.CollectionConverters._
-    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    val parts = ParquetFooter.parquetFiles(java.nio.file.Paths.get(tmp))
     parts.zipWithIndex.foreach { case (p, k) =>
       val dst = java.nio.file.Paths.get(dir, s"$prefix-$k.parquet")
       java.nio.file.Files.move(p, dst)

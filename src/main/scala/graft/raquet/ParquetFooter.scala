@@ -54,11 +54,16 @@ object ParquetFooter {
   def stampAll(dir: String, sortCols: Seq[String] = Seq("block")): Unit = {
     val p = Paths.get(dir)
     if (Files.isRegularFile(p)) stamp(p, sortCols)
-    else {
-      val files = Files.list(p).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      files.foreach(stamp(_, sortCols))
-    }
+    else parquetFiles(p).foreach(stamp(_, sortCols))
+  }
+
+  /** The `.parquet` files directly under `dir`, in path order. The listing
+    * is closed before this returns. */
+  def parquetFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .toSeq.sortBy(_.toString)
+    finally listing.close()
   }
 
   /** Read one footer key-value entry (e.g. GeoParquet's `geo` JSON). */

@@ -571,8 +571,8 @@ object RaquetIO {
   private def writeOneFile(df: DataFrame, file: String, tmp: String,
       options: Map[String, String]): Unit = {
     df.coalesce(1).write.mode("overwrite").options(options).parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmp"))
+    val part = ParquetFooter.parquetFiles(Paths.get(tmp)).headOption
+      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
     Files.createDirectories(Paths.get(file).toAbsolutePath.getParent)
     Files.move(part, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
     FooterCache.evict(Paths.get(file))

@@ -30,10 +30,8 @@ object GeoParquet {
   private def firstParquet(path: String): Path = {
     val p = Paths.get(path)
     if (Files.isRegularFile(p)) p
-    else Files.list(p).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString).headOption.getOrElse(
-        throw new IllegalArgumentException(s"$path: no parquet files"))
+    else ParquetFooter.parquetFiles(p).headOption.getOrElse(
+      throw new IllegalArgumentException(s"$path: no parquet files"))
   }
 
   /** Cheap routing probe: does `path` carry a `geo` footer entry? False
@@ -57,9 +55,7 @@ object GeoParquet {
         s"$path: no 'geo' footer metadata — not a GeoParquet file"))
     val p = Paths.get(path)
     if (Files.isDirectory(p)) {
-      val parts = Files.list(p).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      parts.foreach { part =>
+      ParquetFooter.parquetFiles(p).foreach { part =>
         val pj = ParquetFooter.keyValue(part, "geo").getOrElse(
           throw new IllegalArgumentException(
             s"$part: part file lacks the 'geo' footer entry"))
@@ -129,8 +125,7 @@ object GeoParquet {
     geometryTypes.foreach(types.add)
     crs.foreach(c => colNode.replace("crs", mapper.readTree(c)))
     val geo = mapper.writeValueAsString(root)
-    Files.list(Paths.get(path)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
+    ParquetFooter.parquetFiles(Paths.get(path))
       .foreach(ParquetFooter.stampKeyValue(_, "geo", geo))
   }
 }

@@ -49,8 +49,9 @@ import graft.raquet.RaquetIO
   * `Project`s and `Filter`s over either a local relation (a point read's,
   * say) or a flat raquet table opened from its footers (the scan
   * [[ListedFileScan]] builds; a `k=v`-partitioned table keeps its plan, as
-  * does a `format("raquet")` relation). The rule runs once, before the cost-
-  * based rules, when column pruning and the filters are final.
+  * does a `raquet`-source relation, whose file index is Spark's own). The
+  * rule runs once, before the cost-based rules, when column pruning and the
+  * filters are final.
   *
   * The raquet input is read by [[LocalParquetRows]] with only the columns
   * the chain and the aggregate use, admitting exactly the row groups and
@@ -358,7 +359,8 @@ object DriverAggregate extends Rule[LogicalPlan] with PredicateHelper {
     val all = admitted.fold(Long.MaxValue)(count)
     (admitted, every(exprs.map(guards))) match {
       case (Some(cells), Some(rs)) =>
-        math.min(all, rs.distinct.map(r => all - count(intersect(cells, merged(r))))
+        math.min(all, rs.distinct
+          .map(r => all - count(BlockRanges.intersect(cells, BlockRanges.union(r))))
           .foldLeft(0L)(saturated))
       case _ => all
     }
@@ -389,7 +391,7 @@ object DriverAggregate extends Rule[LogicalPlan] with PredicateHelper {
     * ranges; None when no conjunct bounds `block`. A range leg at one zoom
     * covers its cells of that zoom, an equality one cell. A lone leg
     * arrives as its two bounds, each a conjunct of its own. */
-  private def blockCells(filters: Seq[Expression]): Option[IndexedSeq[(Long, Long)]] = {
+  private def blockCells(filters: Seq[Expression]): Option[Seq[(Long, Long)]] = {
     val los = filters.collect {
       case GreaterThanOrEqual(a: Attribute, Literal(v: Long, LongType)) if isBlock(a) => v
     }
@@ -402,27 +404,7 @@ object DriverAggregate extends Rule[LogicalPlan] with PredicateHelper {
       case QuadbinInRanges(a: Attribute, lo, hi) if isBlock(a) => lo.toSeq.zip(hi)
       case EqualTo(a: Attribute, Literal(v: Long, LongType)) if isBlock(a) => Seq((v, v))
       case EqualTo(Literal(v: Long, LongType), a: Attribute) if isBlock(a) => Seq((v, v))
-    }).map(merged).reduceOption(intersect)
-  }
-
-  /** `rs` sorted, without empty ranges, overlapping ones merged. */
-  private def merged(rs: Seq[(Long, Long)]): IndexedSeq[(Long, Long)] =
-    rs.filter(r => r._1 <= r._2).sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
-      case ((lo, hi) :: done, (l, h)) if l <= hi => (lo, math.max(hi, h)) :: done
-      case (done, r) => r :: done
-    }.reverse.toVector
-
-  /** The common cells of two sorted disjoint range lists. */
-  private def intersect(a: IndexedSeq[(Long, Long)],
-      b: IndexedSeq[(Long, Long)]): IndexedSeq[(Long, Long)] = {
-    val out = Vector.newBuilder[(Long, Long)]
-    var (i, j) = (0, 0)
-    while (i < a.length && j < b.length) {
-      val (lo, hi) = (math.max(a(i)._1, b(j)._1), math.min(a(i)._2, b(j)._2))
-      if (lo <= hi) out += ((lo, hi))
-      if (a(i)._2 < b(j)._2) i += 1 else j += 1
-    }
-    out.result()
+    }).map(BlockRanges.union).reduceOption(BlockRanges.intersect)
   }
 
   private def count(ranges: Seq[(Long, Long)]): Long =

@@ -84,7 +84,7 @@ object BlockRanges {
         if (hi > last.get._2) out(out.length - 1) = (last.get._1, hi)
       } else out += ((lo, hi))
     }
-    out.toSeq
+    out.toVector
   }
 
   /** Spans in both of two sorted, disjoint span lists. */
@@ -98,7 +98,7 @@ object BlockRanges {
       if (lo <= hi) out += ((lo, hi))
       if (a(i)._2 < b(j)._2) i += 1 else j += 1
     }
-    out.toSeq
+    out.toVector
   }
 
   /** Whether `spans` is what `Polyfill.inRanges` needs: sorted, disjoint. */

@@ -71,6 +71,10 @@ class DataSourceSpec extends AnyFunSuite {
         bare.read.format("raquet").load(fixture).count()
       }
       assert(e.getMessage.contains("GraftExtensions"), s"unexpected: $e")
+      val sql = intercept[IllegalStateException] {
+        bare.sql(s"SELECT count(*) FROM raquet.`$fixture`").collect()
+      }
+      assert(sql.getMessage.contains("GraftExtensions"), s"unexpected: $sql")
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
@@ -78,7 +82,30 @@ class DataSourceSpec extends AnyFunSuite {
   }
 
   test("non-raquet parquet (no block column) reads unfiltered through the source") {
-    val df = gspark.read.format("raquet").load("/root/testdata/sf0.001/nation.parquet")
-    assert(df.count() == gspark.read.parquet("/root/testdata/sf0.001/nation.parquet").count())
+    val plain = java.nio.file.Files.createTempDirectory("dsplain").toString + "/t"
+    gspark.range(25).selectExpr("id", "id % 5 AS k").write.parquet(plain)
+    val df = gspark.read.format("raquet").load(plain)
+    assert(df.count() == gspark.read.parquet(plain).count())
+  }
+
+  test("every entry point plans one parquet scan with the exclusion pushed") {
+    gspark.sql(
+      s"CREATE OR REPLACE TEMPORARY VIEW rq_scan USING raquet OPTIONS (path '$fixture')")
+    val entries = Seq(
+      "format(raquet)" -> gspark.read.format("raquet").load(fixture),
+      "SQL on a path" -> gspark.sql(s"SELECT * FROM raquet.`$fixture`"),
+      "USING raquet" -> gspark.sql("SELECT * FROM rq_scan"))
+    entries.foreach { case (name, df) =>
+      val scans = df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.size == 1, s"$name:\n${df.queryExecution.executedPlan}")
+      assert(scans.head.metadata("PushedFilters").contains("Not(EqualTo(block,0))"),
+        s"$name: ${scans.head.metadata("PushedFilters")}")
+    }
+    val s = gspark.read.parquet(fixture).schema
+    val typed = gspark.read.format("raquet").schema(s).load(fixture)
+    assert(typed.schema == s)
+    assert(typed.count() == 85)
   }
 }

@@ -40,18 +40,26 @@ class ParquetFooterSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("footer").toString + "/d"
     val src = RaquetIO.read(spark, fixture)
     RaquetIO.write(src.data, src.meta, out, maxRecordsPerFile = 16)
-    val parts = java.nio.file.Files.list(Paths.get(out)).iterator()
-    var n = 0
-    while (parts.hasNext) {
-      val p = parts.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        n += 1
-        val (v, rgs, sorted) = ParquetFooter.inspect(p)
-        assert(v.contains(ParquetFooter.Version), s"$p missing version KV")
-        assert(sorted == rgs, s"$p rgs=$rgs sorted=$sorted")
-      }
+    val parts = ParquetFooter.parquetFiles(Paths.get(out))
+    parts.foreach { p =>
+      val (v, rgs, sorted) = ParquetFooter.inspect(p)
+      assert(v.contains(ParquetFooter.Version), s"$p missing version KV")
+      assert(sorted == rgs, s"$p rgs=$rgs sorted=$sorted")
     }
-    assert(n >= 3) // split data files + metadata file
+    assert(parts.size >= 3) // split data files + metadata file
+  }
+
+  test("a directory write leaves no descriptor open under the table directory") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "no /proc/self/fd to inspect")
+    val dir = java.nio.file.Files.createTempDirectory("footer-fd").toRealPath()
+    val src = RaquetIO.read(spark, fixture)
+    RaquetIO.write(src.data, src.meta, dir.resolve("d").toString, maxRecordsPerFile = 16)
+    val open = fds.listFiles().toSeq.flatMap { fd =>
+      try Some(java.nio.file.Files.readSymbolicLink(fd.toPath))
+      catch { case _: java.io.IOException => None } // closed since the listing
+    }.filter(_.startsWith(dir))
+    assert(open.isEmpty, s"descriptors left open: ${open.mkString(", ")}")
   }
 
   test("a lying footer length fails by name before it sizes a read") {
