@@ -1,10 +1,7 @@
 package graft.raquet
 
-import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-
-import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{col => column}
@@ -12,9 +9,9 @@ import org.apache.spark.sql.types._
 
 import graft.quadbin.Quadbin
 
-/** GDAL-free GeoTIFF source/sink (S6 subset, S10) built on the JDK's TIFF
-  * ImageIO plugin (deflate/LZW/uncompressed decode) + direct GeoTIFF tag
-  * handling. Mirrors the reference ingest pipeline
+/** GDAL-free GeoTIFF source/sink (S6 subset, S10) built on a direct
+  * strip/tile decoder (none/LZW/deflate/JPEG/PackBits, predictors 2 and 3)
+  * and direct GeoTIFF tag handling. Mirrors the reference ingest pipeline
   * (`raquet/raster2raquet.py` §3.1 trace in SURVEY.md). Supported source
   * CRSes: EPSG:4326, EPSG:3857, the WGS84 UTM zones (326xx/327xx), the
   * common conic/polar systems 5070/2154/3031/3413, and user-defined
@@ -28,7 +25,7 @@ import graft.quadbin.Quadbin
   * `raster2raquet.py:1091-1102`): the DRIVER touches only the TIFF header +
   * IFD tags (random-access reads, never the pixel payload); each TASK opens
   * the file itself and decodes only the strips/tiles covering its target
-  * tiles via ImageIO's source-region reads. Consecutive same-row target
+  * tiles via [[readWindowDirect]]. Consecutive same-row target
   * tiles share one windowed decode (bounded by [[MaxWindowBytes]]) so
   * striped sources don't re-inflate the same strips per tile. Driver memory
   * is O(tags); executor memory is O(window), independent of source size.
@@ -373,47 +370,19 @@ object GeoTiff {
   }
 
   /** Decode only the strips/TIFF-tiles covering the window — the per-task
-    * I/O primitive. Classic TIFF goes through ImageIO's source-region read
-    * (deflate/LZW/PackBits, any layout the JDK plugin handles); BigTIFF —
-    * which the JDK plugin cannot open — takes [[readWindowDirect]],
-    * the strip/tile decoder over the same tag parse the driver already did. */
+    * I/O primitive: [[readWindowDirect]], the strip/tile decoder over the
+    * same tag parse the driver already did, for classic TIFF and BigTIFF,
+    * local or remote (it fetches exactly the byte ranges the window
+    * touches). */
   def readWindowRaster(path: String, wx: Int, wy: Int, ww: Int,
-      wh: Int, ifd: Int = 0): java.awt.image.Raster = {
-    // remote sources go through the direct strip reader: it fetches exactly
-    // the byte ranges the window touches (ImageIO would need a local file)
-    if (isBigTiff(path) || graft.sources.RandomReader.isRemote(path))
-      return readWindowDirect(path, wx, wy, ww, wh, ifd)
-    val iis = ImageIO.createImageInputStream(new File(path))
-    try {
-      val readers = ImageIO.getImageReaders(iis)
-      require(readers.hasNext, s"$path: no ImageIO reader")
-      val reader = readers.next()
-      reader.setInput(iis)
-      try {
-        val param = reader.getDefaultReadParam
-        param.setSourceRegion(new java.awt.Rectangle(wx, wy, ww, wh))
-        if (reader.canReadRaster) reader.readRaster(ifd, param)
-        else reader.read(ifd, param).getRaster
-      } finally reader.dispose()
-    } finally iis.close()
-  }
+      wh: Int, ifd: Int = 0): java.awt.image.Raster =
+    readWindowDirect(path, wx, wy, ww, wh, ifd)
 
-  private def isBigTiff(path: String): Boolean = {
-    val rr = graft.sources.RandomReader(path)
-    try {
-      val a = rr.readAt(0, 4)
-      val le = a(0) == 'I'.toByte
-      val v = if (le) ((a(2) & 0xFF) | ((a(3) & 0xFF) << 8))
-              else ((a(3) & 0xFF) | ((a(2) & 0xFF) << 8))
-      v == 43
-    } finally rr.close()
-  }
-
-  /** Windowed read over raw STRIP or TILE layout (BigTIFF / remote path):
+  /** Windowed read over raw STRIP or TILE layout, classic TIFF or BigTIFF:
     * seeks only the chunks intersecting the window, decompresses
-    * (none/LZW/deflate/JPEG/PackBits) and undoes horizontal-differencing
-    * predictor 2; chunky OR band-separate (planar config 2) interleave,
-    * either byte order.
+    * (none/LZW/deflate/JPEG/PackBits) and undoes the horizontal-differencing
+    * predictors 2 (integer) and 3 (floating point); chunky OR band-separate
+    * (planar config 2) interleave, either byte order.
     *
     * Both layouts are "grids of chunks": a strip is a chunk of the full
     * image width (`chunksAcross` = 1, rows clipped at the image bottom); a

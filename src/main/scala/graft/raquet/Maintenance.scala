@@ -221,13 +221,15 @@ object Maintenance {
     }.toIndexedSeq: _*).cache()
 
     // per-file block ranges from ONE column-pruned scan (metadata rows are
-    // block=0, so the file holding them is only touched if it also holds
-    // data; the metadata file itself is rewritten separately below)
+    // block=0 and excluded here; the metadata row is rewritten below)
     val ranges = all.filter(col("block") =!= 0L)
       .groupBy(input_file_name().as("f"))
       .agg(min("block").as("lo"), max("block").as("hi"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val metaFiles = RaquetIO.metadataFiles(spark, dir)
+    def local(uri: String): java.nio.file.Path =
+      java.nio.file.Paths.get(java.net.URI.create(
+        if (uri.startsWith("file:")) uri else "file://" + uri).getPath)
 
     // touched files: updated keys joined against the (bounded) range table
     import spark.implicits._
@@ -236,7 +238,11 @@ object Maintenance {
       .join(broadcast(rangeDf), col("block") >= col("lo") && col("block") <= col("hi"))
       .select("f").distinct().collect().map(_.getString(0)).toSet
 
-    val dataFilesTouched = ranges.map(_._1).filter(touched.contains)
+    // a file holding the metadata row AND data rows (a single-file table,
+    // a partition output) is rewritten as if touched, so its data rows
+    // survive into the new parts when the metadata files are deleted
+    val dataFilesTouched = ranges.map(_._1)
+      .filter(f => touched.contains(f) || metaFiles.contains(local(f)))
     val oldTouched =
       if (dataFilesTouched.isEmpty) up.limit(0)
       else spark.read.parquet(dataFilesTouched.toIndexedSeq: _*).filter(col("block") =!= 0L)
@@ -257,13 +263,11 @@ object Maintenance {
       .option("compression", RaquetIO.pageCodec(meta)).parquet(tmp)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     adoptParts(tmp, dir, s"part-upsert-$stamp")
-    def local(uri: String): java.nio.file.Path =
-      java.nio.file.Paths.get(java.net.URI.create(
-        if (uri.startsWith("file:")) uri else "file://" + uri).getPath)
     dataFilesTouched.foreach(f => java.nio.file.Files.deleteIfExists(local(f)))
 
     // refresh the metadata row (num_blocks grows by inserted native tiles)
     val meta2 = meta.copy(numBlocks = meta.numBlocks + nativeInserted)
+    // the rest hold nothing but metadata rows
     metaFiles.foreach(java.nio.file.Files.deleteIfExists)
     RaquetIO.writeMetadataFile(spark, schema, meta2, dir, s"metadata-$stamp")
     up.unpersist()

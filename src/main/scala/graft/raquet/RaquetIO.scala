@@ -513,17 +513,6 @@ object RaquetIO {
     tx * ty
   }
 
-  /** S9 (directory form): Morton-sorted data + a separate one-row metadata
-    * file with the same schema. Sorted writes are what make every later read
-    * prunable; `orderBy` range-partitions so each output file covers a
-    * disjoint block range (the property M4 partitioning formalizes).
-    *
-    * @param maxRecordsPerFile M8 size split: roll to a new file every N rows
-    *        (0 = Spark default)
-    * @param rowGroupBytes parquet row-group budget — smaller groups give the
-    *        finer-grained remote pruning the reference tunes for with its
-    *        200-row groups (`docs/performance.md:196-210`); 0 = default
-    */
   /** Parquet page codec for a table whose bytes are dominated by the band
     * blobs: when the blobs are already entropy-coded (gzip/webp/jpeg),
     * parquet-level snappy cannot shrink them and costs a full extra
@@ -533,6 +522,18 @@ object RaquetIO {
   private[raquet] def pageCodec(meta: RaquetMetadata): String =
     if (meta.compression.exists(c => c != "none")) "none" else "snappy"
 
+  /** S9 (directory form): Morton-sorted data + a separate one-row metadata
+    * file with the same schema, `part-0-metadata.parquet`, first in path
+    * order. Sorted writes are what make every later read prunable;
+    * `orderBy` range-partitions so each output file covers a disjoint block
+    * range (the property M4 partitioning formalizes).
+    *
+    * @param maxRecordsPerFile M8 size split: roll to a new file every N rows
+    *        (0 = Spark default)
+    * @param rowGroupBytes parquet row-group budget — smaller groups give the
+    *        finer-grained remote pruning the reference tunes for with its
+    *        200-row groups (`docs/performance.md:196-210`); 0 = default
+    */
   def write(data: DataFrame, meta: RaquetMetadata, dir: String,
       maxRecordsPerFile: Long = 0, rowGroupBytes: Long = 0): Unit = {
     val sortNames = if (data.columns.contains("time_cf"))
@@ -542,7 +543,9 @@ object RaquetIO {
     if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
     if (rowGroupBytes > 0) w = w.option("parquet.block.size", rowGroupBytes)
     w.parquet(dir)
-    metadataDf(data.sparkSession, data.schema, meta).write.mode("append").parquet(dir)
+    // a fixed name that sorts before every `part-00000-…` data file, so
+    // every write of a table lists its files in the same order
+    writeMetadataFile(data.sparkSession, data.schema, meta, dir, "part-0-metadata")
     // spec footer contract (raquet.md:685-695): raquet:version KV +
     // SortingColumn per row group — Spark's writer exposes neither, so the
     // footers are stamped in place (O(footer) per file)
@@ -604,8 +607,9 @@ object RaquetIO {
     rm(Paths.get(path))
   }
 
-  /** Write a standalone one-row metadata file into `dir` (the upsert
-    * refresh path): same schema as the data rows, block = 0. */
+  /** Write a standalone one-row metadata file `name`.parquet into `dir`
+    * (the table writer and the upsert/compact refresh): same schema as the
+    * data rows, block = 0. */
   private[raquet] def writeMetadataFile(spark: SparkSession, schema: StructType,
       meta: RaquetMetadata, dir: String, name: String): Unit =
     writeOneFile(metadataDf(spark, schema, meta), s"$dir/$name.parquet", s"$dir/.meta-tmp",

@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -11,8 +10,9 @@ import graft.raquet.Audio
 /** Audio (WAV/PCM) expression family — the audio members of the multimodal
   * column kernels. Same design as the raster/image expressions: scalar
   * config (rates, widths, window sizes) is bound at plan time from literal
-  * args; the per-row kernels in [[graft.raquet.Audio]] are referenced from
-  * generated code so the whole projection stays inside whole-stage codegen.
+  * args, and each value is stated once as `compute` over the kernels in
+  * [[graft.raquet.Audio]], on the [[TileKernelExpression]] template, so the
+  * whole projection stays inside whole-stage codegen.
   */
 object AudioBridge {
   val infoSchema: StructType = StructType(Seq(
@@ -30,98 +30,62 @@ object AudioBridge {
     StructField("sum_sq", LongType, nullable = false),
     StructField("zero_crossings", LongType, nullable = false)))
 
-  def info(bytes: Array[Byte]): InternalRow = {
-    val w = Audio.parse(bytes)
-    InternalRow(w.sampleRate, w.channels, w.bitsPerSample, w.nFrames.toLong,
-      w.durationUs)
-  }
-
-  def stats(bytes: Array[Byte], channel: Int): InternalRow = {
-    val s = Audio.channelStats(Audio.parse(bytes), channel)
-    InternalRow(s.n, s.min, s.max, s.sum, s.sumSq, s.zeroCrossings)
-  }
-
-  def encode(samples: ArrayData, sampleRate: Int, channels: Int,
-      bits: Int): Array[Byte] =
-    Audio.encode(samples.toIntArray(), sampleRate, channels, bits)
-
-  def resample(bytes: Array[Byte], dstRate: Int): Array[Byte] =
-    Audio.toBytes(Audio.resampleNearest(Audio.parse(bytes), dstRate))
-
-  def frames(bytes: Array[Byte], frameLen: Int, hop: Int,
-      channel: Int): ArrayData =
-    new GenericArrayData(Audio.frameEnergies(Audio.parse(bytes), frameLen, hop, channel))
-
-  def trim(bytes: Array[Byte], threshold: Int): Array[Byte] =
-    Audio.toBytes(Audio.trimSilence(Audio.parse(bytes), threshold))
-
-  def fingerprint(bytes: Array[Byte], frameLen: Int, hop: Int, channel: Int): Long =
-    Audio.fingerprint(Audio.parse(bytes), frameLen, hop, channel)
-
-  val B = "org.apache.spark.sql.graft.AudioBridge"
+  /** The WAV payload a `compute` receives. */
+  def wav(raw: Any): Audio.Wav = Audio.parse(raw.asInstanceOf[Array[Byte]])
 }
 
 /** mm_wav_encode(samples) with plan-time (sample_rate, channels, bits):
   * interleaved signed samples → a canonical WAV payload. The assembly/export
   * step of an audio pipeline (and the synthesis entry for provable tests). */
 case class MmWavEncode(child: Expression, sampleRate: Int, channels: Int, bits: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_encode"
-  override protected def nullSafeEval(samples: Any): Any =
-    AudioBridge.encode(samples.asInstanceOf[ArrayData], sampleRate, channels, bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${AudioBridge.B}.encode($c, $sampleRate, $channels, $bits)")
+  def compute(samples: Any): Any =
+    Audio.encode(samples.asInstanceOf[ArrayData].toIntArray(), sampleRate, channels, bits)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_wav_info(binary): parse the WAV header → (sample_rate, channels, bits,
   * n_frames, duration_us). Malformed payloads error loudly, never null. */
-case class MmWavInfo(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWavInfo(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = AudioBridge.infoSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_info"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.info(raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AudioBridge.B}.info($c)")
+  def compute(raw: Any): Any = {
+    val w = AudioBridge.wav(raw)
+    InternalRow(w.sampleRate, w.channels, w.bitsPerSample, w.nFrames.toLong, w.durationUs)
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_wav_stats(binary) with a plan-time channel: exact integer PCM stats
   * (n, min, max, sum, sum_sq, zero_crossings) — the feature-extraction step
   * for audio quality/silence curation. */
-case class MmWavStats(child: Expression, channel: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWavStats(child: Expression, channel: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = AudioBridge.statsSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_stats"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.stats(raw.asInstanceOf[Array[Byte]], channel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AudioBridge.B}.stats($c, $channel)")
+  def compute(raw: Any): Any = {
+    val s = Audio.channelStats(AudioBridge.wav(raw), channel)
+    InternalRow(s.n, s.min, s.max, s.sum, s.sumSq, s.zeroCrossings)
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_wav_resample(binary) with a plan-time target rate: nearest-neighbour
   * rate conversion (⌊k·src/dst⌋ index map — integer-exact, oracle-provable);
   * returns a complete WAV at the new rate. */
-case class MmWavResample(child: Expression, dstRate: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWavResample(child: Expression, dstRate: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_resample"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.resample(raw.asInstanceOf[Array[Byte]], dstRate)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AudioBridge.B}.resample($c, $dstRate)")
+  def compute(raw: Any): Any = Audio.toBytes(Audio.resampleNearest(AudioBridge.wav(raw), dstRate))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -129,15 +93,13 @@ case class MmWavResample(child: Expression, dstRate: Int)
   * (Σ|x|) of each complete analysis window — the audio frame-sample
   * feature (VAD / silence gating). Trailing partial windows drop. */
 case class MmWavFrames(child: Expression, frameLen: Int, hop: Int, channel: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_frames"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.frames(raw.asInstanceOf[Array[Byte]], frameLen, hop, channel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AudioBridge.B}.frames($c, $frameLen, $hop, $channel)")
+  def compute(raw: Any): Any =
+    new GenericArrayData(Audio.frameEnergies(AudioBridge.wav(raw), frameLen, hop, channel))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -145,31 +107,23 @@ case class MmWavFrames(child: Expression, frameLen: Int, hop: Int, channel: Int)
   * energy-contour delta-sign fingerprint (≤63 bits) — audio near-dup
   * detection as an exact groupBy, invariant under polarity/gain changes. */
 case class MmWavFingerprint(child: Expression, frameLen: Int, hop: Int, channel: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_fingerprint"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.fingerprint(raw.asInstanceOf[Array[Byte]], frameLen, hop, channel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${AudioBridge.B}.fingerprint($c, $frameLen, $hop, $channel)")
+  def compute(raw: Any): Any = Audio.fingerprint(AudioBridge.wav(raw), frameLen, hop, channel)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_wav_trim(binary) with a plan-time threshold: cut leading/trailing
   * frames where every channel's |sample| ≤ threshold; all-silent audio
   * yields an empty (0-frame) WAV. */
-case class MmWavTrim(child: Expression, threshold: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWavTrim(child: Expression, threshold: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_wav_trim"
-  override protected def nullSafeEval(raw: Any): Any =
-    AudioBridge.trim(raw.asInstanceOf[Array[Byte]], threshold)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AudioBridge.B}.trim($c, $threshold)")
+  def compute(raw: Any): Any = Audio.toBytes(Audio.trimSilence(AudioBridge.wav(raw), threshold))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -1,8 +1,6 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,8 +8,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Byte-pair-encoding tokenizer (Sennrich et al. 2016 / the GPT-2 `bpe()`
   * loop): per word, repeatedly merge the lowest-rank adjacent token pair,
   * all occurrences left-to-right, until no ranked pair remains. The rank
-  * table is a plan-time constant shipped once per executor via a codegen
-  * reference object, so tokenization runs inside whole-stage codegen with
+  * table is a plan-time constant built once on the driver and shipped with
+  * the expression the [[TileKernelExpression]] template binds into
+  * generated code, so tokenization runs inside whole-stage codegen with
   * zero per-row allocation beyond the token array itself — the 100 TB
   * "token count / token sequence" shape (the reference's pipelines count
   * tokens with an external tokenizer process; here it is a Catalyst
@@ -229,13 +228,16 @@ object WordPieceKernel {
 /** `rq_wordpiece_tokens(text)` with a plan-time vocab — WordPiece token
   * array under greedy longest-match (see [[WordPieceKernel]]). */
 case class WordPieceTokens(child: Expression, vocabSpec: String)
-  extends UnaryExpression with UnaryLike[Expression] {
+  extends UnaryTileKernel {
 
   override def prettyName: String = "rq_wordpiece_tokens"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // any input type reaches checkInputDataTypes, uncast
+  override def inputTypes: Seq[AbstractDataType] = Seq(AnyDataType)
 
-  @transient private lazy val vocab: java.util.HashSet[String] =
-    WordPieceKernel.buildVocab(vocabSpec)
+  // built on the driver and shipped with the plan (see buildPlanTimeState)
+  private lazy val vocab: java.util.HashSet[String] = WordPieceKernel.buildVocab(vocabSpec)
+  override protected def buildPlanTimeState(): Unit = vocab
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -243,21 +245,14 @@ case class WordPieceTokens(child: Expression, vocabSpec: String)
       TypeCheckResult.TypeCheckFailure(
         s"rq_wordpiece_tokens expects STRING, got ${child.dataType.catalogString}")
     else
-      scala.util.Try(WordPieceKernel.buildVocab(vocabSpec)) match {
+      scala.util.Try(vocab) match {
         case scala.util.Success(_) => TypeCheckResult.TypeCheckSuccess
         case scala.util.Failure(e) =>
           TypeCheckResult.TypeCheckFailure(s"invalid WordPiece vocab: ${e.getMessage}")
       }
   }
 
-  override protected def nullSafeEval(t: Any): Any =
-    WordPieceKernel.encodeText(t.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wpVocab", vocab, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.WordPieceKernel.encodeText($c, $ref)")
-  }
+  def compute(t: Any): Any = WordPieceKernel.encodeText(t.asInstanceOf[UTF8String], vocab)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -266,13 +261,16 @@ case class WordPieceTokens(child: Expression, vocabSpec: String)
 /** `rq_bpe_tokens(text, 'x y,ab c,...')` — BPE token array for `text`
   * under the given merges table (rank = list position). */
 case class BpeTokens(child: Expression, mergesSpec: String)
-  extends UnaryExpression with UnaryLike[Expression] {
+  extends UnaryTileKernel {
 
   override def prettyName: String = "rq_bpe_tokens"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // any input type reaches checkInputDataTypes, uncast
+  override def inputTypes: Seq[AbstractDataType] = Seq(AnyDataType)
 
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] =
-    BpeKernel.buildRanks(mergesSpec)
+  // built on the driver and shipped with the plan (see buildPlanTimeState)
+  private lazy val ranks: java.util.HashMap[String, Integer] = BpeKernel.buildRanks(mergesSpec)
+  override protected def buildPlanTimeState(): Unit = ranks
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -283,21 +281,14 @@ case class BpeTokens(child: Expression, mergesSpec: String)
       // the merges spec is a plan-time constant: validate it HERE so a
       // malformed table is a clean AnalysisException, not a codegen-time
       // crash (or per-task retry storm under interpreted fallback)
-      scala.util.Try(BpeKernel.buildRanks(mergesSpec)) match {
+      scala.util.Try(ranks) match {
         case scala.util.Success(_) => TypeCheckResult.TypeCheckSuccess
         case scala.util.Failure(e) =>
           TypeCheckResult.TypeCheckFailure(s"invalid BPE merges spec: ${e.getMessage}")
       }
   }
 
-  override protected def nullSafeEval(t: Any): Any =
-    BpeKernel.encodeText(t.asInstanceOf[UTF8String], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.BpeKernel.encodeText($c, $ref)")
-  }
+  def compute(t: Any): Any = BpeKernel.encodeText(t.asInstanceOf[UTF8String], ranks)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

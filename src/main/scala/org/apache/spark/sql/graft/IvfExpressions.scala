@@ -1,14 +1,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Plan-time IVF codebook: the trained centroid matrix, resolved ONCE on the
-  * driver (like [[graft.raquet.BandKernel]]) and carried into generated code
-  * as a reference object — assignment runs as tight primitive loops inside
-  * whole-stage codegen, no per-row broadcast lookup or UDF boxing.
+  * driver (like [[graft.raquet.BandKernel]]) and shipped as a field of the
+  * expression the [[TileKernelExpression]] template binds into generated
+  * code — assignment runs as tight primitive loops inside whole-stage
+  * codegen, no per-row broadcast lookup or UDF boxing.
   *
   * The inverted-file design follows the published IVF-flat structure
   * (Jégou et al., "Product Quantization for Nearest Neighbor Search", §IV):
@@ -56,46 +56,26 @@ final case class IvfCodebook(centroids: Array[Array[Double]]) extends Serializab
   }
 }
 
-object IvfBridge {
-  val B = "org.apache.spark.sql.graft.IvfBridge"
-
-  def cellOf(cb: IvfCodebook, vec: ArrayData): Int =
-    cb.cell(vec.toDoubleArray())
-
-  def cellsOf(cb: IvfCodebook, vec: ArrayData, nprobe: Int): ArrayData =
-    ArrayData.toArrayData(cb.nearestCells(vec.toDoubleArray(), nprobe))
-}
-
 /** vec_ivf_cell(embedding) → the vector's inverted-list id (coarse
   * quantization — the index-build side of IVF). */
-case class VecIvfCell(child: Expression, codebook: IvfCodebook)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class VecIvfCell(child: Expression, codebook: IvfCodebook) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_ivf_cell"
-  override protected def nullSafeEval(vec: Any): Any =
-    IvfBridge.cellOf(codebook, vec.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebook", codebook, classOf[IvfCodebook].getName)
-    defineCodeGen(ctx, ev, c => s"${IvfBridge.B}.cellOf($cb, $c)")
-  }
+  def compute(vec: Any): Any = codebook.cell(vec.asInstanceOf[ArrayData].toDoubleArray())
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** vec_ivf_probe_cells(embedding, nprobe) → the nprobe nearest list ids
   * (the query side of IVF — explode and equi-join against the index). */
 case class VecIvfProbeCells(child: Expression, codebook: IvfCodebook, nprobe: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_ivf_probe_cells"
-  override protected def nullSafeEval(vec: Any): Any =
-    IvfBridge.cellsOf(codebook, vec.asInstanceOf[ArrayData], nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebook", codebook, classOf[IvfCodebook].getName)
-    defineCodeGen(ctx, ev, c => s"${IvfBridge.B}.cellsOf($cb, $c, $nprobe)")
-  }
+  def compute(vec: Any): Any = ArrayData.toArrayData(
+    codebook.nearestCells(vec.asInstanceOf[ArrayData].toDoubleArray(), nprobe))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -2,63 +2,50 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.raquet.{CfTime, CfTimeInfo, Multimodal, PixelCodec}
+import graft.geo.{GeoJson, Measure, Simplify, Wkb, Wkt}
+import graft.raquet.{CfTime, CfTimeInfo, Multimodal, PixelCodec, WebPAnim}
 
-/** CF-time and multimodal expressions. Same pattern as the raster family:
-  * config resolved at construction from literal args, kernels referenced
-  * into generated code. */
+/** CF-time, multimodal and vector-geometry expressions. Same pattern as the
+  * raster family: config resolved at construction from literal args, each
+  * value stated once as `compute` on the [[TileKernelExpression]]
+  * template. */
 
 /** cf_to_timestamp(value) with plan-time units/calendar (F16): CF numeric
   * time → TimestampType; NULL for non-Gregorian calendars or invalid dates
   * (reference `raster2raquet.py:331-368`). */
 case class CfToTimestamp(child: Expression, units: String, calendar: String)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val info: CfTimeInfo =
+    extends UnaryTileKernel {
+  // built on the driver and shipped with the plan (see buildPlanTimeState)
+  private lazy val info: CfTimeInfo =
     CfTime.parseUnits(units, calendar).getOrElse(
       throw new IllegalArgumentException(s"unparseable CF units: $units"))
+  override protected def buildPlanTimeState(): Unit = info
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
   override def dataType: DataType = TimestampType
   override def nullable: Boolean = true
   override def prettyName: String = "cf_to_timestamp"
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val m = info.toEpochMicros(v.asInstanceOf[Double])
-      if (m == Long.MinValue) null else m
-    }
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("cfInfo", info, classOf[CfTimeInfo].getName)
-    nullSafeCodeGen(ctx, ev, v => {
-      val m = ctx.freshName("micros")
-      s"""
-         |long $m = $k.toEpochMicros($v);
-         |if ($m == Long.MIN_VALUE) { ${ev.isNull} = true; } else { ${ev.value} = $m; }
-       """.stripMargin
-    })
+  def compute(v: Any): Any = {
+    val m = info.toEpochMicros(v.asInstanceOf[Double])
+    if (m == Long.MinValue) null else m
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** rq_inflate(binary): gunzip when gzip magic present, else pass through —
   * exposes raw tile bytes to SQL-level slicing (frame sampling etc.). */
-case class RqInflate(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class RqInflate(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rq_inflate"
-  override protected def nullSafeEval(raw: Any): Any = {
+  def compute(raw: Any): Any = {
     val b = raw.asInstanceOf[Array[Byte]]
     if (PixelCodec.isGzip(b)) PixelCodec.gzipDecompress(b) else b
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.PixelCodec.isGzip($c) ? graft.raquet.PixelCodec.gzipDecompress($c) : $c")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -77,22 +64,18 @@ object MmBridge {
     InternalRow(img.width, img.height, img.channels,
       sum / math.max(1, img.pixels.length))
   }
-  val B = "org.apache.spark.sql.graft.MmBridge"
 }
 
 /** mm_image_stats(binary): REAL image decode (JPEG/PNG via javax.imageio) →
   * (width, height, channels, mean brightness). The feature-extraction step
   * of a multimodal pipeline; decode failures surface as errors, not nulls. */
-case class MmImageStats(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmImageStats(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = MmBridge.imageSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_image_stats"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     MmBridge.imageStats(raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${MmBridge.B}.imageStats($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -100,17 +83,14 @@ case class MmImageStats(child: Expression)
   * neighbour resample of raw uint8 pixels. */
 case class MmResize(first: Expression, second: Expression, third: Expression,
     srcWidth: Int, srcHeight: Int, channels: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType, IntegerType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_resize"
-  override protected def nullSafeEval(raw: Any, w2: Any, h2: Any): Any =
+  def compute(raw: Any, w2: Any, h2: Any): Any =
     Multimodal.resizeNearest(raw.asInstanceOf[Array[Byte]], srcWidth, srcHeight,
       channels, w2.asInstanceOf[Int], h2.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, w2, h2) =>
-      s"graft.raquet.Multimodal.resizeNearest($c, $srcWidth, $srcHeight, $channels, $w2, $h2)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
     copy(f, s, t)
 }
@@ -118,16 +98,13 @@ case class MmResize(first: Expression, second: Expression, third: Expression,
 /** mm_jpeg_pixels(binary): decode a whole JPEG/PNG tile to its raw
   * BIP-interleaved uint8 buffer (the interleaved-layout lossy path,
   * spec `format-specs/raquet.md:49-57`). */
-case class MmJpegPixels(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmJpegPixels(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_jpeg_pixels"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.decodeImage(raw.asInstanceOf[Array[Byte]]).pixels
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.raquet.Multimodal.decodeImage($c).pixels()")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -136,16 +113,13 @@ case class MmJpegPixels(child: Expression)
   * raquet's interleaved codec family (spec `raquet.md:272-277`). Lossless,
   * so raquet round-trips are bit-exact. */
 case class MmWebpEncode(child: Expression, imgWidth: Int, imgHeight: Int, channels: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_encode"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.encodeWebP(raw.asInstanceOf[Array[Byte]], imgWidth, imgHeight, channels)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.Multimodal.encodeWebP($c, $imgWidth, $imgHeight, $channels)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -155,65 +129,37 @@ case class MmWebpEncode(child: Expression, imgWidth: Int, imgHeight: Int, channe
   * (`raster2raquet.py:844-845`). */
 case class MmWebpLossy(child: Expression, imgWidth: Int, imgHeight: Int,
     channels: Int, quality: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_lossy"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.encodeWebPLossy(raw.asInstanceOf[Array[Byte]], imgWidth,
       imgHeight, channels, quality)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.Multimodal.encodeWebPLossy($c, $imgWidth, $imgHeight, $channels, $quality)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_webp_pixels(bytes) with plan-time channels: decode a WebP tile —
   * lossless VP8L or lossy VP8 ([[graft.raquet.Vp8]]) — to its raw
   * interleaved uint8 buffer. */
-case class MmWebpPixels(child: Expression, channels: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWebpPixels(child: Expression, channels: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_pixels"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.decodeWebP(raw.asInstanceOf[Array[Byte]], channels)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.Multimodal.decodeWebP($c, $channels)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object AnimBridge {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import graft.raquet.WebPAnim
-
   val infoSchema: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("n_frames", IntegerType, nullable = false),
     StructField("loop_count", IntegerType, nullable = false),
     StructField("duration_ms", LongType, nullable = false)))
-
-  def info(bytes: Array[Byte]): InternalRow = {
-    val i = WebPAnim.info(bytes)
-    InternalRow(i.width, i.height, i.frameCount, i.loopCount, i.totalDurationMs)
-  }
-
-  def encode(frames: ArrayData, w: Int, h: Int, ch: Int, durMs: Int): Array[Byte] = {
-    val n = frames.numElements()
-    val seq = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) { seq(i) = frames.getBinary(i); i += 1 }
-    WebPAnim.encodeAnimation(seq.toSeq, w, h, ch, durMs)
-  }
-
-  def framePixels(bytes: Array[Byte], idx: Int, channels: Int): Array[Byte] =
-    WebPAnim.decodeFrame(bytes, idx).toInterleaved(channels)
-
-  val B = "org.apache.spark.sql.graft.AnimBridge"
 }
 
 /** mm_webp_anim(frames) with plan-time (width, height, channels,
@@ -221,246 +167,161 @@ object AnimBridge {
   * animated WebP (full-canvas no-blend frames). The video-assembly step of
   * a multimodal pipeline. */
 case class MmWebpAnimEncode(child: Expression, imgWidth: Int, imgHeight: Int,
-    channels: Int, durationMs: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    channels: Int, durationMs: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(BinaryType))
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_anim"
-  override protected def nullSafeEval(frames: Any): Any =
-    AnimBridge.encode(frames.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+  def compute(frames: Any): Any = {
+    val a = frames.asInstanceOf[ArrayData]
+    WebPAnim.encodeAnimation(IndexedSeq.tabulate(a.numElements())(a.getBinary),
       imgWidth, imgHeight, channels, durationMs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${AnimBridge.B}.encode($c, $imgWidth, $imgHeight, $channels, $durationMs)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-object GeoBridge {
-  import graft.geo.{Measure, Wkb}
-
-  val centroidSchema: StructType = StructType(Seq(
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false)))
-
-  def area(wkt: String): Double = Measure.area(RqBridge.geomOf(wkt))
-  def perimeter(wkt: String): Double = Measure.perimeter(RqBridge.geomOf(wkt))
-  def centroid(wkt: String): InternalRow = {
-    val (x, y) = Measure.centroid(RqBridge.geomOf(wkt))
-    InternalRow(x, y)
   }
-  def wkbToWkt(b: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(Wkb.toWkt(b))
-  def wktToWkb(wkt: String): Array[Byte] = Wkb.write(RqBridge.geomOf(wkt))
-  def simplify(wkt: String, tol: Double): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.geo.Wkt.format(graft.geo.Simplify.simplify(RqBridge.geomOf(wkt), tol)))
-  def nPoints(wkt: String): Long =
-    graft.geo.Simplify.nPoints(RqBridge.geomOf(wkt))
-  def geojsonToWkt(s: String): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.geo.Wkt.format(graft.geo.GeoJson.parse(s)))
-  def wktToGeojson(wkt: String): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.geo.GeoJson.format(RqBridge.geomOf(wkt)))
-
-  val B = "org.apache.spark.sql.graft.GeoBridge"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_area(wkt): planar shoelace area in coordinate units (holes
   * subtract). Per-row parse amortized by the [[RqBridge.geomOf]] run-cache. */
-case class StArea(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StArea(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_area"
-  override protected def nullSafeEval(w: Any): Any = GeoBridge.area(w.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.area($w.toString())")
+  def compute(w: Any): Any = Measure.area(RqBridge.geomOf(w.toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_perimeter(wkt): summed ring lengths in coordinate units. */
-case class StPerimeter(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StPerimeter(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_perimeter"
-  override protected def nullSafeEval(w: Any): Any = GeoBridge.perimeter(w.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.perimeter($w.toString())")
+  def compute(w: Any): Any = Measure.perimeter(RqBridge.geomOf(w.toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_centroid(wkt) → (x, y): area-weighted centroid. */
-case class StCentroid(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StCentroid(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = GeoBridge.centroidSchema
+  override def dataType: DataType = StructType(Seq(
+    StructField("x", DoubleType, nullable = false),
+    StructField("y", DoubleType, nullable = false)))
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_centroid"
-  override protected def nullSafeEval(w: Any): Any = GeoBridge.centroid(w.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.centroid($w.toString())")
+  def compute(w: Any): Any = {
+    val (x, y) = Measure.centroid(RqBridge.geomOf(w.toString))
+    InternalRow(x, y)
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_geom_from_wkb(binary) → WKT: the GeoParquet bridge — a WKB geometry
   * column becomes text every existing WKT operator consumes. */
-case class StGeomFromWkb(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StGeomFromWkb(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_geom_from_wkb"
-  override protected def nullSafeEval(b: Any): Any =
-    GeoBridge.wkbToWkt(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"${GeoBridge.B}.wkbToWkt($b)")
+  def compute(b: Any): Any = UTF8String.fromString(Wkb.toWkt(b.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_simplify(wkt) with a plan-time tolerance: Douglas–Peucker vertex
   * thinning (closed-ring form, collapse-guarded) — the pre-encode step of
   * a vector-tile pipeline. */
-case class StSimplify(child: Expression, tolerance: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StSimplify(child: Expression, tolerance: Double) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_simplify"
-  override protected def nullSafeEval(w: Any): Any =
-    GeoBridge.simplify(w.toString, tolerance)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.simplify($w.toString(), $tolerance)")
+  def compute(w: Any): Any = UTF8String.fromString(
+    Wkt.format(Simplify.simplify(RqBridge.geomOf(w.toString), tolerance)))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_npoints(wkt): vertex count (ring-closing duplicates not counted). */
-case class StNPoints(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StNPoints(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_npoints"
-  override protected def nullSafeEval(w: Any): Any = GeoBridge.nPoints(w.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.nPoints($w.toString())")
+  def compute(w: Any): Any = Simplify.nPoints(RqBridge.geomOf(w.toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_geom_from_geojson(string) → WKT: the RFC 7946 bridge (accepts bare
   * geometries and single Features). */
-case class StGeomFromGeojson(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StGeomFromGeojson(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_geom_from_geojson"
-  override protected def nullSafeEval(s: Any): Any =
-    GeoBridge.geojsonToWkt(s.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"${GeoBridge.B}.geojsonToWkt($s.toString())")
+  def compute(s: Any): Any = UTF8String.fromString(Wkt.format(GeoJson.parse(s.toString)))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_as_geojson(wkt) → RFC 7946 text (the inverse bridge). */
-case class StAsGeojson(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StAsGeojson(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_as_geojson"
-  override protected def nullSafeEval(s: Any): Any =
-    GeoBridge.wktToGeojson(s.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"${GeoBridge.B}.wktToGeojson($s.toString())")
+  def compute(w: Any): Any = UTF8String.fromString(GeoJson.format(RqBridge.geomOf(w.toString)))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** st_as_wkb(wkt) → canonical little-endian WKB (the inverse bridge). */
-case class StAsWkb(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class StAsWkb(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_as_wkb"
-  override protected def nullSafeEval(w: Any): Any = GeoBridge.wktToWkb(w.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"${GeoBridge.B}.wktToWkb($w.toString())")
+  def compute(w: Any): Any = Wkb.write(RqBridge.geomOf(w.toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-object MmU8 {
-  def sum(b: Array[Byte]): Long = {
-    var s = 0L
-    var i = 0
-    while (i < b.length) { s += b(i) & 0xFF; i += 1 }
-    s
-  }
-
-  def pack(a: org.apache.spark.sql.catalyst.util.ArrayData): Array[Byte] = {
-    val n = a.numElements()
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      val v = a.getInt(i)
-      if (v < 0 || v > 255)
-        throw new IllegalArgumentException(s"mm_u8_pack: value $v at $i outside [0,255]")
-      out(i) = v.toByte
-      i += 1
-    }
-    out
-  }
 }
 
 /** mm_u8_pack(array<int>): values 0..255 → a raw uint8 binary buffer — the
   * in-plan payload builder (inverse view of mm_u8_sum; out-of-range values
   * error rather than truncate). */
-case class MmU8Pack(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmU8Pack(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_u8_pack"
-  override protected def nullSafeEval(raw: Any): Any =
-    MmU8.pack(raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.MmU8.pack($c)")
+  def compute(raw: Any): Any = {
+    val a = raw.asInstanceOf[ArrayData]
+    Array.tabulate(a.numElements()) { i =>
+      val v = a.getInt(i)
+      if (v < 0 || v > 255)
+        throw new IllegalArgumentException(s"mm_u8_pack: value $v at $i outside [0,255]")
+      v.toByte
+    }
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_dhash(pixels) with plan-time (width, height): 64-bit perceptual
   * difference-hash of a gray uint8 buffer — image near-dup detection via
   * hamming-blocked joins (the SimHash machinery, pointed at pixels). */
-case class MmDhash(child: Expression, imgWidth: Int, imgHeight: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmDhash(child: Expression, imgWidth: Int, imgHeight: Int) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_dhash"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.dHash(raw.asInstanceOf[Array[Byte]], imgWidth, imgHeight)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.Multimodal.dHash($c, $imgWidth, $imgHeight)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_exif_orientation(jpeg): EXIF tag 274 from the APP1 segment (1 when
   * absent) — what a real image pipeline must read before pixel math. */
-case class MmExifOrientation(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmExifOrientation(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_exif_orientation"
-  override protected def nullSafeEval(raw: Any): Any =
-    Multimodal.exifOrientation(raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.raquet.Multimodal.exifOrientation($c)")
+  def compute(raw: Any): Any = Multimodal.exifOrientation(raw.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -468,50 +329,47 @@ case class MmExifOrientation(child: Expression)
   * apply an EXIF orientation to a raw uint8 buffer (orientations 5-8 swap
   * the output dims — the caller tracks that, as with mm_resize). */
 case class MmOrient(left: Expression, right: Expression,
-    imgWidth: Int, imgHeight: Int, channels: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    imgWidth: Int, imgHeight: Int, channels: Int) extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_orient"
-  override protected def nullSafeEval(raw: Any, o: Any): Any =
+  def compute(raw: Any, o: Any): Any =
     Multimodal.applyOrientation(raw.asInstanceOf[Array[Byte]], imgWidth,
       imgHeight, channels, o.asInstanceOf[Int])._1
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, o) =>
-      s"(byte[]) graft.raquet.Multimodal.applyOrientation($c, $imgWidth, $imgHeight, $channels, $o)._1()")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** mm_u8_sum(binary): Σ of the payload's unsigned bytes — the cheap
   * content-check / brightness-mass feature for raw uint8 pixel buffers. */
-case class MmU8Sum(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmU8Sum(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_u8_sum"
-  override protected def nullSafeEval(raw: Any): Any =
-    MmU8.sum(raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.MmU8.sum($c)")
+  def compute(raw: Any): Any = {
+    val b = raw.asInstanceOf[Array[Byte]]
+    var s = 0L
+    var i = 0
+    while (i < b.length) { s += b(i) & 0xFF; i += 1 }
+    s
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** mm_webp_anim_info(binary): container-walk an animated WebP → (canvas
   * width/height, frame count, loop count, total duration). No bitstream
   * decode — O(chunks). */
-case class MmWebpAnimInfo(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MmWebpAnimInfo(child: Expression) extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = AnimBridge.infoSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_anim_info"
-  override protected def nullSafeEval(raw: Any): Any =
-    AnimBridge.info(raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${AnimBridge.B}.info($c)")
+  def compute(raw: Any): Any = {
+    val i = WebPAnim.info(raw.asInstanceOf[Array[Byte]])
+    InternalRow(i.width, i.height, i.frameCount, i.loopCount, i.totalDurationMs)
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -520,15 +378,14 @@ case class MmWebpAnimInfo(child: Expression)
   * (idx is a runtime column, so `explode(sequence(...))` samples every Nth
   * frame without decoding the rest). */
 case class MmWebpFramePixels(left: Expression, right: Expression, channels: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_webp_frame"
-  override protected def nullSafeEval(raw: Any, idx: Any): Any =
-    AnimBridge.framePixels(raw.asInstanceOf[Array[Byte]], idx.asInstanceOf[Int], channels)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, i) => s"${AnimBridge.B}.framePixels($c, $i, $channels)")
+  def compute(raw: Any, idx: Any): Any =
+    WebPAnim.decodeFrame(raw.asInstanceOf[Array[Byte]], idx.asInstanceOf[Int])
+      .toInterleaved(channels)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -536,15 +393,12 @@ case class MmWebpFramePixels(left: Expression, right: Expression, channels: Int)
 /** mm_deinterleave(pixels) with plan-time (band, nBands, bytesPerSample):
   * extract one band from a BIP-interleaved payload (F9 inverse). */
 case class MmDeinterleave(child: Expression, band: Int, nBands: Int, bytesPerSample: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryTileKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "mm_deinterleave"
-  override protected def nullSafeEval(raw: Any): Any =
+  def compute(raw: Any): Any =
     Multimodal.deinterleave(raw.asInstanceOf[Array[Byte]], band, nBands, bytesPerSample)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.raquet.Multimodal.deinterleave($c, $band, $nBands, $bytesPerSample)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -4,7 +4,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,8 +19,10 @@ import graft.raquet.{BandKernel, BandPairKernel}
   * once, as `compute` over its children's values, on the
   * [[TileKernelExpression]] template: `eval` calls it, and the template's
   * one `doGenCode` calls it on the expression object bound by reference, so
-  * no constant is written into generated Java. `RqBridge` holds the kernels'
-  * shared row/array conversions and the halo-window kernels. Reference
+  * no constant is written into generated Java. The polyfill,
+  * `st_quadbin_intersects` and `st_contains` expressions here use the same
+  * template. `RqBridge` holds the kernels' shared row/array conversions and
+  * the halo-window kernels. Reference
   * semantics: `docs/engines.md:44-61`, `raquet/raster2raquet.py:525-574`,
   * `format-specs/raquet.md:306-345`.
   */
@@ -711,9 +712,6 @@ object RqBridge {
       g
     }
   }
-
-  def polyfillDyn(wkt: String, z: Int, mode: String): ArrayData =
-    ArrayData.toArrayData(graft.quadbin.Polyfill.cells(geomOf(wkt), z, mode))
 
   def regionStripsOf(k: BandKernel, block: Long,
       valRaw: Array[Byte]): ArrayData =
@@ -1556,18 +1554,15 @@ case class RqClip(band: Expression, block: Expression,
   * [[RqPolyfill]]): cells at `zoom` intersecting each row's geometry. The
   * per-row parse is amortized by [[RqBridge.geomOf]]'s run-cache. */
 case class RqPolyfillDyn(wkt: Expression, zoom: Expression, mode: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends BinaryTileKernel {
   override def left: Expression = wkt
   override def right: Expression = zoom
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_polyfill"
-  override protected def nullSafeEval(w: Any, z: Any): Any =
-    RqBridge.polyfillDyn(w.toString, z.asInstanceOf[Int], mode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, z) =>
-      s"""org.apache.spark.sql.graft.RqBridge.polyfillDyn($w.toString(), $z, "$mode")""")
+  def compute(w: Any, z: Any): Any = ArrayData.toArrayData(
+    graft.quadbin.Polyfill.cells(RqBridge.geomOf(w.toString), z.asInstanceOf[Int], mode))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(wkt = l, zoom = r)
 }
@@ -1618,7 +1613,7 @@ case class RqTemporalFit(series: Expression, kernel: BandKernel) extends UnaryTi
   * per-row WKT parse is amortized by [[RqBridge.geomOf]]'s run-cache —
   * the exact-test stage of a blocked spatial join. */
 case class StContains(wkt: Expression, lon: Expression, lat: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
+    extends TernaryTileKernel {
   override def first: Expression = wkt
   override def second: Expression = lon
   override def third: Expression = lat
@@ -1627,12 +1622,8 @@ case class StContains(wkt: Expression, lon: Expression, lat: Expression)
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_contains"
-  override protected def nullSafeEval(w: Any, x: Any, y: Any): Any =
-    RqBridge.geomOf(w.toString)
-      .containsPoint(x.asInstanceOf[Double], y.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, x, y) =>
-      s"org.apache.spark.sql.graft.RqBridge.geomOf($w.toString()).containsPoint($x, $y)")
+  def compute(w: Any, x: Any, y: Any): Any =
+    RqBridge.geomOf(w.toString).containsPoint(x.asInstanceOf[Double], y.asInstanceOf[Double])
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): Expression = copy(wkt = f, lon = s, lat = t)
 }
@@ -1890,20 +1881,16 @@ case class RqNormalizedDifference(left: Expression, right: Expression,
   * `__RAQUET_REGION_BLOCKS`, `docs/performance.md:118-140`); compose with
   * `explode` for the raster⋈vector join build side. */
 case class RqPolyfill(wkt: String, child: Expression, mode: String)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val geom: Geom = Wkt.parse(wkt)
+    extends UnaryTileKernel {
+  // parsed on the driver and shipped with the plan (see buildPlanTimeState)
+  private lazy val geom: Geom = Wkt.parse(wkt)
+  override protected def buildPlanTimeState(): Unit = geom
   override def inputTypes: Seq[AbstractDataType] = Seq(IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_polyfill"
-  override protected def nullSafeEval(z: Any): Any =
+  def compute(z: Any): Any =
     ArrayData.toArrayData(graft.quadbin.Polyfill.cells(geom, z.asInstanceOf[Int], mode))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    defineCodeGen(ctx, ev, z =>
-      s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          graft.quadbin.Polyfill.cells($g, $z, "$mode"))""")
-  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -1911,18 +1898,14 @@ case class RqPolyfill(wkt: String, child: Expression, mode: String)
   * WGS84 bbox intersect the geometry (P4, `docs/engines.md:47`)? Used as a
   * residual predicate after coarse Morton-range pruning. */
 case class QuadbinIntersects(child: Expression, wkt: String,
-    expanded: Boolean = false)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val geom: Geom = Wkt.parse(wkt)
+    expanded: Boolean = false) extends UnaryTileKernel {
+  // parsed on the driver and shipped with the plan (see buildPlanTimeState)
+  private lazy val geom: Geom = Wkt.parse(wkt)
+  override protected def buildPlanTimeState(): Unit = geom
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_quadbin_intersects"
-  override protected def nullSafeEval(cell: Any): Any =
-    RqBridge.intersectsCell(geom, cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.RqBridge.intersectsCell($g, $c)")
-  }
+  def compute(cell: Any): Any = RqBridge.intersectsCell(geom, cell.asInstanceOf[Long])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 
-/** The one evaluation template of the tile-kernel expressions (the `rq_*`
-  * expressions that hold a [[graft.raquet.BandKernel]] or
-  * [[graft.raquet.BandPairKernel]]). Each states its value once, as
-  * `compute` over its children's values (declared by [[UnaryTileKernel]] …
+/** The one evaluation template of the per-row expressions: the `rq_*` tile
+  * kernels (which hold a [[graft.raquet.BandKernel]] or
+  * [[graft.raquet.BandPairKernel]]) and the image, audio, geometry, CF-time,
+  * tokenizer and IVF expressions. Each states its value once, as `compute`
+  * over its children's values (declared by [[UnaryTileKernel]] …
   * [[QuaternaryTileKernel]]); `eval` and the generated code both call it.
   *
   *  - A null in a required child gives null without calling `compute`; a
@@ -17,14 +18,22 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   *  - The generated code evaluates the children inline, binds this
   *    expression object through `addReferenceObj` and calls its `compute`:
   *    one monomorphic call, with a primitive child value (a `block` long)
-  *    boxed. The kernel, geometry, breaks, levels, op names and every other
-  *    plan-time constant stay fields of the object and never become Java
-  *    text, so every constant value shares one compiled class and a
-  *    non-finite one (`±Infinity`, `NaN`) cannot break the source.
+  *    boxed. The kernel, geometry, breaks, levels, widths, op names and
+  *    every other plan-time constant stay fields of the object and never
+  *    become Java text, so every constant value shares one compiled class
+  *    and a non-finite one (`±Infinity`, `NaN`) cannot break the source.
+  *  - State built from those constants (a parsed geometry, a token rank
+  *    table) lives in non-transient lazy vals that [[buildPlanTimeState]]
+  *    forces before the object is bound, so the driver builds it once and
+  *    it ships built with the plan instead of being rebuilt in every task.
   *
-  * The per-row work of a tile kernel is an inflate plus a pixel loop, so
-  * the call and the box are noise next to it; expressions whose per-row
-  * work is that small stay hand-written.
+  * The call and the box are noise next to a decode, a parse or a pixel
+  * loop. Expressions whose per-row work is one static call on primitives
+  * stay hand-written, where the box would be the main cost: the eight
+  * `quadbin_*` cell functions and `bloom_might_contain`. So do
+  * [[QuadbinInRanges]] and [[ParamLit]], whose generated code is their
+  * point. A spec (`TileKernelSpec`) fails if any other class overrides
+  * `doGenCode`.
   */
 trait TileKernelExpression extends Expression with ImplicitCastInputTypes {
 
@@ -34,6 +43,10 @@ trait TileKernelExpression extends Expression with ImplicitCastInputTypes {
 
   /** `compute` over the children's values, in child order. */
   protected def computeValues(in: Array[Any]): Any
+
+  /** Forces the lazily built plan-time state `compute` reads; called on the
+    * driver before this object is bound into generated code. */
+  protected def buildPlanTimeState(): Unit = ()
 
   override def eval(input: InternalRow): Any = {
     val in = new Array[Any](children.length)
@@ -47,6 +60,7 @@ trait TileKernelExpression extends Expression with ImplicitCastInputTypes {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    buildPlanTimeState()
     val self = ctx.addReferenceObj("kernelExpr", this, getClass.getName)
     val in = children.map(_.genCode(ctx))
     val required = in.indices.filterNot(optionalInputs).map(i => s"!${in(i).isNull}")

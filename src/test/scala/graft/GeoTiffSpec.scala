@@ -888,9 +888,20 @@ class GeoTiffSpec extends SparkSpec {
       assert(r.getSampleDouble(i, j, 0) == ((j * w + 69990 + i) % 251).toDouble)
   }
 
+  /** The JDK TIFF plugin's decode of a whole classic TIFF: the reference
+    * the direct reader is checked against. */
+  private def imageIORaster(tif: String): java.awt.image.Raster = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.File(tif))
+    try {
+      val reader = javax.imageio.ImageIO.getImageReaders(iis).next()
+      reader.setInput(iis)
+      try reader.read(0).getRaster finally reader.dispose()
+    } finally iis.close()
+  }
+
   test("LZW: direct strip decode matches ImageIO on a JDK-written LZW file") {
-    // the JDK TIFF writer produces LZW classic files; the direct reader
-    // (the BigTIFF path) handles classic too — differential-test them
+    // the JDK TIFF writer produces LZW classic files: differential-test
+    // the direct reader against the JDK plugin's own decode
     val w = 200; val h = 90
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
@@ -906,7 +917,7 @@ class GeoTiffSpec extends SparkSpec {
     writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
     writer.dispose(); ios.close()
     // confirm the file really is LZW (tag 259 = 5)
-    val info = GeoTiff.readWindowRaster(tif, 0, 0, w, h) // ImageIO reference
+    val info = imageIORaster(tif) // the JDK plugin's decode
     val direct = GeoTiff.readWindowDirect(tif, 0, 0, w, h)
     for (j <- 0 until h; i <- 0 until w; b <- 0 until 3)
       assert(direct.getSampleDouble(i, j, b) == info.getSampleDouble(i, j, b),
@@ -1032,7 +1043,7 @@ class GeoTiffSpec extends SparkSpec {
     param.setTiling(32, 32, 0, 0)
     writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
     writer.dispose(); ios.close()
-    val ref = GeoTiff.readWindowRaster(tif, 0, 0, w, h) // ImageIO reference
+    val ref = imageIORaster(tif) // the JDK plugin's decode
     val direct = GeoTiff.readWindowDirect(tif, 0, 0, w, h)
     for (j <- 0 until h; i <- 0 until w; b <- 0 until 3)
       assert(direct.getSampleDouble(i, j, b) == ref.getSampleDouble(i, j, b),

@@ -132,6 +132,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(RaquetIO.read(spark, dir).meta.numBlocks == ds.meta.numBlocks + 1)
   }
 
+  test("upsert keeps the data rows of an untouched file that also holds the metadata row") {
+    import graft.quadbin.Quadbin
+    // the reference writer's layout: one file, data rows then the metadata row
+    val dir = tmpDir() + "/single"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixture),
+      java.nio.file.Paths.get(dir, "gradient16.parquet"))
+    def tiles(path: String) = spark.read.parquet(path).filter(col("block") =!= 0L)
+      .select(col("block"), col("band_1")).collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    val before = tiles(fixture)
+    assert(before.size == 85)
+    // a native tile past the file's block range, so no range touches the file
+    val cNew = Quadbin.tileToCell(60, 60, 6)
+    assert(cNew > before.keys.max)
+    val rep = Maintenance.upsert(spark, dir, spark.read.parquet(fixture)
+      .filter(col("block") === Quadbin.tileToCell(39, 31, 6)).withColumn("block", lit(cNew)))
+    assert(rep.rowsInserted == 1, rep.toString)
+    val after = tiles(dir)
+    assert(after.size == 86 && after - cNew == before)
+    assert(spark.read.parquet(dir).filter(col("block") === 0L).count() == 1)
+    assert(RaquetIO.readMetadata(spark, dir).numBlocks == 65)
+  }
+
   test("upsert replaces the metadata row of a table whose footers carry no block statistics") {
     import graft.quadbin.Quadbin
     val dir = tmpDir() + "/nostats"

@@ -577,6 +577,20 @@ class RaquetIOSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("the metadata row is written first in path order, under one name, on every write") {
+    val ds = RaquetIO.read(spark, fixture)
+    for (i <- 1 to 5) {
+      val dir = tmpDir() + s"/w$i"
+      RaquetIO.write(ds.data, ds.meta, dir, maxRecordsPerFile = 16)
+      val files = new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted
+      assert(files.length > 2 && files.head == "part-0-metadata.parquet", files.mkString(","))
+      val first = spark.read.parquet(s"$dir/${files.head}")
+      assert(first.count() == 1 && first.filter(col("block") === 0L).count() == 1)
+      assert(files.tail.forall(f =>
+        spark.read.parquet(s"$dir/$f").filter(col("block") === 0L).isEmpty), files.mkString(","))
+    }
+  }
+
   test("quadbin_in_ranges equals the BETWEEN-OR chain on random spans") {
     import graft.functions.GraftFunctions.quadbin_in_ranges
     val rnd = new scala.util.Random(83)

@@ -6,9 +6,8 @@ import graft.raquet.GeoTiff
 
 /** Direct-reader breadth for real-world TIFF layouts: PackBits compression
   * (32773) and band-separate planar configuration 2 — differential against
-  * the in-memory pixel source, windowed at awkward offsets, on BigTIFF
-  * (the layout class the JDK plugin cannot open, so the direct reader
-  * OWNS these files — no fallback hides a regression). */
+  * the in-memory pixel source, windowed at awkward offsets. The direct
+  * reader is the only window decoder, for classic TIFF and BigTIFF. */
 class TiffLayoutSpec extends AnyFunSuite {
 
   private def tmpDir() =
@@ -119,20 +118,24 @@ class TiffLayoutSpec extends AnyFunSuite {
     val (w, h, nb) = (150, 120, 2)
     val bands = makeFloatBands(w, h, nb)
     val dir = tmpDir()
-    for (dtype <- Seq("float32", "float64"); planar <- Seq(1, 2)) {
-      val plain = s"$dir/${dtype}_p1_$planar.tif"
-      val pred = s"$dir/${dtype}_p3_$planar.tif"
+    for (dtype <- Seq("float32", "float64"); planar <- Seq(1, 2); big <- Seq(true, false)) {
+      val plain = s"$dir/${dtype}_p1_${planar}_$big.tif"
+      val pred = s"$dir/${dtype}_p3_${planar}_$big.tif"
       graft.raquet.TiffWriter.writeTiled(plain, w, h, dtype, bands, 1.0, 0.0,
         h.toDouble, nodata = None, tileW = 64, tileL = 64, compression = 8,
-        forceBig = true, planar = planar)
+        forceBig = big, planar = planar)
       graft.raquet.TiffWriter.writeTiled(pred, w, h, dtype, bands, 1.0, 0.0,
         h.toDouble, nodata = None, tileW = 64, tileL = 64, compression = 8,
-        forceBig = true, planar = planar, predictor = 3)
-      val a = GeoTiff.readWindowDirect(plain, 13, 11, 120, 100)
-      val b = GeoTiff.readWindowDirect(pred, 13, 11, 120, 100)
-      for (j <- 0 until 100; i <- 0 until 120; bd <- 0 until nb)
+        forceBig = big, planar = planar, predictor = 3)
+      val a = GeoTiff.readWindowRaster(plain, 13, 11, 120, 100)
+      val b = GeoTiff.readWindowRaster(pred, 13, 11, 120, 100)
+      for (j <- 0 until 100; i <- 0 until 120; bd <- 0 until nb) {
+        val src = bands(bd)((11 + j) * w + 13 + i)
+        assert(a.getSampleDouble(i, j, bd) == (if (dtype == "float32") src.toFloat.toDouble
+          else src), s"$dtype planar $planar BigTIFF $big pixel ($i,$j) band $bd vs source")
         assert(a.getSampleDouble(i, j, bd) == b.getSampleDouble(i, j, bd),
-          s"$dtype planar $planar pixel ($i,$j) band $bd")
+          s"$dtype planar $planar BigTIFF $big pixel ($i,$j) band $bd")
+      }
     }
   }
 
